@@ -1,18 +1,13 @@
 """Benchmark harness — prints ONE JSON line.
 
-Three sections:
+Sections:
 1. headline analytics queries (queries.py registry subset) at
    $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
    local[$SPARK_GRAFT_CPUS]
 2. crawl-engine throughput over the deterministic bench corpus
-   (sources/benchgen.py, cached under /tmp) — frontier URLs processed/sec
-3. near-dup election paths over a dup-dense corpus at simhash_bits=64:
-   numpy fast path vs banded LSH + driver greedy vs banded + distributed
-   pointer-jumping election — one wall/throughput number per path plus a
-   recorded TOO_SIMILAR equality check (VERDICT r2 #3)
-4. seen-filter probe cost: the main crawl uses bloom; this re-runs it
-   with seen_filter='cuckoo' on the same corpus
-5. scaling-efficiency evidence for the north rule: the SAME job (the
+   (sources/benchgen.py, cached under /tmp) — frontier URLs processed/sec,
+   plus the same default crawl over the ~96k-URL large corpus
+3. scaling-efficiency evidence for the north rule: the SAME job (the
    crawl's per-wave inner computation: fetch-join + parse + tokenize +
    simhash + LSH self-join + aggregate) over the SAME input, run at
    local[N_LO] and local[N_HI]; efficiency = (thr_hi/thr_lo)/(hi/lo).
@@ -48,10 +43,6 @@ BENCH_CORPUS = os.environ.get("SPARK_GRAFT_BENCH_CORPUS", "/tmp/stc4_bench_corpu
 # efficiency); the LSH near-pair join is excluded here — a 32-bit simhash
 # saturates combinatorially above ~30k random docs (see BASELINE.md)
 SCALE_CORPUS = os.environ.get("SPARK_GRAFT_SCALE_CORPUS", "/tmp/stc4_scale_corpus_v3")
-# near-dup-dense corpus (dup_frac=0.3): benches the banded LSH plan and the
-# distributed dup-master election — the paths a mega wave takes when the
-# driver-vectorized fast path is capped out (VERDICT r2 'What's wrong' #3)
-DENSE_CORPUS = os.environ.get("SPARK_GRAFT_DENSE_CORPUS", "/tmp/stc4_dense_corpus_v1")
 # large crawl corpus (~96k URLs): waves are ~30x the standard corpus, so
 # per-wave serial overhead (election rounds, sketch builds, checkpoint
 # barriers — constant per wave) amortizes; this is the number that trends
@@ -146,10 +137,6 @@ def _ensure_corpus() -> None:
     if not os.path.exists(os.path.join(SCALE_CORPUS, "pages.parquet")):
         write_bench_corpus(
             SCALE_CORPUS, n_domains=8, fanout=25, leaves=650, words_per_page=600
-        )
-    if not os.path.exists(os.path.join(DENSE_CORPUS, "pages.parquet")):
-        write_bench_corpus(
-            DENSE_CORPUS, n_domains=4, fanout=10, leaves=100, dup_frac=0.3
         )
     if not os.path.exists(os.path.join(LARGE_CORPUS, "pages.parquet")):
         write_bench_corpus(LARGE_CORPUS, n_domains=8, fanout=25, leaves=480)
@@ -268,10 +255,8 @@ def _crawl_once(spark, corpus: str, cfg_kwargs: dict) -> tuple[dict, object]:
     import pyarrow.parquet as pq
 
     from spacetime_crawler4_spark.crawl.engine import CrawlEngine
-    from spacetime_crawler4_spark.crawl.schema import FINISH, CrawlConfig
+    from spacetime_crawler4_spark.crawl.schema import CrawlConfig
     from spacetime_crawler4_spark.sources.benchgen import BENCH_WHITELIST
-
-    from pyspark.sql import functions as F
 
     seeds = [
         r["url"]
@@ -288,72 +273,13 @@ def _crawl_once(spark, corpus: str, cfg_kwargs: dict) -> tuple[dict, object]:
         CrawlConfig(whitelist=BENCH_WHITELIST, **cfg_kwargs),
     )
     t0 = time.time()
-    frontier = eng.run()
-    tallies = frontier.agg(
-        F.count("*").alias("n"),
-        F.sum((F.col("finish") == FINISH.TOO_SIMILAR).cast("long")).alias("sim"),
-    ).collect()[0]
+    n = eng.run().count()
     wall = time.time() - t0
     return {
-        "frontier_urls": tallies["n"],
-        "too_similar": int(tallies["sim"]),
+        "frontier_urls": n,
         "wall_s": round(wall, 2),
-        "urls_per_sec": round(tallies["n"] / wall, 1),
+        "urls_per_sec": round(n / wall, 1),
     }, eng
-
-
-def run_neardup_paths(spark) -> dict:
-    """The three equivalent simhash election paths over the SAME dense
-    corpus at the production 64-bit plane: (a) driver-vectorized numpy
-    scan (default caps), (b) banded LSH self-join + driver greedy
-    (simhash_numpy_cap=0), (c) banded + fully distributed pointer-jumping
-    election (simhash_driver_cap=0 too). All three must agree on the
-    TOO_SIMILAR count — asserted here, so the bench doubles as an
-    end-to-end equality check on a corpus none of the unit fixtures use."""
-    out = {}
-    stats, engs = {}, {}
-    for name, kwargs in (
-        ("numpy_fast_path", {"simhash_bits": 64}),
-        ("banded_driver_greedy", {"simhash_bits": 64, "simhash_numpy_cap": 0}),
-        (
-            "banded_distributed_election",
-            {"simhash_bits": 64, "simhash_numpy_cap": 0, "simhash_driver_cap": 0},
-        ),
-    ):
-        stats[name], engs[name] = _crawl_once(spark, DENSE_CORPUS, kwargs)
-        out[name] = stats[name]
-    out["banded_distributed_election"]["election_stats"] = dict(
-        engs["banded_distributed_election"].election_stats
-    )
-    sims = {s["too_similar"] for s in stats.values()}
-    # recorded, not asserted: a disagreement must show up in the artifact,
-    # not kill it (the unit suite asserts 3-path equality separately)
-    out["paths_agree"] = len(sims) == 1
-    out["paths_agree_too_similar"] = sorted(sims)[0] if len(sims) == 1 else sorted(sims)
-    return out
-
-
-def run_seen_filters(spark) -> dict:
-    """Seen-set probe cost, all three modes on the full bench corpus.
-
-    ROUND-4 CORRECTION: earlier rounds passed seen_filter='cuckoo'
-    WITHOUT setting seen_bloom_fpp, and the engine's sketch prefilter
-    only engages when fpp is set — so the recorded 'cuckoo' numbers in
-    BENCH_r2/r3 were plain anti-join runs and their spread (36-86 s on
-    one corpus) was pure host noise, not filter cost. This section now
-    sets fpp=0.01 so bloom and cuckoo actually build+probe, alongside
-    the plain anti-join default the main crawl section uses."""
-    out = {}
-    for name, kwargs in (
-        # bloom (fpp=0.01) is the engine default, measured by run_crawl;
-        # this section prices the alternatives on the same corpus
-        ("anti_join", {"seen_bloom_fpp": None}),
-        ("cuckoo", {"seen_bloom_fpp": 0.01, "seen_filter": "cuckoo"}),
-    ):
-        stats, _ = _crawl_once(spark, BENCH_CORPUS, kwargs)
-        stats.pop("too_similar", None)
-        out[name] = stats
-    return out
 
 
 def run_crawl_large(spark) -> dict:
@@ -363,7 +289,6 @@ def run_crawl_large(spark) -> dict:
     throughput approaches the parallel text-plane bound — the direction
     a 10^10 frontier moves in."""
     stats, _ = _crawl_once(spark, LARGE_CORPUS, {})
-    stats.pop("too_similar", None)
     return stats
 
 
@@ -608,8 +533,6 @@ def main() -> None:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
         crawl = run_crawl(spark)
         crawl_large = run_crawl_large(spark)
-        near_dup = run_neardup_paths(spark)
-        seen = run_seen_filters(spark)
     finally:
         _stop(spark)
 
@@ -626,8 +549,6 @@ def main() -> None:
         "sf": sf,
         "crawl": crawl,
         "crawl_large": crawl_large,
-        "near_dup": near_dup,
-        "seen_filter": seen,
         "scaling": scaling,
     }
     print(json.dumps(result))

@@ -13,9 +13,9 @@ Scale design decisions (SURVEY.md §4):
 - fetch is an equi-join of the wave against the pages table (the corpus IS
   the web in this graft); Catalyst/AQE pick the join strategy, skew-join
   splitting enabled for mega-host waves
-- the URL-seen probe is a left_anti join on urlhash; runtime bloom filters
-  (spark.sql.optimizer.runtime.bloomFilter.enabled) prune the big side —
-  the broadcast-bloom/cuckoo upgrade path of the north rule
+- the URL-seen probe is a left_anti join on urlhash behind ONE prefilter:
+  an incrementally maintained broadcast bloom over xxhash64(urlhash)
+  (functions/bloom.py), the north rule's broadcast-bloom seen set
 - politeness is a *scheduling constraint, not a sleep*: per-wave per-domain
   budget = wave_seconds / crawl_delay enforced with a rank window
   partitioned by domain (reference's global+domain polite mutexes,
@@ -24,13 +24,15 @@ Scale design decisions (SURVEY.md §4):
   reference's single-threaded FIFO (schema.py docstring)
 - per-wave driver state is O(bounded): the near-dup pass runs the
   vectorized FIFO popcount scan over the wave's HASHES when wave and
-  master index fit under simhash_numpy_cap (the 32-bit parity fingerprint
+  master index fit under SIMHASH_NUMPY_CAP (the 32-bit parity fingerprint
   saturates banded LSH buckets — _simhash_stage_vectorized), else the
-  banded join with a cap-gated driver/distributed election; everything
-  else stays distributed
-- frontier updates are copy-on-write unions per wave with localCheckpoint
-  lineage truncation; store commits are O(touched-rows) DELTAS with
-  periodic compaction and merge-on-read load (Iceberg MOR, store.py)
+  banded join with the distributed election (distributed_election);
+  everything else stays distributed
+- frontier and state-table updates are copy-on-write unions per wave with
+  localCheckpoint lineage truncation; every cached or superseded frame is
+  released at one point, one wave later (_hold / _release_before); store
+  commits are O(touched-rows) DELTAS, one per wave, with periodic
+  compaction and merge-on-read load (Iceberg MOR, store.py)
 """
 
 from __future__ import annotations
@@ -49,7 +51,7 @@ from spacetime_crawler4_spark.crawl.schema import (
     STATUS,
     CrawlConfig,
 )
-from spacetime_crawler4_spark.crawl.store import SnapshotStore
+from spacetime_crawler4_spark.crawl.store import APPEND_TABLES, SnapshotStore
 from spacetime_crawler4_spark.crawl.udfs import (
     make_can_fetch_udf,
     make_link_meta_udf,
@@ -66,6 +68,19 @@ _EMPTY_WORDS = "cast(map() as map<string,int>)"
 _EMPTY_LINKS = "cast(array() as array<string>)"
 
 _FCOLS = [f.name for f in FRONTIER_SCHEMA.fields]
+# incremental seen-bloom headroom: the filter is sized for this factor x
+# the frontier at build time, then each wave's inserts OR-merge in as a
+# delta bloom (O(inserts), not O(frontier)); a full rebuild happens only
+# when the frontier outgrows the sized capacity — ~log_factor(growth)
+# rebuilds over a whole crawl. fpp holds at all times because the filter
+# never holds more keys than it was sized for.
+SEEN_BLOOM_CAPACITY_FACTOR = 4
+# vectorized simhash scan: when BOTH the wave and the master index fit
+# under this many rows, the near-dup pass replays the reference's
+# sequential FIFO scan with blocked numpy popcount on the driver (hashes
+# only — 12 B/row) instead of the banded join, which saturates
+# combinatorially on 32-bit fingerprints. Read at call time.
+SIMHASH_NUMPY_CAP = 200_000
 
 
 def _seq_child(seq_col, tag: str, ord_col):
@@ -87,6 +102,39 @@ def _popcount16_lut():
     return _POPCOUNT16
 
 
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD under a localCheckpoint frame, else None."""
+    plan = df._jdf.queryExecution().logical()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+
+
+def _release(df: DataFrame) -> None:
+    """Free a frame's blocks: its cache entry and, for a localCheckpoint,
+    the checkpointed RDD under it (DataFrame.unpersist alone leaves those
+    in the block manager)."""
+    df.unpersist()
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
+
+
+def _materialize(frames: list[DataFrame]) -> None:
+    """Fill the lazy localCheckpoints among ``frames`` that no job has
+    filled yet, in ONE job (a job checkpoints every marked RDD its lineage
+    reaches); after that their lineage no longer reads their inputs."""
+    todo = [
+        df
+        for df in frames
+        if (rdd := _checkpoint_rdd(df)) is not None and not rdd.isCheckpointed()
+    ]
+    if not todo:
+        return
+    probe = todo[0].select(F.lit(0).alias("_"))
+    for df in todo[1:]:
+        probe = probe.unionByName(df.select(F.lit(0).alias("_")))
+    probe.write.format("noop").mode("overwrite").save()
+
+
 def _bands(hash_col, threshold: int = SIMHASH_THRESHOLD, bits: int = SIMHASH_BITS):
     nbands = threshold + 1
     width = (bits + nbands - 1) // nbands
@@ -103,6 +151,156 @@ def _bands(hash_col, threshold: int = SIMHASH_THRESHOLD, bits: int = SIMHASH_BIT
             ]
         )
     )
+
+
+def distributed_election(
+    spark: SparkSession, pairs: DataFrame
+) -> tuple[DataFrame, list[DataFrame], dict[str, int]]:
+    """Greedy FIFO master election over the within-wave near-dup pair
+    graph, evaluated distributed — no driver-side materialization.
+
+    Semantics (identical to the sequential greedy, reference
+    workerpipe.py:257-277): processing nodes in (gen, seq) order, a
+    node is a DUP iff some earlier neighbor is a master, else it
+    becomes a master. The greedy label depends only on earlier
+    neighbors' labels (the pair edges form a DAG in (gen, seq) order),
+    so a round-based fixpoint computes the same unique labeling.
+
+    Each OUTER round over the undecided subgraph:
+    1. a node with an in-edge from a MASTER is a dup — final, masters
+       never relabel;
+    2. recompute in-degree over the remaining undecided graph: indeg-0
+       nodes have only dup (or no) earlier neighbors -> MASTER;
+    3. indeg-1 nodes form an in-forest (each waits on exactly ONE
+       undecided earlier neighbor; pointers strictly decrease (gen,
+       seq), so no cycles). Along such a wait chain labels strictly
+       ALTERNATE from the terminal: ptr(v)=master => v dup;
+       ptr(v)=dup => v's earlier neighbors are all dups (indeg 1
+       guarantees no other undecided one, step 1 ruled out masters)
+       => v master. POINTER-DOUBLING finds every node's terminal and
+       distance parity in O(log chain) self-joins, so a k-node chain
+       resolves in ONE outer round — the round-2 formulation decided
+       one chain node per round (O(k) Spark jobs on an adversarial
+       hamming-gradient family; VERDICT r2 'What's wrong' #2);
+    4. indeg>=2 nodes stay blocked this round (their undecided earlier
+       neighbors may branch); the next round re-derives.
+
+    Progress: the globally-minimum undecided node always has indeg 0,
+    so every outer round decides >= 1 node; dense families collapse in
+    ~2 rounds, chains in 1. Driver state: a few counts per round.
+
+    ``pairs`` has columns (ha, ga, sa, hx, gx, sx): an edge from the
+    earlier page a to the later page x. Returns (dups, frames, stats):
+    a one-column (urlhash) DF of dups; every eager checkpoint the
+    election created (the returned dups among them), for the caller to
+    release once the dups are consumed; and the round counters
+    ``{"outer_rounds", "doubling_steps"}``.
+    """
+    chain: list[DataFrame] = []
+    edges = pairs.select(
+        F.col("ha").alias("src"), F.col("hx").alias("dst")
+    ).localCheckpoint(eager=True)
+    und = (
+        pairs.select(F.col("ha").alias("urlhash"))
+        .unionByName(pairs.select(F.col("hx").alias("urlhash")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    chain += [edges, und]
+    masters = spark.createDataFrame([], "urlhash string")
+    dups = spark.createDataFrame([], "urlhash string")
+    stats = {"outer_rounds": 0, "doubling_steps": 0}
+    n_und = und.count()
+    while n_und > 0:
+        stats["outer_rounds"] += 1
+        # 1. final dups: an earlier MASTER neighbor decides immediately
+        dup_now = (
+            edges.join(masters, edges.src == masters.urlhash, "left_semi")
+            .select(F.col("dst").alias("urlhash"))
+            .distinct()
+            .join(und, "urlhash", "left_semi")
+        )
+        und2 = und.join(dup_now, "urlhash", "left_anti").localCheckpoint(
+            eager=True
+        )
+        chain.append(und2)
+        # 2. in-degree over the undecided-only subgraph
+        live = (
+            edges.join(und2, edges.src == und2.urlhash, "left_semi")
+            .join(und2, edges.dst == und2.urlhash, "left_semi")
+            .localCheckpoint(eager=True)
+        )
+        chain.append(live)
+        indeg = live.groupBy("dst").agg(F.count("*").alias("deg"))
+        roots = und2.join(
+            indeg, und2.urlhash == indeg.dst, "left_anti"
+        ).localCheckpoint(eager=True)
+        chain.append(roots)
+        # 3. wait-chain forest: indeg-1 nodes point at their single
+        # undecided earlier neighbor
+        ptr = (
+            live.join(
+                indeg.filter(F.col("deg") == 1).select("dst"), "dst", "left_semi"
+            )
+            .select(F.col("dst").alias("v"), F.col("src").alias("t"))
+            .localCheckpoint(eager=True)
+        )
+        chain.append(ptr)
+        # pointer doubling: follow t through ptr until it leaves the
+        # forest (terminal = root / blocked / dup_now node). d = path
+        # length; each step at most doubles it.
+        P = ptr.select("v", "t", F.lit(1).alias("d"))
+        while True:
+            stats["doubling_steps"] += 1
+            # true doubling: advance v's pointer by its TARGET's whole
+            # known path — P' = P ∘ P, so path length covered doubles
+            # each step (1, 2, 4, ...)
+            p2 = P.select(
+                F.col("v").alias("t2"),
+                F.col("t").alias("tt"),
+                F.col("d").alias("dd"),
+            )
+            P = (
+                P.join(p2, P.t == F.col("t2"), "left")
+                .select(
+                    "v",
+                    F.coalesce("tt", "t").alias("t"),
+                    (F.col("d") + F.coalesce("dd", F.lit(0))).alias("d"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            chain.append(P)
+            # done when every pointer rests on a terminal (a node with
+            # no outgoing ptr — not in the forest's key set)
+            if (
+                P.join(ptr.select(F.col("v").alias("k")), P.t == F.col("k"), "left_semi")
+                .limit(1)
+                .count()
+                == 0
+            ):
+                break
+        # chains whose terminal became a MASTER this round resolve by
+        # parity; terminals still blocked leave their chain undecided
+        reached = P.join(roots, P.t == roots.urlhash, "left_semi")
+        chain_m = reached.filter(F.col("d") % 2 == 0).select("v")
+        chain_d = reached.filter(F.col("d") % 2 == 1).select("v")
+        new_masters = roots.select("urlhash").unionByName(
+            chain_m.select(F.col("v").alias("urlhash"))
+        )
+        new_dups = dup_now.select("urlhash").unionByName(
+            chain_d.select(F.col("v").alias("urlhash"))
+        )
+        masters = masters.unionByName(new_masters).localCheckpoint(eager=True)
+        dups = dups.unionByName(new_dups).localCheckpoint(eager=True)
+        und = (
+            und2.join(new_masters, "urlhash", "left_anti")
+            .join(new_dups, "urlhash", "left_anti")
+            .localCheckpoint(eager=True)
+        )
+        chain += [masters, dups, und]
+        prev, n_und = n_und, und.count()
+        assert n_und < prev, "simhash election made no progress"
+    return dups, chain, stats
 
 
 class CrawlEngine:
@@ -150,9 +348,9 @@ class CrawlEngine:
         self.can_fetch_udf = make_can_fetch_udf(self.cfg.user_agent)
         self.metrics: list[dict] = []
         self.wave_no = 0
-        # per-wave state deltas accumulated since the last store commit
-        # (frontier upserts + append-table rows) — O(delta) commit I/O
-        self._pending: list[dict[str, DataFrame]] = []
+        # this wave's append-table rows (domains / exact_buckets /
+        # sim_index), the O(delta) payload of the wave's store commit
+        self._delta: dict[str, DataFrame] = {}
         # cross-wave state keeps a bounded, stable partitioning: unioning
         # per-wave deltas would otherwise grow the partition count (and the
         # task count of every downstream join) without bound
@@ -165,12 +363,12 @@ class CrawlEngine:
         self.sim_index: DataFrame | None = None
         # driver-side master-hash mirror for the vectorized simhash fast
         # path: row count (None = unknown -> distributed plan) + the
-        # hashes themselves (lazy; bounded by cfg.simhash_numpy_cap)
+        # hashes themselves (lazy; bounded by SIMHASH_NUMPY_CAP)
         self._sim_index_rows: int | None = 0
         self._sim_hashes = None
         self._wave_n: int | None = None
-        # round/doubling counters of the last _distributed_election run
-        # (adversarial-chain test + bench introspection)
+        # round/doubling counters of the last distributed_election run
+        # (tests + bench introspection)
         self.election_stats: dict[str, int] = {"outer_rounds": 0, "doubling_steps": 0}
         # incremental seen-set bloom: {"blob", "capacity", "covered"} —
         # valid only while covered == _frontier_rows (any path that grows
@@ -179,10 +377,9 @@ class CrawlEngine:
         self._seen_sketch: dict | None = None
         # build/merge counters (tests + bench introspection)
         self.sketch_stats: dict[str, int] = {"full_builds": 0, "delta_merges": 0}
-        # superseded eager checkpoints whose release must wait for the
-        # store's lazily-written _pending delta frames (see _retire);
-        # entries are (wave_no at retirement, frame)
-        self._retire_after_commit: list[tuple[int, DataFrame]] = []
+        # the frame ledger: (wave_no at registration, frame) for every
+        # cached frame and every superseded checkpoint (see _hold)
+        self._frames: list[tuple[int, DataFrame]] = []
 
     # ------------------------------------------------------------- state
     def init_state(self, resume: bool = False) -> None:
@@ -407,7 +604,6 @@ class CrawlEngine:
         """Process one wave; returns (updated_rows, insert_rows, counters)."""
         cfg = self.cfg
         updated: list[DataFrame] = []
-        self._wave_caches: list[DataFrame] = []
 
         # ---- F7 sift (workerpipe.py:42-57): finish=SIFTED, stays NO_DOWN
         sift_cond = (
@@ -437,7 +633,7 @@ class CrawlEngine:
                 F.col("r.sitemap_urls").alias("sitemap_urls"),
             )
         ).cache()
-        self._wave_caches.append(parsed_doms)
+        self._hold(parsed_doms)
         dom_append = parsed_doms.select(
             "domain",
             "disallow_all",
@@ -446,10 +642,7 @@ class CrawlEngine:
             F.col("body").alias("rules_body"),
             "sitemap_urls",
         )
-        self._delta_domains = dom_append
-        self.domains = (
-            self.domains.unionByName(dom_append)
-        ).coalesce(self._nparts).localCheckpoint(eager=False)
+        self._append("domains", dom_append)
 
         # ---- S4 sitemap seeding (frontier.py:165-176): fresh nurls at
         # absdepth=1, parent = unhashed robots url, ordered before the
@@ -491,7 +684,7 @@ class CrawlEngine:
                 F.col("url"), F.col("rules_body"), F.col("disallow_all"), F.col("allow_all")
             ),
         ).cache()
-        self._wave_caches.append(gated)
+        self._hold(gated)
         updated.append(
             self._finalize(
                 gated.filter(~F.col("_allowed")),
@@ -544,7 +737,7 @@ class CrawlEngine:
             .otherwise("content")
         )
         proc = proc.withColumn("_k", klass).cache()
-        self._wave_caches.append(proc)
+        self._hold(proc)
 
         updated.append(
             self._finalize(
@@ -641,18 +834,16 @@ class CrawlEngine:
             )
         )
         masters = fresh_ex.filter(F.col("_rk") == 1).drop("_rk", "_exmaster")
-        ex_append = masters.select("exhash", F.col("urlhash").alias("master"))
-        self._delta_exact = ex_append
-        self.exact_buckets = self.exact_buckets.unionByName(
-            ex_append
-        ).coalesce(self._nparts).localCheckpoint(eager=False)
+        self._append(
+            "exact_buckets", masters.select("exhash", F.col("urlhash").alias("master"))
+        )
 
         # ---- T1/T2 parse + T3-T5 tokenize + F12 low-info + C4 simhash,
         # fused into one Arrow round trip (crawl_features_udf)
         pp = masters.withColumn(
             "feat", self.features_udf(F.col("url"), F.col("html"), F.col("content_type"))
         ).cache()
-        self._wave_caches.append(pp)
+        self._hold(pp)
         sm_rows = pp.filter(F.col("feat.sitemap"))
         non_sm = pp.filter(~F.col("feat.sitemap"))
         lowpost_cond = (
@@ -672,7 +863,7 @@ class CrawlEngine:
 
         # ---- J5 near-dup: LSH vs master index, then within-wave chaining
         sim_dup_hashes = self._simhash_stage(good).cache()
-        self._wave_caches.append(sim_dup_hashes)
+        self._hold(sim_dup_hashes)
         sim_dups = good.join(sim_dup_hashes, "urlhash", "left_semi")
         updated.append(
             self._finalize(
@@ -736,7 +927,7 @@ class CrawlEngine:
             "_ord",
             F.row_number().over(Window.partitionBy("p_hash").orderBy("pos")) - 1,
         ).cache()
-        self._wave_caches.append(valid)
+        self._hold(valid)
         ddelta = F.col("m.ddelta")
         children = valid.select(
             F.col("m.urlhash").alias("urlhash"),
@@ -814,11 +1005,7 @@ class CrawlEngine:
         frontier outgrows the sized capacity the sketch is dropped instead
         — the next wave does one full rebuild at factor x the new size."""
         st = self._seen_sketch
-        if (
-            st is None
-            or self.cfg.seen_bloom_fpp is None
-            or self.cfg.seen_filter == "cuckoo"
-        ):
+        if st is None or self.cfg.seen_bloom_fpp is None:
             return
         if n_new == 0:
             st["covered"] = self._frontier_rows  # nothing new; still valid
@@ -864,55 +1051,35 @@ class CrawlEngine:
         seen = self.frontier.select("urlhash")
         if self.cfg.seen_bloom_fpp is None:
             return candidates.join(seen, "urlhash", "left_anti")
-        if self.cfg.seen_filter == "cuckoo":
-            # the north rule's upgrade path: sharded cuckoo filter —
-            # distributed per-shard build, deletion-capable, same
-            # no-false-negative contract (functions/cuckoo.py)
-            from spacetime_crawler4_spark.functions.cuckoo import (
-                build_cuckoo_partitioned,
-                cuckoo_might_contain_udf,
-            )
+        from spacetime_crawler4_spark.functions.bloom import (
+            build_bloom,
+            might_contain_udf,
+        )
 
-            shards = build_cuckoo_partitioned(
+        # incremental build (SEEN_BLOOM_CAPACITY_FACTOR): a full
+        # O(frontier) scan only when no valid sketch covers the current
+        # frontier; between rebuilds each wave ORs in an O(inserts) delta
+        # (run() loop) — at a 10^10-row frontier this is the difference
+        # between re-scanning the frontier every wave and touching only
+        # the new rows.
+        st = self._seen_sketch
+        if st is None or st["covered"] != self._frontier_rows:
+            capacity = max(self._frontier_rows * SEEN_BLOOM_CAPACITY_FACTOR, 1024)
+            blob = build_bloom(
                 self.frontier.select(F.xxhash64(F.col("urlhash")).alias("k")),
                 "k",
-                expected=max(self._frontier_rows, 1024),
+                expected=capacity,
+                fpp=self.cfg.seen_bloom_fpp,
             )
-            probe = cuckoo_might_contain_udf(shards)(F.xxhash64(F.col("urlhash")))
-        else:
-            from spacetime_crawler4_spark.functions.bloom import (
-                build_bloom,
-                might_contain_udf,
-            )
-
-            # incremental build (schema.seen_bloom_capacity_factor): a full
-            # O(frontier) scan only when no valid sketch covers the current
-            # frontier; between rebuilds each wave ORs in an O(inserts)
-            # delta (run() loop) — at a 10^10-row frontier this is the
-            # difference between re-scanning the frontier every wave and
-            # touching only the new rows.
-            st = self._seen_sketch
-            if st is None or st["covered"] != self._frontier_rows:
-                capacity = max(
-                    self._frontier_rows
-                    * max(self.cfg.seen_bloom_capacity_factor, 1),
-                    1024,
-                )
-                blob = build_bloom(
-                    self.frontier.select(F.xxhash64(F.col("urlhash")).alias("k")),
-                    "k",
-                    expected=capacity,
-                    fpp=self.cfg.seen_bloom_fpp,
-                )
-                self._seen_sketch = st = {
-                    "blob": blob,
-                    "capacity": capacity,
-                    "covered": self._frontier_rows,
-                }
-                self.sketch_stats["full_builds"] += 1
-            probe = might_contain_udf(st["blob"])(F.xxhash64(F.col("urlhash")))
+            self._seen_sketch = st = {
+                "blob": blob,
+                "capacity": capacity,
+                "covered": self._frontier_rows,
+            }
+            self.sketch_stats["full_builds"] += 1
+        probe = might_contain_udf(st["blob"])(F.xxhash64(F.col("urlhash")))
         keyed = candidates.withColumn("_maybe_seen", probe).cache()
-        self._wave_caches.append(keyed)
+        self._hold(keyed)
         definitely_new = keyed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
         maybe = keyed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
         return definitely_new.unionByName(maybe.join(seen, "urlhash", "left_anti"))
@@ -925,26 +1092,22 @@ class CrawlEngine:
         Reference semantics (workerpipe.py:257-277): a page is a near-dup
         iff its simhash is within hamming<=5 of an EXISTING MASTER bucket
         (earliest-created matching bucket wins; dups never create buckets).
-        LSH banding is exact by pigeonhole (6 bands for <=5 differing bits),
-        so no candidate pair is missed. Within-wave chaining (who became a
-        master moments earlier) is resolved greedily in (gen, seq) order
-        over the candidate-pair graph. Two equivalent evaluation paths:
+        One path per input size:
 
-        - pair count <= cfg.simhash_driver_cap: collect the (small) graph
-          and resolve on the driver in one pass.
-        - above the cap (dense waves — the 32-bit fingerprint saturates on
-          big corpora, BASELINE.md): a DISTRIBUTED round-based fixpoint
-          (_distributed_election) — the greedy outcome of a node depends
-          only on the outcomes of its earlier neighbors, so evaluating in
-          topological rounds of joins yields the identical labeling with
-          O(1) driver state. A dense wave can no longer OOM the driver.
+        - wave and master index under SIMHASH_NUMPY_CAP: the vectorized
+          FIFO scan on the driver (_simhash_stage_vectorized);
+        - above it: LSH banding, exact by pigeonhole (6 bands for <=5
+          differing bits, so no candidate pair is missed), then within-wave
+          chaining (who became a master moments earlier) resolved greedily
+          in (gen, seq) order over the candidate-pair graph by the
+          DISTRIBUTED round-based fixpoint (distributed_election) — O(1)
+          driver state, so a dense wave cannot OOM the driver.
         """
         spark = self.spark
         cand = good.select("urlhash", "gen", "seq", "smhash")
-        if self.cfg.simhash_numpy_cap > 0:
-            done = self._simhash_stage_vectorized(cand)
-            if done is not None:
-                return done
+        done = self._simhash_stage_vectorized(cand)
+        if done is not None:
+            return done
         bits = self.cfg.simhash_bits
         if bits <= 32 and self.cfg.simhash32_banded_max > 0:
             # quadratic-cliff guard (schema.CrawlConfig.simhash32_banded_max):
@@ -963,9 +1126,10 @@ class CrawlEngine:
                     f"simhash32_banded_max={self.cfg.simhash32_banded_max}. "
                     f"A saturated 32-bit fingerprint makes this self-join "
                     f"near-quadratic (BASELINE.md). Use simhash_bits=64 "
-                    f"(production plane, same LSH shape), raise "
-                    f"simhash_numpy_cap to keep the linear vectorized scan, "
-                    f"or set simhash32_banded_max=0 to override."
+                    f"(production plane, same LSH shape), keep waves and "
+                    f"index under SIMHASH_NUMPY_CAP for the linear "
+                    f"vectorized scan, or set simhash32_banded_max=0 to "
+                    f"override."
                 )
         cband = cand.select(
             "urlhash", "gen", "seq", "smhash",
@@ -989,7 +1153,7 @@ class CrawlEngine:
             .select(F.col("c.urlhash").alias("urlhash"))
             .distinct()
         ).cache()
-        self._wave_caches.append(vs_masters)
+        self._hold(vs_masters)
         fresh = cand.join(vs_masters, "urlhash", "left_anti")
 
         fband = fresh.select(
@@ -1022,45 +1186,33 @@ class CrawlEngine:
             .distinct()
             .cache()
         )
-        self._wave_caches.append(pairs)
-        # bounded probe-collect: ONE job decides the path AND fetches the
-        # sparse-case graph (limit(cap+1) caps driver memory by
-        # construction — a count-then-collect pair would cost two jobs)
-        cap = self.cfg.simhash_driver_cap
-        probe = pairs.limit(cap + 1).collect()
-        if len(probe) <= cap:
-            # sparse wave: one-pass greedy on the collected chain graph
-            collected = probe
-            nodes: dict[str, tuple] = {}
-            edges: dict[str, list[str]] = {}
-            for r in collected:
-                nodes[r["ha"]] = (r["ga"], r["sa"])
-                nodes[r["hx"]] = (r["gx"], r["sx"])
-                edges.setdefault(r["hx"], []).append(r["ha"])
-            dups: set[str] = set()
-            masters_set: set[str] = set()
-            for h in sorted(nodes, key=lambda k: nodes[k]):
-                if any(e in masters_set for e in edges.get(h, [])):
-                    dups.add(h)
-                else:
-                    masters_set.add(h)
-            within_dups = spark.createDataFrame(
-                [(h,) for h in sorted(dups)], "urlhash string"
-            )
-        else:
-            within_dups = self._distributed_election(pairs)
-        new_masters = fresh.join(within_dups, "urlhash", "left_anti")
-        sim_append = new_masters.select(
-            "smhash",
-            F.col("urlhash").alias("master"),
-            F.col("gen").alias("mgen"),
-            F.col("seq").alias("mseq"),
-        )
-        self._delta_sim = sim_append
-        self.sim_index = self.sim_index.unionByName(
-            sim_append
-        ).coalesce(self._nparts).localCheckpoint(eager=False)
+        self._hold(pairs)
+        within_dups, frames, self.election_stats = distributed_election(spark, pairs)
+        for df in frames:
+            self._hold(df)
+        self._append_masters(fresh.join(within_dups, "urlhash", "left_anti"))
         return vs_masters.unionByName(within_dups)
+
+    def _append_masters(self, new_masters: DataFrame) -> None:
+        """Append this wave's new near-dup masters to the sim_index."""
+        self._append(
+            "sim_index",
+            new_masters.select(
+                "smhash",
+                F.col("urlhash").alias("master"),
+                F.col("gen").alias("mgen"),
+                F.col("seq").alias("mseq"),
+            ),
+        )
+
+    def _append(self, table: str, rows: DataFrame) -> None:
+        """Append a wave's rows to a state table: they are the table's
+        store delta, and the grown table is a LAZY checkpoint — filled by
+        the first job that reads it (the next wave's broadcast joins,
+        usually), or by _materialize before its inputs are released."""
+        self._delta[table] = rows
+        grown = getattr(self, table).unionByName(rows)
+        setattr(self, table, grown.coalesce(self._nparts).localCheckpoint(eager=False))
 
     # -------------------------------------- vectorized simhash fast path
     def _simhash_stage_vectorized(self, cand: DataFrame):
@@ -1069,7 +1221,7 @@ class CrawlEngine:
         The 32-bit parity fingerprint saturates its band buckets (64
         values per 6-bit band), so on dense waves the banded self-join
         materializes tens of millions of candidate pairs — yet the HASHES
-        are tiny (12 B/row). Below ``simhash_numpy_cap`` rows (wave AND
+        are tiny (12 B/row). Below ``SIMHASH_NUMPY_CAP`` rows (wave AND
         master index), this collects only (urlhash, gen, seq, smhash) and
         replays the reference's exact sequential discipline
         (workerpipe.py:261 — scan each page in FIFO order against all
@@ -1085,7 +1237,7 @@ class CrawlEngine:
         """
         import numpy as np
 
-        cap = self.cfg.simhash_numpy_cap
+        cap = SIMHASH_NUMPY_CAP
         if self._sim_index_rows is None or self._sim_index_rows > cap:
             return None
         if self._wave_n is None or self._wave_n > cap:
@@ -1144,178 +1296,15 @@ class CrawlEngine:
                 m += 1
         self._sim_hashes = masters[:m]
         self._sim_index_rows = m
-        dup_df = spark.createDataFrame(
-            [(u,) for u in sorted(dups)], "urlhash string"
+        dup_set = set(dups)
+        # the new masters are on the driver already: a local frame, so
+        # landing the sim_index re-runs nothing upstream
+        self._append_masters(
+            spark.createDataFrame(
+                [r for r in rows if r["urlhash"] not in dup_set], cand.schema
+            )
         )
-        new_masters = cand.join(dup_df, "urlhash", "left_anti")
-        sim_append = new_masters.select(
-            "smhash",
-            F.col("urlhash").alias("master"),
-            F.col("gen").alias("mgen"),
-            F.col("seq").alias("mseq"),
-        )
-        self._delta_sim = sim_append
-        self.sim_index = self.sim_index.unionByName(
-            sim_append
-        ).coalesce(self._nparts).localCheckpoint(eager=False)
-        return dup_df
-
-    # ------------------------------------------- distributed dup election
-    def _distributed_election(self, pairs: DataFrame) -> DataFrame:
-        """Greedy FIFO master election over the within-wave near-dup pair
-        graph, evaluated distributed — no driver-side materialization.
-
-        Semantics (identical to the sequential greedy, reference
-        workerpipe.py:257-277): processing nodes in (gen, seq) order, a
-        node is a DUP iff some earlier neighbor is a master, else it
-        becomes a master. The greedy label depends only on earlier
-        neighbors' labels (the pair edges form a DAG in (gen, seq) order),
-        so a round-based fixpoint computes the same unique labeling.
-
-        Each OUTER round over the undecided subgraph:
-        1. a node with an in-edge from a MASTER is a dup — final, masters
-           never relabel;
-        2. recompute in-degree over the remaining undecided graph: indeg-0
-           nodes have only dup (or no) earlier neighbors -> MASTER;
-        3. indeg-1 nodes form an in-forest (each waits on exactly ONE
-           undecided earlier neighbor; pointers strictly decrease (gen,
-           seq), so no cycles). Along such a wait chain labels strictly
-           ALTERNATE from the terminal: ptr(v)=master => v dup;
-           ptr(v)=dup => v's earlier neighbors are all dups (indeg 1
-           guarantees no other undecided one, step 1 ruled out masters)
-           => v master. POINTER-DOUBLING finds every node's terminal and
-           distance parity in O(log chain) self-joins, so a k-node chain
-           resolves in ONE outer round — the round-2 formulation decided
-           one chain node per round (O(k) Spark jobs on an adversarial
-           hamming-gradient family; VERDICT r2 'What's wrong' #2);
-        4. indeg>=2 nodes stay blocked this round (their undecided earlier
-           neighbors may branch); the next round re-derives.
-
-        Progress: the globally-minimum undecided node always has indeg 0,
-        so every outer round decides >= 1 node; dense families collapse in
-        ~2 rounds, chains in 1. Driver state: a few counts per round.
-        Returns a one-column (urlhash) DF of dups. Round counts are kept in
-        ``self.election_stats`` (asserted by the adversarial-chain test).
-        """
-        spark = self.spark
-        # every eager checkpoint this method creates is superseded by the
-        # end of the call (each consumer is itself an eager checkpoint or
-        # a count) except the returned dups frame; all are queued on
-        # _retire at the end so a long crawl's election rounds do not
-        # accumulate blocks (see _retire)
-        chain: list[DataFrame] = []
-        edges = pairs.select(
-            F.col("ha").alias("src"), F.col("hx").alias("dst")
-        ).localCheckpoint(eager=True)
-        und = (
-            pairs.select(F.col("ha").alias("urlhash"))
-            .unionByName(pairs.select(F.col("hx").alias("urlhash")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        chain += [edges, und]
-        masters = spark.createDataFrame([], "urlhash string")
-        dups = spark.createDataFrame([], "urlhash string")
-        stats = {"outer_rounds": 0, "doubling_steps": 0}
-        self.election_stats = stats
-        n_und = und.count()
-        while n_und > 0:
-            stats["outer_rounds"] += 1
-            # 1. final dups: an earlier MASTER neighbor decides immediately
-            dup_now = (
-                edges.join(masters, edges.src == masters.urlhash, "left_semi")
-                .select(F.col("dst").alias("urlhash"))
-                .distinct()
-                .join(und, "urlhash", "left_semi")
-            )
-            und2 = und.join(dup_now, "urlhash", "left_anti").localCheckpoint(
-                eager=True
-            )
-            chain.append(und2)
-            # 2. in-degree over the undecided-only subgraph
-            live = (
-                edges.join(und2, edges.src == und2.urlhash, "left_semi")
-                .join(und2, edges.dst == und2.urlhash, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            chain.append(live)
-            indeg = live.groupBy("dst").agg(F.count("*").alias("deg"))
-            roots = und2.join(
-                indeg, und2.urlhash == indeg.dst, "left_anti"
-            ).localCheckpoint(eager=True)
-            chain.append(roots)
-            # 3. wait-chain forest: indeg-1 nodes point at their single
-            # undecided earlier neighbor
-            ptr = (
-                live.join(
-                    indeg.filter(F.col("deg") == 1).select("dst"), "dst", "left_semi"
-                )
-                .select(F.col("dst").alias("v"), F.col("src").alias("t"))
-                .localCheckpoint(eager=True)
-            )
-            chain.append(ptr)
-            # pointer doubling: follow t through ptr until it leaves the
-            # forest (terminal = root / blocked / dup_now node). d = path
-            # length; each step at most doubles it.
-            P = ptr.select("v", "t", F.lit(1).alias("d"))
-            while True:
-                stats["doubling_steps"] += 1
-                # true doubling: advance v's pointer by its TARGET's whole
-                # known path — P' = P ∘ P, so path length covered doubles
-                # each step (1, 2, 4, ...)
-                p2 = P.select(
-                    F.col("v").alias("t2"),
-                    F.col("t").alias("tt"),
-                    F.col("d").alias("dd"),
-                )
-                P = (
-                    P.join(p2, P.t == F.col("t2"), "left")
-                    .select(
-                        "v",
-                        F.coalesce("tt", "t").alias("t"),
-                        (F.col("d") + F.coalesce("dd", F.lit(0))).alias("d"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                chain.append(P)
-                # done when every pointer rests on a terminal (a node with
-                # no outgoing ptr — not in the forest's key set)
-                if (
-                    P.join(ptr.select(F.col("v").alias("k")), P.t == F.col("k"), "left_semi")
-                    .limit(1)
-                    .count()
-                    == 0
-                ):
-                    break
-            # chains whose terminal became a MASTER this round resolve by
-            # parity; terminals still blocked leave their chain undecided
-            reached = P.join(roots, P.t == roots.urlhash, "left_semi")
-            chain_m = reached.filter(F.col("d") % 2 == 0).select("v")
-            chain_d = reached.filter(F.col("d") % 2 == 1).select("v")
-            new_masters = roots.select("urlhash").unionByName(
-                chain_m.select(F.col("v").alias("urlhash"))
-            )
-            new_dups = dup_now.select("urlhash").unionByName(
-                chain_d.select(F.col("v").alias("urlhash"))
-            )
-            masters = masters.unionByName(new_masters).localCheckpoint(eager=True)
-            dups = dups.unionByName(new_dups).localCheckpoint(eager=True)
-            und = (
-                und2.join(new_masters, "urlhash", "left_anti")
-                .join(new_dups, "urlhash", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            chain += [masters, dups, und]
-            prev, n_und = n_und, und.count()
-            assert n_und < prev, "simhash election made no progress"
-        # the final dups frame is still to be consumed by this wave's
-        # frontier materialization (and, with a store, by _pending) —
-        # _retire defers each frame to the mode-appropriate release point
-        for df in chain:
-            if df is not dups:
-                self._retire(df)
-        self._retire(dups)
-        return dups
+        return spark.createDataFrame([(u,) for u in sorted(dups)], "urlhash string")
 
     # ----------------------------------------------------------- the loop
     def run(self, resume: bool = False) -> DataFrame:
@@ -1338,12 +1327,14 @@ class CrawlEngine:
             wave = self._select_wave(pending).localCheckpoint(eager=True)
             n = wave.count()
             if n == 0:
-                wave.unpersist()  # nothing consumed it beyond the count
+                _release(wave)  # nothing consumed it beyond the count
                 break
-            self._retire(self.last_wave)  # superseded previous wave frame
+            if self.last_wave is not None:
+                self._hold(self.last_wave)  # superseded previous wave frame
             self.last_wave = wave
             self._wave_n = n
             _t1 = time.time()
+            state_before = [getattr(self, name) for name in APPEND_TABLES]
             updates, inserts, counters = self.run_wave(wave)
             raw_updates, raw_inserts = updates, inserts
             # finish-code histogram rides the materialization job as an
@@ -1366,7 +1357,7 @@ class CrawlEngine:
             # observed frame itself can skip metric collection entirely
             # (obs.get then dies with a JVM assertion).
             inserts_cached = inserts.cache()
-            self._wave_caches.append(inserts_cached)
+            self._hold(inserts_cached)
             obs_ins = Observation(f"inserts-{self.wave_no}")
             inserts = inserts_cached.observe(
                 obs_ins, F.count(F.lit(1)).alias("n_inserts")
@@ -1376,17 +1367,13 @@ class CrawlEngine:
             )
             # the single materialization point of the wave (snapshot commit
             # analogue): everything upstream lands here once
-            old_frontier = self.frontier
+            self._hold(self.frontier)  # superseded by the checkpoint below
             self.frontier = (
                 untouched.unionByName(updates)
                 .unionByName(inserts)
                 .repartition(self._nparts, "urlhash")
                 .localCheckpoint(eager=True)
             )
-            # the eager checkpoint above has consumed `untouched` (the only
-            # frontier-chain reader); queue the superseded snapshot's
-            # blocks for the mode-appropriate release point
-            self._retire(old_frontier)
             _t2 = time.time()
             counters["n_wave"] = n
             counters.update({k: v for k, v in obs.get.items() if v})
@@ -1404,105 +1391,61 @@ class CrawlEngine:
             counters["wall_run_s"] = round(_t2 - _t1, 2)
             counters["wall_post_s"] = round(time.time() - _t2, 2)
             self.metrics.append(counters)
-            # the state tables checkpoint lazily and may first materialize
-            # early next wave, so this wave's caches are released one wave
-            # later (after that materialization has happened)
-            for df in getattr(self, "_prev_wave_caches", []):
-                df.unpersist()
-            self._prev_wave_caches = self._wave_caches
-            self._wave_caches = []
             if self.store is not None:
                 # the rows this wave touched: updated wave rows + inserts
-                # (disjoint urlhash sets within one wave) — the O(delta)
-                # upsert payload of the next commit
-                self._pending.append(
-                    {
-                        "frontier": raw_updates.unionByName(raw_inserts),
-                        "domains": self._delta_domains,
-                        "exact_buckets": self._delta_exact,
-                        "sim_index": self._delta_sim,
-                    }
+                # (disjoint urlhash sets within one wave) upsert the frontier
+                self._commit_state(
+                    {"frontier": raw_updates.unionByName(raw_inserts), **self._delta}
                 )
-                if (self.wave_no + 1) % cfg.checkpoint_every == 0:
-                    self._commit_state()
+            # the state tables this wave superseded are the last lazy readers
+            # of the previous wave's frames: fill them before the release
+            _materialize(state_before)
+            for df in state_before:
+                self._hold(df)
+            self._release_before(self.wave_no)
             self.wave_no += 1
         return self.frontier
 
-    def _retire(self, df: DataFrame | None) -> None:
-        """Queue a SUPERSEDED eager localCheckpoint for block release.
+    # ------------------------------------------------------ frame ledger
+    def _hold(self, df: DataFrame) -> None:
+        """Register a cached frame or a SUPERSEDED checkpoint for release.
 
-        Without this, a long crawl accumulates every wave's frontier /
-        wave / election checkpoints in the block manager until broadcasts
-        start failing ("Not enough memory to build and broadcast") — the
-        unbounded-storage defect a 10^10-URL frontier cannot carry.
-        Checkpoint blocks are NOT recomputable (lineage is truncated), so
-        release must happen strictly after the last lazy consumer
-        materializes:
-
-        - with a snapshot store, the _pending delta frames reference wave
-          outputs lazily until _commit_state writes them, AND the lazy
-          state-table chains (sim_index etc.) may first materialize during
-          the NEXT wave's probe — so release happens at a commit, and only
-          for frames retired on a STRICTLY EARLIER wave (both conditions
-          are then satisfied: pending drained, next-wave probes done);
-        - without one, every consumer materializes by the end of the NEXT
-          wave (the same invariant the _prev_wave_caches release already
-          relies on), so the superseded frame rides that list.
+        Without release, a long crawl accumulates every wave's frontier /
+        wave / state-table / election checkpoints in the block manager
+        until broadcasts start failing ("Not enough memory to build and
+        broadcast") — the unbounded-storage defect a 10^10-URL frontier
+        cannot carry. Checkpoint blocks are NOT recomputable (lineage is
+        truncated), so a frame may go only after its last lazy reader has
+        materialized. The readers of a wave-k frame are the frontier
+        checkpoint, links append, seen-sketch delta and store commit of
+        wave k, and the state tables grown in wave k, which wave k+1 fills
+        (_materialize) before its _release_before frees wave k's frames.
         """
-        if df is None:
-            return
-        if self.store is not None:
-            self._retire_after_commit.append((self.wave_no, df))
-        else:
-            self._wave_caches.append(df)
+        self._frames.append((self.wave_no, df))
 
-    def _commit_state(self) -> None:
-        """Commit pending wave deltas: a delta commit (O(touched rows))
-        normally; a full base snapshot for the first commit and every
+    def _release_before(self, wave_no: int) -> None:
+        """The one release point: free every frame registered before
+        ``wave_no``. Called at the end of each wave, after its commit."""
+        keep = []
+        for registered, df in self._frames:
+            if registered < wave_no:
+                _release(df)
+            else:
+                keep.append((registered, df))
+        self._frames = keep
+
+    def _commit_state(self, delta: dict[str, DataFrame]) -> None:
+        """Commit this wave: a delta commit (O(touched rows)) normally; a
+        full base snapshot for the first commit and every
         ``store.compact_every`` deltas (compaction — Iceberg MOR rewrite)."""
         store = self.store
         if (
             store.latest_wave() is None
             or store.delta_count() + 1 > store.compact_every
         ):
+            tables = {name: getattr(self, name) for name in APPEND_TABLES}
             store.commit(
-                self.wave_no,
-                {
-                    "frontier": self.frontier,
-                    "domains": self.domains,
-                    "exact_buckets": self.exact_buckets,
-                    "sim_index": self.sim_index,
-                },
-                self.metrics,
+                self.wave_no, {"frontier": self.frontier, **tables}, self.metrics
             )
         else:
-            merged: dict[str, DataFrame] = {}
-            for name in ("frontier", "domains", "exact_buckets", "sim_index"):
-                parts = [
-                    p[name].withColumn("_dwave", F.lit(i))
-                    for i, p in enumerate(self._pending)
-                ]
-                u = parts[0]
-                for p in parts[1:]:
-                    u = u.unionByName(p)
-                if name == "frontier" and len(parts) > 1:
-                    # multi-wave pending: latest version of a urlhash wins
-                    w = Window.partitionBy("urlhash").orderBy(F.desc("_dwave"))
-                    u = (
-                        u.withColumn("_rn", F.row_number().over(w))
-                        .filter(F.col("_rn") == 1)
-                        .drop("_rn")
-                    )
-                merged[name] = u.drop("_dwave")
-            store.commit_delta(self.wave_no, merged, self.metrics)
-        self._pending = []
-        # safe release point (see _retire): pending is drained and every
-        # frame retired on a strictly earlier wave has had its next-wave
-        # consumers materialize
-        keep: list[tuple[int, DataFrame]] = []
-        for wno, df in self._retire_after_commit:
-            if wno < self.wave_no:
-                df.unpersist()
-            else:
-                keep.append((wno, df))
-        self._retire_after_commit = keep
+            store.commit_delta(self.wave_no, delta, self.metrics)

@@ -161,53 +161,28 @@ class CrawlConfig:
     priority_table: str | None = None
     max_retries: int = MAX_RETRIES
     max_waves: int = 64
-    checkpoint_every: int = 1  # snapshot commit cadence (waves)
     # broadcast-bloom prefilter for the URL-seen anti-join (SURVEY §2.3
-    # J1 / north rule): rebuilt per wave from the frontier, keyed on
-    # xxhash64(canonical url). None disables (exact anti-join only —
-    # results are identical either way; the bloom only prunes probe rows).
-    # Default ON since round 4: the measured bench-corpus crawl is ~1.4x
-    # faster with the prefilter (anti_join 51 s vs bloom 35 s), and the
-    # north rule names the broadcast bloom seen-set explicitly.
+    # J1 / north rule), keyed on xxhash64(urlhash) and kept incrementally
+    # (engine.SEEN_BLOOM_CAPACITY_FACTOR). None disables (exact anti-join
+    # only — results are identical either way; the bloom only prunes
+    # probe rows). Default ON since round 4: the measured bench-corpus
+    # crawl is ~1.4x faster with the prefilter (anti_join 51 s vs bloom
+    # 35 s), and the north rule names the broadcast bloom seen-set.
     seen_bloom_fpp: float | None = 0.01
-    # seen-set prefilter kind when seen_bloom_fpp is set: "bloom" (JVM
-    # sketch, OR-merged distributed build) or "cuckoo" (sharded numpy
-    # filter, per-shard executor build, deletion-capable — the north
-    # rule's upgrade path, functions/cuckoo.py)
-    seen_filter: str = "bloom"
-    # incremental seen-bloom headroom: the filter is sized for
-    # capacity_factor x the frontier at build time, then each wave's
-    # inserts OR-merge in as a delta bloom (O(inserts), not O(frontier));
-    # a full rebuild happens only when the frontier outgrows the sized
-    # capacity — ~log_factor(growth) rebuilds over a whole crawl. fpp is
-    # honored at all times because the filter never holds more keys than
-    # it was sized for. 1 disables incrementality (rebuild every wave).
-    seen_bloom_capacity_factor: int = 4
-    # within-wave simhash master election: pair graphs at or below this
-    # size are resolved in one driver pass; larger (dense) graphs use the
-    # distributed round-based election (engine._distributed_election), so
-    # a saturated wave can never OOM the driver. 0 forces distributed.
-    simhash_driver_cap: int = 20_000
     # near-dup fingerprint width: 32 = reference parity (helpers/simhash.py
     # mod-2^32 crc64 lanes; saturates beyond ~10^5 docs — BASELINE.md); 64
     # = production plane (full crc64 lanes, same vote rule, same LSH plan)
     simhash_bits: int = 32
-    # vectorized simhash fast path: when BOTH the wave and the master
-    # index fit under this many rows, the near-dup pass replays the
-    # reference's sequential FIFO scan with blocked numpy popcount on the
-    # driver (hashes only — 12 B/row) instead of the banded join, which
-    # saturates combinatorially on 32-bit fingerprints
-    # (engine._simhash_stage_vectorized). 0 disables (always distributed).
-    simhash_numpy_cap: int = 200_000
     # quadratic-cliff guard (VERDICT r3 #5): a 32-bit fingerprint's band
     # buckets saturate on large corpora (measured: 9.3% of ALL pairs
     # collide at just 5k docs — dedup_simhash_bitwidth_density), so the
     # banded self-join above this many rows (wave + master index) would
     # materialize a near-quadratic candidate set. The engine REFUSES to
     # run that plan and points at simhash_bits=64 (same plan shape, 3
-    # orders of magnitude fewer candidates) or a higher simhash_numpy_cap
-    # (the vectorized path is linear in wave x masters hashes). 0 disables
-    # the guard. Irrelevant at bits=64 — the guard never fires there.
+    # orders of magnitude fewer candidates). Waves and indexes under
+    # engine.SIMHASH_NUMPY_CAP never reach it (the vectorized scan is
+    # linear in wave x masters hashes). 0 disables the guard. Irrelevant
+    # at bits=64 — the guard never fires there.
     simhash32_banded_max: int = 100_000
     # anchor-text link sink: when set, every wave appends the admitted
     # pages' anchor edges (src_url, src_domain, pos, dst_url, dst_domain,

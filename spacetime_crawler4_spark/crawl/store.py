@@ -59,10 +59,14 @@ class SnapshotStore:
         return os.path.join(self.root, "manifest.json")
 
     def _manifest(self) -> dict | None:
+        """The current manifest, or None when no commit exists yet. A
+        manifest that exists but does not parse is a damaged store: the
+        JSONDecodeError propagates, so a resume fails loudly instead of
+        silently restarting the crawl from its seeds."""
         try:
             with open(self._manifest_path) as f:
                 return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+        except FileNotFoundError:
             return None
 
     def latest_wave(self) -> int | None:
@@ -77,6 +81,8 @@ class SnapshotStore:
         mtmp = self._manifest_path + ".tmp"
         with open(mtmp, "w") as f:
             json.dump(manifest, f)
+            f.flush()
+            os.fsync(f.fileno())  # durable before it becomes the pointer
         os.replace(mtmp, self._manifest_path)  # the atomic commit point
 
     # -------------------------------------------------------------- writes
@@ -141,7 +147,8 @@ class SnapshotStore:
         """DELTA commit: only rows touched since the last commit.
 
         ``deltas['frontier']`` rows are upserts on urlhash (each urlhash at
-        most once — the engine reduces multi-wave pendings before calling);
+        most once — the engine commits one wave's touched rows, a disjoint
+        set of urlhashes);
         the append tables are unioned as-is. Requires an existing base.
         """
         m = self._manifest()

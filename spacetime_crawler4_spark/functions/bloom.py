@@ -14,8 +14,8 @@ only has to look at survivors; false positives are killed there.
 
 The 64-bit key is ``xxhash64(canonical url)`` computed JVM-side
 (the "canonicalized + 64-bit-hashed URLs" of BASELINE.json north_star).
-Upgrade path to a cuckoo filter = swap this module; the engine contract
-(build(frontier) -> probe(candidates)) is unchanged.
+This is the engine's one seen-set prefilter: a sharded cuckoo filter was
+measured against it and removed (same probe contract, no faster).
 """
 
 from __future__ import annotations

@@ -504,7 +504,7 @@ def connected_components(
     label(label(v)) each round), the standard O(log n)-round MapReduce CC
     formulation (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14 — same doubling trick as the crawl engine's dup
-    election, crawl/engine.py `_distributed_election`). Per round: one
+    election, crawl/engine.py `distributed_election`). Per round: one
     equi-join against the (deduplicated, symmetric) edge list + one
     self-join for the jump, each a hash shuffle on id; lineage is cut with
     an eager localCheckpoint so round k+1's plan does not replay round k.

@@ -151,13 +151,14 @@ def test_seed_dedup_by_urlhash(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_simhash32_quadratic_guard_fires(spark, corpus_dir):
+def test_simhash32_quadratic_guard_fires(spark, corpus_dir, monkeypatch):
     """bits=32 + banded fallback above simhash32_banded_max must refuse
     with a message pointing at simhash_bits=64 (VERDICT r3 #5), and the
     same corpus at bits=64 (or guard disabled) must run."""
     import pyarrow.parquet as pq
     import pytest
 
+    from spacetime_crawler4_spark.crawl import engine as E
     from spacetime_crawler4_spark.crawl.engine import CrawlEngine
     from spacetime_crawler4_spark.crawl.schema import CrawlConfig
     from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST
@@ -180,11 +181,12 @@ def test_simhash32_quadratic_guard_fires(spark, corpus_dir):
         )
 
     # numpy path off + a threshold the fixture certainly exceeds -> refuse
+    monkeypatch.setattr(E, "SIMHASH_NUMPY_CAP", 0)
     with pytest.raises(RuntimeError, match="simhash_bits=64"):
-        eng(simhash_numpy_cap=0, simhash32_banded_max=1).run()
+        eng(simhash32_banded_max=1).run()
 
     # identical corpus: guard disabled runs the banded 32-bit plan fine
-    f_off = eng(simhash_numpy_cap=0, simhash32_banded_max=0).run()
+    f_off = eng(simhash32_banded_max=0).run()
     # and the production 64-bit plane is untouched by the guard
-    f_64 = eng(simhash_numpy_cap=0, simhash_bits=64, simhash32_banded_max=1).run()
+    f_64 = eng(simhash_bits=64, simhash32_banded_max=1).run()
     assert f_off.count() > 0 and f_64.count() > 0

@@ -9,11 +9,8 @@ must stay exactly equal to the sequential greedy on arbitrary pair graphs.
 
 import math
 import random
-from types import SimpleNamespace
 
-from pyspark.sql import functions as F
-
-from spacetime_crawler4_spark.crawl.engine import CrawlEngine
+from spacetime_crawler4_spark.crawl.engine import distributed_election
 
 PAIRS_SCHEMA = (
     "ha string, ga int, sa long, hx string, gx int, sx long"
@@ -21,15 +18,11 @@ PAIRS_SCHEMA = (
 
 
 def _election(spark, rows):
-    """Run CrawlEngine._distributed_election on an explicit pair graph.
-
-    The method touches only self.spark / self.election_stats, so a shim
-    stands in for a full engine (no corpus needed at this level).
-    """
-    shim = SimpleNamespace(spark=spark, election_stats=None)
+    """Run distributed_election on an explicit pair graph (no corpus
+    needed at this level); returns (dup urlhashes, round stats)."""
     pairs = spark.createDataFrame(rows, PAIRS_SCHEMA)
-    dups = CrawlEngine._distributed_election(shim, pairs)
-    return {r["urlhash"] for r in dups.collect()}, shim.election_stats
+    dups, _frames, stats = distributed_election(spark, pairs)
+    return {r["urlhash"] for r in dups.collect()}, stats
 
 
 def _greedy(nodes, edges):

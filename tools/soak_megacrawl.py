@@ -123,12 +123,11 @@ def main() -> None:
             # rows >> simhash32_banded_max — exactly the cliff the guard
             # exists for), and a 10^6-URL deployment runs the 64-bit
             # fingerprint (same LSH plan shape, linear candidate volume).
-            # The wave here also exceeds simhash_numpy_cap, so this
-            # exercises the fully-distributed banded self-join + election.
+            # The wave here also exceeds engine.SIMHASH_NUMPY_CAP, so this
+            # exercises the banded self-join + distributed election.
             stats, eng = bench._crawl_once(spark, MEGA_CORPUS, {"simhash_bits": 64})
         finally:
             bench._stop(spark)
-        stats.pop("too_similar", None)
         stats["waves"] = eng.wave_no
         stats["seen_sketch"] = dict(eng.sketch_stats)
         stats["wave_walls"] = [
