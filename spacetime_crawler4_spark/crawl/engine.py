@@ -1,13 +1,22 @@
 """The wave-loop crawl engine: reference pipeline as declarative dataflow.
 
-Each wave is ONE logical DataFrame plan over the pending frontier
+Each wave is ONE classification pipeline over the selected rows
 (reference pipe order, crawler2/worker.py:27-121):
 
     sift(F7) → domain init(S3/S4) → robots gate(F8) → fetch join(J2/S2)
     → status/redirect/length filters(F9/F10/F11) → exact dedup(J4/W2)
-    → parse UDF(T1/T2) → tokenize UDF(T3-T5) + low-info(F12)
-    → simhash + LSH near-dup(J5) → link expansion(W3/C9/C10/F4-F6)
+    → fused parse/tokenize/low-info/simhash UDF(T1-T5/F12/C4)
+    → near-dup(J5) → link expansion(W3/C9/C10/F4-F6)
     → seen-set anti-join(J1) → snapshot commit(S5)
+
+One class column is carried from sift to the features UDF and each row's
+new frontier columns are projected once (run_wave); the classified rows
+land in one eager checkpoint without html. Near-dup, the state-table
+appends, link expansion and the wave delta (new row states + inserts, a
+second eager checkpoint) read it; the frontier swap and the store commit
+read the delta. Every Spark job of wave n is tagged ``crawl-wave-<n>`` and
+described ``wave <n>: <phase>`` (select, domains, classify, neardup,
+materialize, post, commit).
 
 Scale design decisions (SURVEY.md §4):
 - fetch is an equi-join of the wave against the pages table (the corpus IS
@@ -29,18 +38,21 @@ Scale design decisions (SURVEY.md §4):
   banded join with the distributed election (distributed_election);
   everything else stays distributed
 - frontier and state-table updates are copy-on-write unions per wave with
-  localCheckpoint lineage truncation; every cached or superseded frame is
-  released at one point, one wave later (_hold / _release_before); store
-  commits are O(touched-rows) DELTAS, one per wave, with periodic
+  eager localCheckpoint lineage truncation; every wave frame and every
+  superseded checkpoint is released at one point, the end of the wave
+  (_hold / _release_frames), or by close(); store commits are O(touched-rows) DELTAS, one per wave, with periodic
   compaction and merge-on-read load (Iceberg MOR, store.py)
 """
 
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from spacetime_crawler4_spark.crawl import schema as S
@@ -54,7 +66,7 @@ from spacetime_crawler4_spark.crawl.schema import (
 from spacetime_crawler4_spark.crawl.store import APPEND_TABLES, SnapshotStore
 from spacetime_crawler4_spark.crawl.udfs import (
     make_can_fetch_udf,
-    make_link_meta_udf,
+    make_links_meta_udf,
     make_robots_parse_udf,
 )
 from spacetime_crawler4_spark.functions.exhash import exhash_col
@@ -68,9 +80,22 @@ _EMPTY_WORDS = "cast(map() as map<string,int>)"
 _EMPTY_LINKS = "cast(array() as array<string>)"
 
 _FCOLS = [f.name for f in FRONTIER_SCHEMA.fields]
+# the finish code of each wave-row class run_wave assigns (the rest keep
+# theirs: retry, good and sitemap rows stay OK, a good row found near-dup
+# becomes TOO_SIMILAR)
+_FINISH_OF = {
+    "sift": FINISH.SIFTED,
+    "deny": FINISH.NOT_ALLOWED,
+    "bad": FINISH.BAD,
+    "cache": FINISH.CACHE_ERROR,
+    "lowpre": FINISH.LOWINFO_PRE,
+    "redir": FINISH.REDIRECT,
+    "exact": FINISH.TOO_EXACT,
+    "lowpost": FINISH.LOWINFO_POST,
+}
 # incremental seen-bloom headroom: the filter is sized for this factor x
-# the frontier at build time, then each wave's inserts OR-merge in as a
-# delta bloom (O(inserts), not O(frontier)); a full rebuild happens only
+# the frontier at build time, then each wave puts in only its inserts on
+# the driver (O(inserts), not O(frontier)); a full rebuild happens only
 # when the frontier outgrows the sized capacity — ~log_factor(growth)
 # rebuilds over a whole crawl. fpp holds at all times because the filter
 # never holds more keys than it was sized for.
@@ -85,6 +110,24 @@ SIMHASH_NUMPY_CAP = 200_000
 
 def _seq_child(seq_col, tag: str, ord_col):
     return F.concat(seq_col, F.lit("." + tag), F.lpad(ord_col.cast("string"), 7, "0"))
+
+
+def _new_row(**cols) -> list:
+    """FRONTIER_SCHEMA columns of a new frontier row: NO_DOWN, OK, depth
+    0, empty words/links, no hashes, no retries — ``cols`` override."""
+    row = {
+        "parent": F.lit(None).cast("string"),
+        "status": F.lit(STATUS.NO_DOWN),
+        "finish": F.lit(FINISH.OK),
+        **{d: F.lit(0) for d in ("absdepth", "reldepth", "monodepth", "dupdepth")},
+        "words": F.expr(_EMPTY_WORDS),
+        "links": F.expr(_EMPTY_LINKS),
+        "exhash": F.lit(None).cast("string"),
+        "smhash": F.lit(None).cast("long"),
+        "retries": F.lit(0),
+        **cols,
+    }
+    return [row[c].alias(c) for c in _FCOLS]
 
 
 _POPCOUNT16 = None
@@ -102,6 +145,24 @@ def _popcount16_lut():
     return _POPCOUNT16
 
 
+def _local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
+    """Driver-side rows (tuples or dicts) as a JVM-resident frame: Arrow
+    makes them a LocalRelation, so reading it starts no Python worker —
+    a frame made from a Python list does, on every scan. An empty one is
+    a zero-row range."""
+    import pandas as pd
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not rows:
+        return spark.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
+    # object dtype: no float detour for nullable 64-bit hashes
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
+    return spark.createDataFrame(pdf, schema)
+
+
 def _checkpoint_rdd(df: DataFrame):
     """The JVM RDD under a localCheckpoint frame, else None."""
     plan = df._jdf.queryExecution().logical()
@@ -116,23 +177,6 @@ def _release(df: DataFrame) -> None:
     rdd = _checkpoint_rdd(df)
     if rdd is not None:
         rdd.unpersist(False)
-
-
-def _materialize(frames: list[DataFrame]) -> None:
-    """Fill the lazy localCheckpoints among ``frames`` that no job has
-    filled yet, in ONE job (a job checkpoints every marked RDD its lineage
-    reaches); after that their lineage no longer reads their inputs."""
-    todo = [
-        df
-        for df in frames
-        if (rdd := _checkpoint_rdd(df)) is not None and not rdd.isCheckpointed()
-    ]
-    if not todo:
-        return
-    probe = todo[0].select(F.lit(0).alias("_"))
-    for df in todo[1:]:
-        probe = probe.unionByName(df.select(F.lit(0).alias("_")))
-    probe.write.format("noop").mode("overwrite").save()
 
 
 def _bands(hash_col, threshold: int = SIMHASH_THRESHOLD, bits: int = SIMHASH_BITS):
@@ -207,8 +251,8 @@ def distributed_election(
         .localCheckpoint(eager=True)
     )
     chain += [edges, und]
-    masters = spark.createDataFrame([], "urlhash string")
-    dups = spark.createDataFrame([], "urlhash string")
+    masters = _local_frame(spark, [], "urlhash string")
+    dups = _local_frame(spark, [], "urlhash string")
     stats = {"outer_rounds": 0, "doubling_steps": 0}
     n_und = und.count()
     while n_und > 0:
@@ -337,7 +381,7 @@ class CrawlEngine:
         # batch takes so no seed list ever materializes on the driver
         self.seeds = seeds if isinstance(seeds, DataFrame) else list(seeds)
         self.store = SnapshotStore(state_dir) if state_dir else None
-        self.link_meta_udf = make_link_meta_udf(self.cfg.whitelist)
+        self.links_meta_udf = make_links_meta_udf(self.cfg.whitelist)
         # fused text-plane UDF at the configured fingerprint width (32 =
         # reference parity; 64 = production plane, BASELINE.md scale notes)
         self.features_udf = make_crawl_features_udf(
@@ -372,14 +416,14 @@ class CrawlEngine:
         self.election_stats: dict[str, int] = {"outer_rounds": 0, "doubling_steps": 0}
         # incremental seen-set bloom: {"blob", "capacity", "covered"} —
         # valid only while covered == _frontier_rows (any path that grows
-        # the frontier without OR-ing a delta in, e.g. streaming seed
+        # the frontier without putting its keys in, e.g. streaming seed
         # appends, fails that check and forces a full rebuild)
         self._seen_sketch: dict | None = None
         # build/merge counters (tests + bench introspection)
         self.sketch_stats: dict[str, int] = {"full_builds": 0, "delta_merges": 0}
-        # the frame ledger: (wave_no at registration, frame) for every
-        # cached frame and every superseded checkpoint (see _hold)
-        self._frames: list[tuple[int, DataFrame]] = []
+        # the frame ledger: every wave frame and every superseded
+        # checkpoint, freed at the end of the wave (see _hold)
+        self._frames: list[DataFrame] = []
 
     # ------------------------------------------------------------- state
     def init_state(self, resume: bool = False) -> None:
@@ -411,52 +455,33 @@ class CrawlEngine:
                 eager=True
             )
             self._frontier_rows = self.frontier.count()
-            self.domains = spark.createDataFrame([], DOMAINS_SCHEMA)
-            self.exact_buckets = spark.createDataFrame(
-                [], "exhash string, master string"
-            )
-            self.sim_index = spark.createDataFrame(
-                [], "smhash long, master string, mgen int, mseq string"
-            )
-            self.wave_no = 0
-            return
-        rows = []
-        seen_hashes: set[str] = set()
-        for i, url in enumerate(self.seeds):
-            # dedup seeds by urlhash, first wins (the reference nap dedups
-            # on urlhash at add time, so trailing-slash / http-https twin
-            # seeds collapse to one frontier row)
-            h = S.urlhash(url)
-            if h in seen_hashes:
-                continue
-            seen_hashes.add(h)
-            rows.append(
-                {
-                    "urlhash": h,
-                    "url": url,
-                    "parent": None,
-                    "status": STATUS.NO_DOWN,
-                    "finish": FINISH.OK,
-                    "absdepth": 0,
-                    "reldepth": 0,
-                    "monodepth": 0,
-                    "dupdepth": 0,
-                    "words": {},
-                    "links": [],
-                    "exhash": None,
-                    "smhash": None,
-                    "gen": 0,
-                    "seq": S.seed_seq(i),
-                    "domain": S.domain_of(url),
-                    "retries": 0,
-                }
-            )
-        self.frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA)
-        self._frontier_rows = len(rows)
-        self.domains = spark.createDataFrame([], DOMAINS_SCHEMA)
-        self.exact_buckets = spark.createDataFrame([], "exhash string, master string")
-        self.sim_index = spark.createDataFrame(
-            [], "smhash long, master string, mgen int, mseq string"
+        else:
+            seed = {
+                **dict.fromkeys(("parent", "exhash", "smhash")),
+                **dict.fromkeys(("absdepth", "reldepth", "monodepth", "dupdepth"), 0),
+                "status": STATUS.NO_DOWN, "finish": FINISH.OK, "words": {},
+                "links": [], "gen": 0, "retries": 0,
+            }  # fmt: skip
+            rows = []
+            seen_hashes: set[str] = set()
+            for i, url in enumerate(self.seeds):
+                # dedup seeds by urlhash, first wins (the reference nap
+                # dedups on urlhash at add time, so trailing-slash /
+                # http-https twin seeds collapse to one frontier row)
+                h = S.urlhash(url)
+                if h in seen_hashes:
+                    continue
+                seen_hashes.add(h)
+                rows.append(
+                    {**seed, "urlhash": h, "url": url, "seq": S.seed_seq(i),
+                     "domain": S.domain_of(url)}
+                )  # fmt: skip
+            self.frontier = _local_frame(spark, rows, FRONTIER_SCHEMA)
+            self._frontier_rows = len(rows)
+        self.domains = _local_frame(spark, [], DOMAINS_SCHEMA)
+        self.exact_buckets = _local_frame(spark, [], "exhash string, master string")
+        self.sim_index = _local_frame(
+            spark, [], "smhash long, master string, mgen int, mseq string"
         )
         self.wave_no = 0
 
@@ -486,25 +511,15 @@ class CrawlEngine:
             .filter(F.col("_rn") == 1)
             .withColumn("_i", F.row_number().over(rank) - 1)
             .select(
-                F.col("m.urlhash").alias("urlhash"),
-                "url",
-                F.lit(None).cast("string").alias("parent"),
-                F.lit(STATUS.NO_DOWN).alias("status"),
-                F.lit(FINISH.OK).alias("finish"),
-                F.lit(0).alias("absdepth"),
-                F.lit(0).alias("reldepth"),
-                F.lit(0).alias("monodepth"),
-                F.lit(0).alias("dupdepth"),
-                F.create_map().cast("map<string,int>").alias("words"),
-                F.array().cast("array<string>").alias("links"),
-                F.lit(None).cast("string").alias("exhash"),
-                F.lit(None).cast("long").alias("smhash"),
-                F.lit(0).alias("gen"),
-                F.concat(
-                    F.lit(seq_prefix), F.format_string("%07d", F.col("_i"))
-                ).alias("seq"),
-                F.col("m.domain").alias("domain"),
-                F.lit(0).alias("retries"),
+                *_new_row(
+                    urlhash=F.col("m.urlhash"),
+                    url=F.col("url"),
+                    gen=F.lit(0),
+                    seq=F.concat(
+                        F.lit(seq_prefix), F.format_string("%07d", F.col("_i"))
+                    ),
+                    domain=F.col("m.domain"),
+                )
             )
         )
 
@@ -543,9 +558,7 @@ class CrawlEngine:
         cfg = self.cfg
         if cfg.wave_seconds is None and cfg.global_budget is None:
             return pending
-        p = pending.join(
-            self.domains.select("domain", "crawl_delay"), "domain", "left"
-        )
+        p = pending.join(self.domains.select("domain", "crawl_delay"), "domain", "left")
         p, order_keys = self._priority_keys(p)
         if cfg.wave_seconds is not None:
             delay = F.coalesce(F.col("crawl_delay"), F.lit(cfg.default_delay))
@@ -594,444 +607,407 @@ class CrawlEngine:
         return p
 
     # --------------------------------------------------------- wave body
-    def _finalize(self, df: DataFrame, **over) -> DataFrame:
-        cols = []
-        for name in _FCOLS:
-            cols.append((over[name] if name in over else F.col(name)).alias(name))
-        return df.select(*cols)
+    def run_wave(self, wave: DataFrame) -> tuple[DataFrame, dict]:
+        """Process one wave as ONE classification pipeline.
 
-    def run_wave(self, wave: DataFrame) -> tuple[DataFrame, DataFrame, dict]:
-        """Process one wave; returns (updated_rows, insert_rows, counters)."""
+        Every wave row gets a class ``_k`` from one CASE chain carried
+        through sift → robots gate → fetch join → retry/pre-filters →
+        exact dedup → features UDF, and its new frontier columns in the
+        same projection; the rows land in ONE eager checkpoint (``cls``,
+        no ``html``). The near-dup pass, the state-table appends, link
+        expansion and the wave delta all read that checkpoint, so no
+        later step re-runs the wave's joins or UDFs. Each Python UDF
+        appears once in the plan: a UDF under a CASE runs on every row
+        anyway, so the features UDF gets ``html`` only on content-master
+        rows (null elsewhere, which it parses as an empty page). Filtering
+        the masters and joining their features back would put the whole
+        classification subtree in the plan twice, with differently pruned
+        columns, so AQE could not reuse its exchanges.
+
+        Returns (delta, counters): ``delta`` is the eager checkpoint of
+        the wave's rows in their new state plus the wave's inserts
+        (FRONTIER_SCHEMA + ``_ins``), the frontier swap's and the store
+        commit's one input.
+        """
         cfg = self.cfg
-        updated: list[DataFrame] = []
-
-        # ---- F7 sift (workerpipe.py:42-57): finish=SIFTED, stays NO_DOWN
-        sift_cond = (
+        sifted = (
             (F.col("absdepth") > S.MAX_ABSDEPTH)
             | (F.col("reldepth") > S.MAX_RELDEPTH)
             | (F.col("monodepth") > S.MAX_MONODEPTH)
             | (F.col("dupdepth") > S.MAX_DUPDEPTH)
         )
-        updated.append(self._finalize(wave.filter(sift_cond), finish=F.lit(FINISH.SIFTED)))
-        live = wave.filter(~sift_cond)
 
         # ---- S3 domain init: robots fetch+parse for first-seen domains
-        trig = live.groupBy("domain").agg(
-            F.min(F.struct("gen", "seq")).alias("trig")
-        )
-        new_doms = trig.join(self.domains.select("domain"), "domain", "left_anti")
-        parsed_doms = (
-            new_doms.join(self.robots_src, "domain", "left")
-            .withColumn("r", self.robots_parse_udf(F.col("rstatus"), F.col("body")))
-            .select(
-                "domain",
-                "trig",
-                "body",
-                F.col("r.disallow_all").alias("disallow_all"),
-                F.col("r.allow_all").alias("allow_all"),
-                F.col("r.crawl_delay").alias("crawl_delay"),
-                F.col("r.sitemap_urls").alias("sitemap_urls"),
+        # (one row per new host), filled eagerly so the gate below reads a
+        # checkpoint whose size the planner knows
+        with self._phase("domains"):
+            trig = (
+                wave.filter(~sifted)
+                .groupBy("domain")
+                .agg(F.min(F.struct("gen", "seq")).alias("trig"))
             )
-        ).cache()
-        self._hold(parsed_doms)
-        dom_append = parsed_doms.select(
-            "domain",
-            "disallow_all",
-            "allow_all",
-            "crawl_delay",
-            F.col("body").alias("rules_body"),
-            "sitemap_urls",
-        )
-        self._append("domains", dom_append)
+            new_doms = trig.join(self.domains.select("domain"), "domain", "left_anti")
+            parsed = (
+                new_doms.join(self.robots_src, "domain", "left")
+                .withColumn("r", self.robots_parse_udf(F.col("rstatus"), F.col("body")))
+                .select("domain", "trig", F.col("body").alias("rules_body"), "r.*")
+                .withColumn(
+                    "_sm",
+                    self.links_meta_udf(
+                        F.col("sitemap_urls"), F.lit(None).cast("string")
+                    ),
+                )
+                .localCheckpoint(eager=True)
+            )
+            self._hold(parsed)
+            self._append("domains", parsed.select(*DOMAINS_SCHEMA.fieldNames()))
 
-        # ---- S4 sitemap seeding (frontier.py:165-176): fresh nurls at
-        # absdepth=1, parent = unhashed robots url, ordered before the
-        # trigger page's own children ('a' < 'b' < 'c')
-        sm_exp = parsed_doms.select(
-            "domain", "trig", F.posexplode("sitemap_urls").alias("pos", "sm_url")
-        )
-        sm_meta = sm_exp.withColumn(
-            "m", self.link_meta_udf(F.col("sm_url"), F.lit(None).cast("string"))
-        )
-        sitemap_inserts = sm_meta.select(
-            F.col("m.urlhash").alias("urlhash"),
-            F.col("sm_url").alias("url"),
-            F.concat(F.col("domain"), F.lit("/robots.txt")).alias("parent"),
-            F.lit(STATUS.NO_DOWN).alias("status"),
-            F.lit(FINISH.OK).alias("finish"),
-            F.lit(1).alias("absdepth"),
-            F.lit(0).alias("reldepth"),
-            F.lit(0).alias("monodepth"),
-            F.lit(0).alias("dupdepth"),
-            F.expr(_EMPTY_WORDS).alias("words"),
-            F.expr(_EMPTY_LINKS).alias("links"),
-            F.lit(None).cast("string").alias("exhash"),
-            F.lit(None).cast("long").alias("smhash"),
-            (F.col("trig.gen") + 1).alias("gen"),
-            _seq_child(F.col("trig.seq"), "a", F.col("pos")).alias("seq"),
-            F.col("m.domain").alias("domain"),
-            F.lit(0).alias("retries"),
-        )
+        # ---- classify: F7 sift, F8 robots gate, S2/J2 fetch, retry
+        # loopback, F9/F10/F11 pre-filters, J4/W2 exact dedup, T1-T5/F12/C4
+        # fused features — one plan, one checkpoint
+        with self._phase("classify"):
+            cls = self._classify(wave, sifted)
+            self._hold(cls)
+            master = F.col("_k").isin("good", "lowpost", "sitemap")
+            self._append(
+                "exact_buckets",
+                cls.filter(master).select("exhash", F.col("urlhash").alias("master")),
+            )
 
-        # ---- F8 robots gate (workerpipe.py:61-82)
-        gated = live.join(
-            self.domains.select("domain", "rules_body", "disallow_all", "allow_all"),
-            "domain",
-            "left",
-        ).withColumn(
+        # ---- J5 near-dup: vectorized FIFO scan or banded join + election
+        with self._phase("neardup"):
+            good = cls.filter(F.col("_k") == "good").select(
+                "urlhash", "gen", "seq", "smhash"
+            )
+            dups = self._simhash_stage(good)
+
+        # ---- the wave's delta: its rows' new state + its inserts
+        with self._phase("materialize"):
+            rows = cls.join(
+                dups.select("urlhash", F.lit(True).alias("_dup")), "urlhash", "left"
+            )
+            dup = F.coalesce(F.col("_dup"), F.lit(False))
+            expands = F.col("_k").isin("good", "sitemap") & ~dup
+            over = {
+                "finish": F.when(dup, FINISH.TOO_SIMILAR).otherwise(F.col("finish")),
+                "links": F.when(expands, F.transform("_ch", lambda c: c["urlhash"]))
+                .when(
+                    F.col("_rd").isNotNull(),
+                    F.concat(
+                        F.coalesce(F.col("links"), F.expr(_EMPTY_LINKS)),
+                        F.array(F.col("_rd.urlhash")),
+                    ),
+                )
+                .otherwise(F.col("links")),
+            }
+            updates = rows.select(*[over.get(c, F.col(c)).alias(c) for c in _FCOLS])
+            if cfg.links_out is not None:
+                self._wave_links = self._anchor_edges(
+                    rows.filter((F.col("_k") == "good") & ~dup)
+                )
+            inserts = self._new_urls(
+                self._sitemap_inserts(parsed),
+                self._redirect_children(cls),
+                self._link_children(rows.filter(expands)),
+            )
+            # finish-code histogram + insert count ride the checkpoint
+            # job as an Observation (accumulator-backed) — no extra pass
+            obs = Observation(f"wave-{self.wave_no}")
+            ins = F.col("_ins")
+            # the seen sketch's delta keys (_advance_seen_sketch), gathered
+            # on the driver only while a sketch is live to put them into
+            keys = (
+                [F.collect_list(F.when(ins, F.xxhash64("urlhash"))).alias("_keys")]
+                if self._seen_sketch is not None and cfg.seen_bloom_fpp is not None
+                else []
+            )
+            delta = (
+                updates.withColumn("_ins", F.lit(False))
+                .unionByName(inserts.withColumn("_ins", F.lit(True)))
+                .observe(
+                    obs,
+                    F.sum((~ins).cast("long")).alias("n_updates"),
+                    *[
+                        F.sum((~ins & (F.col("finish") == code)).cast("long")).alias(
+                            f"finish_{code}"
+                        )
+                        for code in (0, 1, 2, 3, 4, 5, 6, 7, 8, 255)
+                    ],
+                    F.sum(ins.cast("long")).alias("n_inserts"),
+                    *keys,
+                )
+                .localCheckpoint(eager=True)
+            )
+            self._hold(delta)
+        observed = dict(obs.get)
+        keys, n_inserts = observed.pop("_keys", None), observed.pop("n_inserts")
+        counters = {"wave": self.wave_no, "n_wave": self._wave_n}
+        counters.update({k: v for k, v in observed.items() if v})
+        counters["n_inserts"] = n_inserts
+        self._frontier_rows += n_inserts
+        self._advance_seen_sketch(keys)
+        return delta, counters
+
+    def _classify(self, wave: DataFrame, sifted) -> DataFrame:
+        """The wave's rows with class ``_k`` and their new frontier columns
+        (near-dup aside: a ``good`` row is finished OK here and flipped to
+        TOO_SIMILAR by the caller), plus the link metadata of pages that
+        expand (``_ch``: valid links in order), the redirect target
+        (``_rd``) and, with a links sink, the anchors; eagerly
+        checkpointed, without ``html``."""
+        cfg = self.cfg
+        gate = self.domains.select("domain", "rules_body", "disallow_all", "allow_all")
+        g = wave.join(gate, "domain", "left").withColumn(
             "_allowed",
             self.can_fetch_udf(
                 F.col("url"), F.col("rules_body"), F.col("disallow_all"), F.col("allow_all")
             ),
-        ).cache()
-        self._hold(gated)
-        updated.append(
-            self._finalize(
-                gated.filter(~F.col("_allowed")),
-                finish=F.lit(FINISH.NOT_ALLOWED),
-                status=F.lit(STATUS.IS_DOWN),
-            )
         )
-
-        # ---- S2/J2 fetch = equi-join against the pages corpus, or the
-        # live-fetch mapInPandas stage when a fetcher is injected (same
-        # output columns, so the rest of the wave plan is unchanged)
-        allowed = gated.filter(F.col("_allowed"))
+        # S2/J2 fetch = equi-join against the pages corpus, or the
+        # live-fetch stage when a fetcher is injected (same columns); only
+        # live, allowed urls are ever fetched (so a fetcher's plan runs
+        # the gate UDF a second time, over its input)
         if self.fetcher is None:
-            fetched = allowed.join(self.pages, "url", "left")
+            fetched = g.join(self.pages, "url", "left")
         else:
-            responses = self.fetcher(allowed.select("url").distinct())
-            fetched = allowed.join(responses, "url", "left")
+            responses = self.fetcher(
+                g.filter(~sifted & F.col("_allowed")).select("url").distinct()
+            )
+            fetched = g.join(responses, "url", "left")
         has_page = F.col("page_status").isNotNull()
         eff = F.when(F.col("retries") < F.col("retry_after"), 503).otherwise(
             F.col("page_status")
         )
-        fetched = fetched.withColumn("_eff", eff)
-
         # retry loopback (workerpipe.py:110-127 as next-wave deferral; the
         # (gen, seq) key keeps FIFO parity — schema.py)
-        retry_cond = F.coalesce(
-            has_page
-            & F.col("_eff").between(500, 511)
-            & (F.col("retries") < cfg.max_retries),
+        retry = F.coalesce(
+            has_page & eff.between(500, 511) & (F.col("retries") < cfg.max_retries),
             F.lit(False),
         )
-        updated.append(
-            self._finalize(
-                fetched.filter(retry_cond), retries=F.col("retries") + 1
-            )
-        )
-        proc = fetched.filter(~retry_cond)
-
-        # ---- F9/F10/F11 pre-filters (workerpipe.py:131-195)
-        is_bad = F.coalesce(F.col("_eff").isin(401, 403, 404), F.lit(False))
-        is_cache = (~has_page) | F.col("_eff").between(600, 606)
-        is_redir = F.coalesce(F.col("_eff").between(300, 399), F.lit(False))
         body_len = F.length(F.col("html"))
-        is_lowpre = (body_len < S.MIN_CONTENT_LEN) | (body_len > S.MAX_CONTENT_LEN)
-        klass = (
-            F.when(is_bad, "bad")
-            .when(is_cache, "cache")
-            .when(is_redir, "redir")
-            .when(is_lowpre, "lowpre")
+        k = (
+            F.when(sifted, "sift")
+            .when(~F.col("_allowed"), "deny")
+            .when(retry, "retry")
+            .when(F.coalesce(eff.isin(401, 403, 404), F.lit(False)), "bad")
+            .when(~has_page | eff.between(600, 606), "cache")
+            .when(F.coalesce(eff.between(300, 399), F.lit(False)), "redir")
+            .when(
+                (body_len < S.MIN_CONTENT_LEN) | (body_len > S.MAX_CONTENT_LEN),
+                "lowpre",
+            )
             .otherwise("content")
         )
-        proc = proc.withColumn("_k", klass).cache()
-        self._hold(proc)
-
-        updated.append(
-            self._finalize(
-                proc.filter(F.col("_k") == "bad"),
-                finish=F.lit(FINISH.BAD),
-                status=F.lit(STATUS.IS_DOWN),
+        content = F.col("_k") == "content"
+        c = (
+            fetched.withColumn("_k", k)
+            .withColumn(
+                "exhash",
+                F.when(content, exhash_col(F.col("html"))).otherwise(F.col("exhash")),
+            )
+            # J4 exact dedup against prior buckets ...
+            .join(
+                self.exact_buckets.select(
+                    F.col("exhash").alias("_xh"), F.col("master").alias("_exm")
+                ),
+                content & (F.col("exhash") == F.col("_xh")),
+                "left",
+            )
+            # ... and within the wave (W2): the FIFO-first row per exhash
+            .withColumn(
+                "_rk",
+                F.row_number().over(
+                    Window.partitionBy(
+                        content, F.when(content, F.col("exhash")).otherwise(F.col("urlhash"))
+                    ).orderBy("gen", "seq")
+                ),
+            )
+            .withColumn(
+                "_k",
+                F.when(
+                    content & (F.col("_exm").isNotNull() | (F.col("_rk") > 1)), "exact"
+                ).otherwise(F.col("_k")),
             )
         )
-        updated.append(
-            self._finalize(
-                proc.filter(F.col("_k") == "cache"),
-                finish=F.lit(FINISH.CACHE_ERROR),
-                status=F.lit(STATUS.IS_DOWN),
-            )
+        # T1/T2 parse + T3-T5 tokenize + F12 low-info + C4 simhash in one
+        # Arrow round trip, fed html only on the content masters
+        master = F.col("_k") == "content"
+        c = c.withColumn(
+            "feat",
+            self.features_udf(
+                F.col("url"), F.when(master, F.col("html")), F.col("content_type")
+            ),
         )
-        updated.append(
-            self._finalize(
-                proc.filter(F.col("_k") == "lowpre"),
-                finish=F.lit(FINISH.LOWINFO_PRE),
-                status=F.lit(STATUS.IS_DOWN),
-            )
-        )
-
-        # redirect expansion (workerpipe.py:163-186): child inherits depths
-        # (NOT +1) and value-copies of words/links; parent gets child hash
-        # appended to links and finish=REDIRECT
-        redirs = proc.filter(F.col("_k") == "redir")
-        rch_src = redirs.filter(F.col("redirect_to").isNotNull()).withColumn(
-            "m", self.link_meta_udf(F.col("redirect_to"), F.lit(None).cast("string"))
-        )
-        redirect_children = rch_src.select(
-            F.col("m.urlhash").alias("urlhash"),
-            F.col("redirect_to").alias("url"),
-            F.col("parent").alias("parent"),
-            F.lit(STATUS.NO_DOWN).alias("status"),
-            F.lit(FINISH.OK).alias("finish"),
-            "absdepth",
-            "reldepth",
-            "monodepth",
-            "dupdepth",
-            "words",
-            "links",
-            F.lit(None).cast("string").alias("exhash"),
-            F.lit(None).cast("long").alias("smhash"),
-            (F.col("gen") + 1).alias("gen"),
-            _seq_child(F.col("seq"), "b", F.lit(0)).alias("seq"),
-            F.col("m.domain").alias("domain"),
-            F.lit(0).alias("retries"),
-        )
-        updated.append(
-            self._finalize(
-                redirs,
-                finish=F.lit(FINISH.REDIRECT),
-                status=F.lit(STATUS.IS_DOWN),
-                links=F.when(
-                    F.col("redirect_to").isNotNull(),
-                    F.concat(
-                        F.coalesce(F.col("links"), F.expr(_EMPTY_LINKS)),
-                        F.array(
-                            self.link_meta_udf(
-                                F.col("redirect_to"), F.lit(None).cast("string")
-                            )["urlhash"]
-                        ),
-                    ),
-                ).otherwise(F.col("links")),
-            )
-        )
-
-        # ---- J4/W2 exact dedup: prior buckets join + within-wave window
-        content = proc.filter(F.col("_k") == "content").withColumn(
-            "exhash", exhash_col(F.col("html"))
-        )
-        cb = content.join(
-            self.exact_buckets.withColumnRenamed("master", "_exmaster"),
-            "exhash",
-            "left",
-        )
-        updated.append(
-            self._finalize(
-                cb.filter(F.col("_exmaster").isNotNull()),
-                finish=F.lit(FINISH.TOO_EXACT),
-                status=F.lit(STATUS.IS_DOWN),
-            )
-        )
-        fresh_ex = cb.filter(F.col("_exmaster").isNull()).withColumn(
-            "_rk",
-            F.row_number().over(Window.partitionBy("exhash").orderBy("gen", "seq")),
-        )
-        updated.append(
-            self._finalize(
-                fresh_ex.filter(F.col("_rk") > 1),
-                finish=F.lit(FINISH.TOO_EXACT),
-                status=F.lit(STATUS.IS_DOWN),
-            )
-        )
-        masters = fresh_ex.filter(F.col("_rk") == 1).drop("_rk", "_exmaster")
-        self._append(
-            "exact_buckets", masters.select("exhash", F.col("urlhash").alias("master"))
-        )
-
-        # ---- T1/T2 parse + T3-T5 tokenize + F12 low-info + C4 simhash,
-        # fused into one Arrow round trip (crawl_features_udf)
-        pp = masters.withColumn(
-            "feat", self.features_udf(F.col("url"), F.col("html"), F.col("content_type"))
-        ).cache()
-        self._hold(pp)
-        sm_rows = pp.filter(F.col("feat.sitemap"))
-        non_sm = pp.filter(~F.col("feat.sitemap"))
-        lowpost_cond = (
+        lowpost = (
             (F.col("feat.n_unique") < S.MIN_UNIQUE_WORDS)
             | (F.col("feat.max_count") < S.MIN_MAX_WORD_COUNT)
             | (F.col("feat.n_total") < S.MIN_WORDS)
         )
-        updated.append(
-            self._finalize(
-                non_sm.filter(lowpost_cond),
-                finish=F.lit(FINISH.LOWINFO_POST),
-                status=F.lit(STATUS.IS_DOWN),
-                words=crawl_words_col(F.col("feat")),
-            )
+        c = c.withColumn(
+            "_k",
+            F.when(master & F.col("feat.sitemap"), "sitemap")
+            .when(master & lowpost, "lowpost")
+            .when(master, "good")
+            .otherwise(F.col("_k")),
         )
-        good = non_sm.filter(~lowpost_cond).withColumn("smhash", F.col("feat.smhash"))
-
-        # ---- J5 near-dup: LSH vs master index, then within-wave chaining
-        sim_dup_hashes = self._simhash_stage(good).cache()
-        self._hold(sim_dup_hashes)
-        sim_dups = good.join(sim_dup_hashes, "urlhash", "left_semi")
-        updated.append(
-            self._finalize(
-                sim_dups,
-                finish=F.lit(FINISH.TOO_SIMILAR),
-                status=F.lit(STATUS.IS_DOWN),
-                words=crawl_words_col(F.col("feat")),
-            )
+        k = F.col("_k")
+        redirects = (k == "redir") & F.col("redirect_to").isNotNull()
+        c = c.withColumn(
+            "_lk",
+            self.links_meta_udf(
+                F.when(k.isin("good", "sitemap"), F.col("feat.links"))
+                .when(redirects, F.array(F.col("redirect_to")))
+                .otherwise(F.expr(_EMPTY_LINKS)),
+                F.col("url"),
+            ),
         )
-        ok_rows = good.join(sim_dup_hashes, "urlhash", "left_anti")
-
-        # ---- anchor-text link sink (CrawlConfig.links_out): admitted
-        # pages' anchor arrays (already parsed — pp is cached) zipped back
-        # into one edge row per <a href>. Written by run() after the wave
-        # materializes; schema == operators/linkgraph.EDGE_SCHEMA + wave.
-        if self.cfg.links_out is not None:
-            self._wave_links = ok_rows.select(
-                F.col("url").alias("src_url"),
-                F.col("domain").alias("src_domain"),
-                F.posexplode(
+        new = {
+            "status": F.when(k.isin("sift", "retry"), F.col("status")).otherwise(
+                F.lit(STATUS.IS_DOWN)
+            ),
+            # retry, good and sitemap rows stay OK
+            "finish": F.coalesce(
+                F.create_map(*[F.lit(x) for kv in _FINISH_OF.items() for x in kv])[k],
+                F.col("finish"),
+            ),
+            "words": F.when(
+                k.isin("lowpost", "good"), crawl_words_col(F.col("feat"))
+            ).otherwise(F.col("words")),
+            "smhash": F.when(k == "good", F.col("feat.smhash")).otherwise(
+                F.col("smhash")
+            ),
+            "retries": F.when(k == "retry", F.col("retries") + 1).otherwise(
+                F.col("retries")
+            ),
+        }
+        extra = [
+            "_k",
+            F.when(
+                k.isin("good", "sitemap"), F.filter("_lk", lambda x: x["valid"])
+            ).alias("_ch"),
+            F.when(redirects, F.col("_lk")[0]).alias("_rd"),
+        ]
+        if cfg.links_out is not None:
+            extra.append(
+                F.when(
+                    k == "good",
                     F.arrays_zip(
                         F.col("feat.anchor_dst"),
                         F.col("feat.anchor_txt"),
                         F.col("feat.anchor_dom"),
-                    )
-                ).alias("pos", "z"),
-            ).select(
-                "src_url",
-                "src_domain",
-                "pos",
-                F.col("z.anchor_dst").alias("dst_url"),
-                F.col("z.anchor_dom").alias("dst_domain"),
-                F.col("z.anchor_txt").alias("anchor_text"),
-                F.lit(self.wave_no).alias("wave"),
-            )
-
-        # ---- link expansion (W3 + C9/C10 + F4-F6) for OK content+sitemap
-        expand_src = ok_rows.select(
-            "urlhash", "url", "gen", "seq",
-            "absdepth", "reldepth", "monodepth", "dupdepth",
-            F.col("feat.links").alias("plinks"),
-        ).unionByName(
-            sm_rows.select(
-                "urlhash", "url", "gen", "seq",
-                "absdepth", "reldepth", "monodepth", "dupdepth",
-                F.col("feat.links").alias("plinks"),
-            )
-        )
-        ex = expand_src.select(
-            F.col("urlhash").alias("p_hash"),
-            F.col("url").alias("p_url"),
-            F.col("gen").alias("p_gen"),
-            F.col("seq").alias("p_seq"),
-            F.col("absdepth").alias("p_abs"),
-            F.col("reldepth").alias("p_rel"),
-            F.col("monodepth").alias("p_mono"),
-            F.col("dupdepth").alias("p_dup"),
-            F.posexplode("plinks").alias("pos", "child_url"),
-        ).withColumn("m", self.link_meta_udf(F.col("child_url"), F.col("p_url")))
-        valid = ex.filter(F.col("m.valid")).withColumn(
-            "_ord",
-            F.row_number().over(Window.partitionBy("p_hash").orderBy("pos")) - 1,
-        ).cache()
-        self._hold(valid)
-        ddelta = F.col("m.ddelta")
-        children = valid.select(
-            F.col("m.urlhash").alias("urlhash"),
-            F.col("child_url").alias("url"),
-            F.col("p_hash").alias("parent"),
-            F.lit(STATUS.NO_DOWN).alias("status"),
-            F.lit(FINISH.OK).alias("finish"),
-            (F.col("p_abs") + 1).alias("absdepth"),
-            F.when(ddelta == 1, F.col("p_rel") + 1).otherwise(0).alias("reldepth"),
-            F.when(ddelta >= 1, F.col("p_mono") + 1).otherwise(0).alias("monodepth"),
-            F.when(ddelta == 0, F.col("p_dup") + 1).otherwise(0).alias("dupdepth"),
-            F.expr(_EMPTY_WORDS).alias("words"),
-            F.expr(_EMPTY_LINKS).alias("links"),
-            F.lit(None).cast("string").alias("exhash"),
-            F.lit(None).cast("long").alias("smhash"),
-            (F.col("p_gen") + 1).alias("gen"),
-            _seq_child(F.col("p_seq"), "c", F.col("_ord")).alias("seq"),
-            F.col("m.domain").alias("domain"),
-            F.lit(0).alias("retries"),
-        )
-        plinks_agg = (
-            valid.groupBy("p_hash")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("pos", F.col("m.urlhash").alias("h")))
                     ),
-                    lambda x: x["h"],
-                ).alias("_links")
+                ).alias("_anchors")
+            )
+        return c.select(
+            *[new.get(n, F.col(n)).alias(n) for n in _FCOLS], *extra
+        ).localCheckpoint(eager=True)
+
+    def _sitemap_inserts(self, parsed: DataFrame) -> DataFrame:
+        """S4 sitemap seeding (frontier.py:165-176): fresh nurls at
+        absdepth=1, parent = unhashed robots url, ordered before the
+        trigger page's own children ('a' < 'b' < 'c')."""
+        return parsed.select(
+            "domain", "trig", F.posexplode("_sm").alias("pos", "m")
+        ).select(
+            *_new_row(
+                urlhash=F.col("m.urlhash"),
+                url=F.col("m.url"),
+                parent=F.concat(F.col("domain"), F.lit("/robots.txt")),
+                absdepth=F.lit(1),
+                gen=F.col("trig.gen") + 1,
+                seq=_seq_child(F.col("trig.seq"), "a", F.col("pos")),
+                domain=F.col("m.domain"),
             )
         )
 
-        def _with_links(df: DataFrame, extra_words=None) -> DataFrame:
-            j = df.join(plinks_agg, df.urlhash == plinks_agg.p_hash, "left")
-            over = {
-                "links": F.coalesce(F.col("_links"), F.expr(_EMPTY_LINKS)),
-                "status": F.lit(STATUS.IS_DOWN),
-                "finish": F.lit(FINISH.OK),
-            }
-            if extra_words is not None:
-                over["words"] = extra_words
-            return self._finalize(j, **over)
-
-        updated.append(_with_links(ok_rows, extra_words=crawl_words_col(F.col("feat"))))
-        updated.append(_with_links(sm_rows))
-
-        # ---- J1 candidate dedup + seen-set anti-join
-        candidates = sitemap_inserts.unionByName(redirect_children).unionByName(children)
-        first_seen = (
-            candidates.groupBy("urlhash")
-            .agg(
-                F.min_by(
-                    F.struct(*[c for c in _FCOLS if c != "urlhash"]),
-                    F.struct("gen", "seq"),
-                ).alias("r")
+    @staticmethod
+    def _redirect_children(cls: DataFrame) -> DataFrame:
+        """Redirect expansion (workerpipe.py:163-186): the child inherits
+        depths (NOT +1) and value-copies of words/links; the parent's own
+        row gets the child hash appended to links (run_wave)."""
+        keep = ("parent", "absdepth", "reldepth", "monodepth", "dupdepth", "words", "links")
+        return cls.filter(F.col("_rd").isNotNull()).select(
+            *_new_row(
+                urlhash=F.col("_rd.urlhash"),
+                url=F.col("_rd.url"),
+                gen=F.col("gen") + 1,
+                seq=_seq_child(F.col("seq"), "b", F.lit(0)),
+                domain=F.col("_rd.domain"),
+                **{c: F.col(c) for c in keep},
             )
-            .select("urlhash", "r.*")
-            .select(*_FCOLS)
         )
-        inserts = self._seen_anti_join(first_seen)
 
-        updates = updated[0]
-        for u in updated[1:]:
-            updates = updates.unionByName(u)
-        counters = {"wave": self.wave_no}
-        return updates, inserts, counters
+    @staticmethod
+    def _link_children(parents: DataFrame) -> DataFrame:
+        """Link expansion (W3 + C9/C10 + F4-F6) of OK content and sitemap
+        pages: one child per valid link, ordinal = its rank among the
+        page's valid links."""
+        ex = parents.select(
+            "urlhash", "gen", "seq", "absdepth", "reldepth", "monodepth", "dupdepth",
+            F.posexplode("_ch").alias("_ord", "c"),
+        )
+        ddelta = F.col("c.ddelta")
+        return ex.select(
+            *_new_row(
+                urlhash=F.col("c.urlhash"),
+                url=F.col("c.url"),
+                parent=F.col("urlhash"),
+                absdepth=F.col("absdepth") + 1,
+                reldepth=F.when(ddelta == 1, F.col("reldepth") + 1).otherwise(0),
+                monodepth=F.when(ddelta >= 1, F.col("monodepth") + 1).otherwise(0),
+                dupdepth=F.when(ddelta == 0, F.col("dupdepth") + 1).otherwise(0),
+                gen=F.col("gen") + 1,
+                seq=_seq_child(F.col("seq"), "c", F.col("_ord")),
+                domain=F.col("c.domain"),
+            )
+        )
+
+    def _anchor_edges(self, ok_rows: DataFrame) -> DataFrame:
+        """Anchor-text link sink (CrawlConfig.links_out): admitted pages'
+        anchor arrays (from the same parse) as one edge row per <a href>;
+        schema == operators/linkgraph.EDGE_SCHEMA + wave."""
+        return ok_rows.select(
+            F.col("url").alias("src_url"),
+            F.col("domain").alias("src_domain"),
+            F.posexplode("_anchors").alias("pos", "z"),
+        ).select(
+            "src_url",
+            "src_domain",
+            "pos",
+            F.col("z.anchor_dst").alias("dst_url"),
+            F.col("z.anchor_dom").alias("dst_domain"),
+            F.col("z.anchor_txt").alias("anchor_text"),
+            F.lit(self.wave_no).alias("wave"),
+        )
 
     # --------------------------------------------- seen-sketch maintenance
-    def _advance_seen_sketch(self, inserts: DataFrame, n_new: int) -> None:
-        """Keep the incremental seen-bloom valid after a wave lands: OR in
-        a delta bloom built over ONLY this wave's inserts (they're cached —
-        the frontier materialization already computed them). The delta is
-        built at the same (capacity, fpp) as the running filter, so the JVM
-        sizes it identically and the bit arrays merge exactly. When the
-        frontier outgrows the sized capacity the sketch is dropped instead
-        — the next wave does one full rebuild at factor x the new size."""
+    def _advance_seen_sketch(self, keys: list[int] | None) -> None:
+        """Keep the incremental seen-bloom valid after a wave lands: put
+        this wave's insert keys (xxhash64(urlhash), observed by the delta
+        checkpoint job) into the running filter on the driver — O(inserts)
+        and no Spark job; the bits set are exactly the sketch's putLong
+        bits. When the frontier outgrows the sized capacity the sketch is
+        dropped instead — the next wave does one full rebuild at factor x
+        the new size."""
         st = self._seen_sketch
-        if st is None or self.cfg.seen_bloom_fpp is None:
+        if st is None or keys is None:
             return
-        if n_new == 0:
+        if not keys:
             st["covered"] = self._frontier_rows  # nothing new; still valid
             return
-        if st["covered"] + n_new > st["capacity"]:
+        if st["covered"] + len(keys) > st["capacity"]:
             self._seen_sketch = None  # outgrew the sizing -> rebuild next wave
             return
-        from spacetime_crawler4_spark.functions.bloom import build_bloom, merge_blooms
+        import numpy as np
 
-        delta = build_bloom(
-            inserts.select(F.xxhash64(F.col("urlhash")).alias("k")),
-            "k",
-            expected=st["capacity"],
-            fpp=self.cfg.seen_bloom_fpp,
-        )
-        try:
-            st["blob"] = merge_blooms(st["blob"], delta)
-        except ValueError:  # parameter drift (never expected): stay safe
-            self._seen_sketch = None
-            return
-        st["covered"] += n_new
+        st["blob"] = st["blob"].with_keys(np.array(keys, dtype=np.int64))
+        st["covered"] += len(keys)
         self.sketch_stats["delta_merges"] += 1
 
     # ------------------------------------------------ seen-set anti-join
-    def _seen_anti_join(self, candidates: DataFrame) -> DataFrame:
-        """J1: candidates not yet in the frontier.
+    def _new_urls(self, *candidates: DataFrame) -> DataFrame:
+        """J1: the FIFO-first candidate row per urlhash, for the urlhashes
+        not yet in the frontier.
 
         With ``seen_bloom_fpp`` set, a broadcast bloom over the frontier's
         64-bit URL keys (built distributed, JVM tree-aggregated; probed in
@@ -1048,20 +1024,42 @@ class CrawlEngine:
         row (the urlhash is the "canonicalized + 64-bit-hashed URL" of the
         north rule).
         """
-        seen = self.frontier.select("urlhash")
-        if self.cfg.seen_bloom_fpp is None:
-            return candidates.join(seen, "urlhash", "left_anti")
+        maybe_seen = (
+            F.lit(True)
+            if self.cfg.seen_bloom_fpp is None
+            else self._seen_probe()(F.xxhash64(F.col("urlhash")))
+        )
+        cand = reduce(DataFrame.unionByName, candidates).withColumn("_maybe", maybe_seen)
+        rest = [c for c in cand.columns if c != "urlhash"]
+        first = (
+            cand.groupBy("urlhash")
+            .agg(F.min_by(F.struct(*rest), F.struct("gen", "seq")).alias("r"))
+            .select("urlhash", "r.*")
+        )
+        # both branches read the one dedup exchange (AQE reuses it), so the
+        # probe runs once per candidate
+        return (
+            first.filter(~F.col("_maybe"))
+            .unionByName(
+                first.filter(F.col("_maybe")).join(
+                    self.frontier.select("urlhash"), "urlhash", "left_anti"
+                )
+            )
+            .select(*_FCOLS)
+        )
+
+    def _seen_probe(self):
+        """The bloom probe UDF over the current frontier. Incremental
+        (SEEN_BLOOM_CAPACITY_FACTOR): a full O(frontier) build only when
+        no valid sketch covers the current frontier; between rebuilds each
+        wave puts in only its inserts (_advance_seen_sketch) — at a
+        10^10-row frontier this is the difference between re-scanning the
+        frontier every wave and touching only the new rows."""
         from spacetime_crawler4_spark.functions.bloom import (
             build_bloom,
             might_contain_udf,
         )
 
-        # incremental build (SEEN_BLOOM_CAPACITY_FACTOR): a full
-        # O(frontier) scan only when no valid sketch covers the current
-        # frontier; between rebuilds each wave ORs in an O(inserts) delta
-        # (run() loop) — at a 10^10-row frontier this is the difference
-        # between re-scanning the frontier every wave and touching only
-        # the new rows.
         st = self._seen_sketch
         if st is None or st["covered"] != self._frontier_rows:
             capacity = max(self._frontier_rows * SEEN_BLOOM_CAPACITY_FACTOR, 1024)
@@ -1077,12 +1075,7 @@ class CrawlEngine:
                 "covered": self._frontier_rows,
             }
             self.sketch_stats["full_builds"] += 1
-        probe = might_contain_udf(st["blob"])(F.xxhash64(F.col("urlhash")))
-        keyed = candidates.withColumn("_maybe_seen", probe).cache()
-        self._hold(keyed)
-        definitely_new = keyed.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        maybe = keyed.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        return definitely_new.unionByName(maybe.join(seen, "urlhash", "left_anti"))
+        return might_contain_udf(st["blob"])
 
     # ------------------------------------------------- simhash wave stage
     def _simhash_stage(self, good: DataFrame) -> DataFrame:
@@ -1207,12 +1200,18 @@ class CrawlEngine:
 
     def _append(self, table: str, rows: DataFrame) -> None:
         """Append a wave's rows to a state table: they are the table's
-        store delta, and the grown table is a LAZY checkpoint — filled by
-        the first job that reads it (the next wave's broadcast joins,
-        usually), or by _materialize before its inputs are released."""
+        store delta, and the grown table is an EAGER checkpoint of the
+        wave's checkpointed rows, so it never reads a released frame. (A
+        lazy one saves nothing: under AQE, localCheckpoint(eager=False)
+        runs the plan's shuffle stages at call time, its reader again.)"""
         self._delta[table] = rows
-        grown = getattr(self, table).unionByName(rows)
-        setattr(self, table, grown.coalesce(self._nparts).localCheckpoint(eager=False))
+        old = getattr(self, table)
+        self._hold(old)  # superseded; freed with the wave's frames
+        setattr(
+            self,
+            table,
+            old.unionByName(rows).coalesce(self._nparts).localCheckpoint(eager=True),
+        )
 
     # -------------------------------------- vectorized simhash fast path
     def _simhash_stage_vectorized(self, cand: DataFrame):
@@ -1246,11 +1245,13 @@ class CrawlEngine:
             self._sim_index_rows = None
             return None
         # plain collect, NOT limit().collect(): CollectLimit schedules scan
-        # partitions incrementally and would serialize the wave's (cached)
-        # fused-UDF job; the wave bound above already caps driver memory
+        # partitions incrementally; the wave bound above already caps
+        # driver memory
         rows = cand.collect()
         spark = self.spark
-        if self._sim_hashes is None:
+        if self._sim_hashes is None and self._sim_index_rows == 0:
+            self._sim_hashes = np.empty(0, dtype=np.uint64)
+        elif self._sim_hashes is None:
             # first vectorized wave after a resume: one bounded collect
             self._sim_hashes = np.array(
                 [r["smhash"] for r in self.sim_index.select("smhash").collect()],
@@ -1300,11 +1301,11 @@ class CrawlEngine:
         # the new masters are on the driver already: a local frame, so
         # landing the sim_index re-runs nothing upstream
         self._append_masters(
-            spark.createDataFrame(
-                [r for r in rows if r["urlhash"] not in dup_set], cand.schema
+            _local_frame(
+                spark, [r for r in rows if r["urlhash"] not in dup_set], cand.schema
             )
         )
-        return spark.createDataFrame([(u,) for u in sorted(dups)], "urlhash string")
+        return _local_frame(spark, [(u,) for u in sorted(dups)], "urlhash string")
 
     # ----------------------------------------------------------- the loop
     def run(self, resume: bool = False) -> DataFrame:
@@ -1314,125 +1315,114 @@ class CrawlEngine:
         waves_this_run = 0
         while waves_this_run < cfg.max_waves:
             waves_this_run += 1
-            pending = self.frontier.filter(
-                (F.col("status") == STATUS.NO_DOWN) & (F.col("finish") == FINISH.OK)
-            )
-            # per-wave phase walls (driver-side; ride the metrics JSON):
-            # select = budget windows + cut, run = the single frontier
-            # materialization (fetch/parse/dedup/expansion/anti-join),
-            # post = observations + links append + seen-sketch advance.
-            # The Amdahl decomposition of a crawl (BASELINE.md) reads
-            # straight off these.
-            _t0 = time.time()
-            wave = self._select_wave(pending).localCheckpoint(eager=True)
-            n = wave.count()
-            if n == 0:
-                _release(wave)  # nothing consumed it beyond the count
-                break
-            if self.last_wave is not None:
-                self._hold(self.last_wave)  # superseded previous wave frame
-            self.last_wave = wave
-            self._wave_n = n
-            _t1 = time.time()
-            state_before = [getattr(self, name) for name in APPEND_TABLES]
-            updates, inserts, counters = self.run_wave(wave)
-            raw_updates, raw_inserts = updates, inserts
-            # finish-code histogram rides the materialization job as an
-            # Observation (accumulator-backed) — no extra pass
-            from pyspark.sql import Observation
-
-            obs = Observation(f"wave-{self.wave_no}")
-            updates = updates.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_updates"),
-                *[
-                    F.sum((F.col("finish") == code).cast("long")).alias(f"finish_{code}")
-                    for code in (0, 1, 2, 3, 4, 5, 6, 7, 8, 255)
-                ],
-            )
-            # cached so the incremental seen-bloom delta below reads the
-            # wave's inserts from memory instead of recomputing the wave.
-            # The cache sits BELOW the observe node: a CollectMetrics above
-            # a cached subtree fires on every action, while caching the
-            # observed frame itself can skip metric collection entirely
-            # (obs.get then dies with a JVM assertion).
-            inserts_cached = inserts.cache()
-            self._hold(inserts_cached)
-            obs_ins = Observation(f"inserts-{self.wave_no}")
-            inserts = inserts_cached.observe(
-                obs_ins, F.count(F.lit(1)).alias("n_inserts")
-            )
-            untouched = self.frontier.join(
-                wave.select("urlhash"), "urlhash", "left_anti"
-            )
-            # the single materialization point of the wave (snapshot commit
-            # analogue): everything upstream lands here once
-            self._hold(self.frontier)  # superseded by the checkpoint below
-            self.frontier = (
-                untouched.unionByName(updates)
-                .unionByName(inserts)
-                .repartition(self._nparts, "urlhash")
-                .localCheckpoint(eager=True)
-            )
-            _t2 = time.time()
-            counters["n_wave"] = n
-            counters.update({k: v for k, v in obs.get.items() if v})
-            counters["n_inserts"] = obs_ins.get["n_inserts"]
-            # anchor-edge append AFTER the frontier materialization: pp's
-            # cache is hot, so this re-scans cached pages, not the parse.
-            # Per-wave parquet appends are the staging-table shape — at
-            # cluster scale this is an Iceberg append on (wave) partitions.
-            if self.cfg.links_out is not None and self._wave_links is not None:
-                self._wave_links.write.mode("append").parquet(self.cfg.links_out)
-                self._wave_links = None
-            self._frontier_rows += counters["n_inserts"]
-            self._advance_seen_sketch(inserts_cached, int(counters["n_inserts"]))
-            counters["wall_select_s"] = round(_t1 - _t0, 2)
-            counters["wall_run_s"] = round(_t2 - _t1, 2)
-            counters["wall_post_s"] = round(time.time() - _t2, 2)
-            self.metrics.append(counters)
-            if self.store is not None:
-                # the rows this wave touched: updated wave rows + inserts
-                # (disjoint urlhash sets within one wave) upsert the frontier
-                self._commit_state(
-                    {"frontier": raw_updates.unionByName(raw_inserts), **self._delta}
+            with self._wave_scope():
+                pending = self.frontier.filter(
+                    (F.col("status") == STATUS.NO_DOWN) & (F.col("finish") == FINISH.OK)
                 )
-            # the state tables this wave superseded are the last lazy readers
-            # of the previous wave's frames: fill them before the release
-            _materialize(state_before)
-            for df in state_before:
-                self._hold(df)
-            self._release_before(self.wave_no)
-            self.wave_no += 1
+                # per-wave phase walls (driver-side; ride the metrics JSON):
+                # select = budget windows + cut, run = run_wave + frontier
+                # swap, post = links append (BASELINE.md's Amdahl split)
+                _t0 = time.time()
+                with self._phase("select"):
+                    picked = Observation(f"select-{self.wave_no}")
+                    wave = (
+                        self._select_wave(pending)
+                        .observe(picked, F.count(F.lit(1)).alias("n"))
+                        .localCheckpoint(eager=True)
+                    )
+                    n = picked.get["n"]
+                if n == 0:
+                    _release(wave)  # nothing consumed it beyond the count
+                    break
+                if self.last_wave is not None:
+                    self._hold(self.last_wave)  # superseded previous wave frame
+                self.last_wave = wave
+                self._wave_n = n
+                _t1 = time.time()
+                delta, counters = self.run_wave(wave)
+                with self._phase("materialize"):
+                    untouched = self.frontier.join(
+                        wave.select("urlhash"), "urlhash", "left_anti"
+                    )
+                    self._hold(self.frontier)  # superseded by the checkpoint below
+                    self.frontier = (
+                        untouched.unionByName(delta.drop("_ins"))
+                        .repartition(self._nparts, "urlhash")
+                        .localCheckpoint(eager=True)
+                    )
+                _t2 = time.time()
+                with self._phase("post"):
+                    # per-wave parquet appends: the staging-table shape
+                    if cfg.links_out is not None and self._wave_links is not None:
+                        self._wave_links.write.mode("append").parquet(cfg.links_out)
+                        self._wave_links = None
+                counters["wall_select_s"] = round(_t1 - _t0, 2)
+                counters["wall_run_s"] = round(_t2 - _t1, 2)
+                counters["wall_post_s"] = round(time.time() - _t2, 2)
+                self.metrics.append(counters)
+                if self.store is not None:
+                    with self._phase("commit"):
+                        # the rows this wave touched: updated wave rows +
+                        # inserts (disjoint urlhash sets within one wave)
+                        # upsert the frontier
+                        self._commit_state({"frontier": delta.drop("_ins"), **self._delta})
+                self._release_frames()
+                self.wave_no += 1
         return self.frontier
+
+    def close(self) -> None:
+        """Release everything the engine holds in the block manager: the
+        frame ledger, the last wave, the frontier and the state tables.
+        The engine is unusable afterwards."""
+        self._release_frames()
+        for name in ("last_wave", "frontier", *APPEND_TABLES):
+            df = getattr(self, name)
+            if df is not None:
+                _release(df)
+            setattr(self, name, None)
+
+    # ------------------------------------------------ job attribution
+    @contextmanager
+    def _wave_scope(self):
+        """Tag every Spark job of this wave ``crawl-wave-<n>`` (AQE stage
+        and broadcast jobs inherit the tag); the caller's tags survive."""
+        sc = self.spark.sparkContext
+        tag = f"crawl-wave-{self.wave_no}"
+        had = tag in sc.getJobTags()
+        sc.addJobTag(tag)
+        try:
+            yield
+        finally:
+            if not had:
+                sc.removeJobTag(tag)
+
+    @contextmanager
+    def _phase(self, name: str):
+        """Describe the jobs of one wave phase as ``wave <n>: <name>``
+        (select | domains | classify | neardup | materialize | post |
+        commit); the caller's description is restored afterwards."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"wave {self.wave_no}: {name}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
 
     # ------------------------------------------------------ frame ledger
     def _hold(self, df: DataFrame) -> None:
-        """Register a cached frame or a SUPERSEDED checkpoint for release.
+        """Register a wave frame or a SUPERSEDED checkpoint for release.
+        Unreleased, a long crawl's checkpoints pile up in the block manager
+        until broadcasts fail. Every checkpoint a wave makes is eager, so
+        nothing reads a wave's frames after its commit (_release_frames)."""
+        self._frames.append(df)
 
-        Without release, a long crawl accumulates every wave's frontier /
-        wave / state-table / election checkpoints in the block manager
-        until broadcasts start failing ("Not enough memory to build and
-        broadcast") — the unbounded-storage defect a 10^10-URL frontier
-        cannot carry. Checkpoint blocks are NOT recomputable (lineage is
-        truncated), so a frame may go only after its last lazy reader has
-        materialized. The readers of a wave-k frame are the frontier
-        checkpoint, links append, seen-sketch delta and store commit of
-        wave k, and the state tables grown in wave k, which wave k+1 fills
-        (_materialize) before its _release_before frees wave k's frames.
-        """
-        self._frames.append((self.wave_no, df))
-
-    def _release_before(self, wave_no: int) -> None:
-        """The one release point: free every frame registered before
-        ``wave_no``. Called at the end of each wave, after its commit."""
-        keep = []
-        for registered, df in self._frames:
-            if registered < wave_no:
-                _release(df)
-            else:
-                keep.append((registered, df))
-        self._frames = keep
+    def _release_frames(self) -> None:
+        """The one release point: free every held frame. Called at the
+        end of each wave, after its commit."""
+        for df in self._frames:
+            _release(df)
+        self._frames = []
 
     def _commit_state(self, delta: dict[str, DataFrame]) -> None:
         """Commit this wave: a delta commit (O(touched rows)) normally; a

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# the exact columns the engine's fetch join expects (engine.run_wave)
+# the exact columns the engine's fetch join expects (engine._classify)
 FETCH_SCHEMA = StructType(
     [
         StructField("url", StringType()),

@@ -25,9 +25,11 @@ append-only tables are plain unions. On a real cluster every commit maps
 1:1 to ``MERGE INTO frontier`` (delta) / table rewrite (compaction) on
 Iceberg tables.
 
-A killed crawl resumes from the last committed wave: commits happen only
-between waves, so the loaded frontier is clean (any IN_USE rows are
-demoted to NO_DOWN for safety, mirroring frontier.py:212-242).
+Every file and folder of a commit is fsynced before the manifest swap, so
+a crash never leaves a manifest naming unsynced data. A killed crawl
+resumes from the last committed wave: commits happen only between waves,
+so the loaded frontier is clean (any IN_USE rows are demoted to NO_DOWN
+for safety, mirroring frontier.py:212-242).
 """
 
 from __future__ import annotations
@@ -44,6 +46,15 @@ from pyspark.sql.window import Window
 TABLES = ("frontier", "domains", "exact_buckets", "sim_index")
 # append-only tables: deltas are unions, no upsert key needed
 APPEND_TABLES = ("domains", "exact_buckets", "sim_index")
+
+
+def _fsync(path: str) -> None:
+    """fsync a file or a directory by path."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 class SnapshotStore:
@@ -113,9 +124,16 @@ class SnapshotStore:
             ]
         with open(os.path.join(tmp, "lineage.json"), "w") as f:
             json.dump({"dir": dirname, "tables": lineage}, f)
+        # durable before the manifest can name it: every file and folder
+        # of the commit, then the store root that holds the renamed folder
+        for d, _, files in os.walk(tmp):
+            for name in files:
+                _fsync(os.path.join(d, name))
+            _fsync(d)
         if os.path.exists(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
+        _fsync(self.root)
 
     def _prune(self, keep: set[str]) -> None:
         """Best-effort removal of commit dirs no longer referenced by the

@@ -2,15 +2,17 @@
 
 Three small UDFs beyond the shared text plane (operators/textplane.py):
 
-- ``link_meta_udf``    — per candidate link: reference URL identity hash
-                         (sha256 of scheme-less parts of the normalized URL,
-                         utils/__init__.py:25-35 — stdlib urlparse semantics,
-                         deliberately NOT the JVM ``parse_url``, whose
-                         path/params split differs), robots/politeness
-                         domain key, validity predicate, and the directory
-                         depth delta feeding the depth recurrences
-                         (nurl.py:31-58). Depth recurrences themselves stay
-                         JVM ``when/otherwise`` chains.
+- ``links_meta_udf``   — per page, over its whole link array: reference
+                         URL identity hash (sha256 of scheme-less parts of
+                         the normalized URL, utils/__init__.py:25-35 —
+                         stdlib urlparse semantics, deliberately NOT the
+                         JVM ``parse_url``, whose path/params split
+                         differs), robots/politeness domain key, validity
+                         predicate, and the directory depth delta feeding
+                         the depth recurrences (nurl.py:31-58). One call
+                         per page, so the per-link rows never exist before
+                         the JVM explodes them. Depth recurrences
+                         themselves stay JVM ``when/otherwise`` chains.
 - ``robots_parse_udf`` — robots.txt body -> (disallow_all, allow_all,
                          crawl_delay, sitemap_urls) via urllib.robotparser,
                          once per domain ever (crawler2/robots.py:10-60).
@@ -40,13 +42,16 @@ from spacetime_crawler4_spark.functions.urls import (
     rel_dirdepth,
 )
 
-LINK_META_SCHEMA = StructType(
-    [
-        StructField("urlhash", StringType()),
-        StructField("domain", StringType()),
-        StructField("valid", BooleanType()),
-        StructField("ddelta", IntegerType()),
-    ]
+LINK_META_SCHEMA = ArrayType(
+    StructType(
+        [
+            StructField("url", StringType()),
+            StructField("urlhash", StringType()),
+            StructField("domain", StringType()),
+            StructField("valid", BooleanType()),
+            StructField("ddelta", IntegerType()),
+        ]
+    )
 )
 
 ROBOTS_SCHEMA = StructType(
@@ -59,25 +64,33 @@ ROBOTS_SCHEMA = StructType(
 )
 
 
-def make_link_meta_udf(whitelist: tuple[str, ...] | None):
+def make_links_meta_udf(whitelist: tuple[str, ...] | None):
+    """(links: array<string>, parent_url: string) -> one LINK_META_SCHEMA
+    entry per link, in link order. A null parent gives ddelta -1."""
     wl = tuple(whitelist) if whitelist is not None else None
 
     @pandas_udf(LINK_META_SCHEMA)
-    def link_meta_udf(child_url: pd.Series, parent_url: pd.Series) -> pd.DataFrame:
-        hashes, domains, valids, deltas = [], [], [], []
-        for cu, pu in zip(child_url, parent_url):
-            hashes.append(urlhash(cu))
-            domains.append(domain_of(cu))
-            valids.append(is_valid_url(cu, wl))
-            if pu is None:
-                deltas.append(-1)
-            else:
-                deltas.append(rel_dirdepth(normalize_url(cu), normalize_url(pu)))
-        return pd.DataFrame(
-            {"urlhash": hashes, "domain": domains, "valid": valids, "ddelta": deltas}
-        )
+    def links_meta_udf(links: pd.Series, parent_url: pd.Series) -> pd.Series:
+        out = []
+        for ls, pu in zip(links, parent_url):
+            pn = None if pu is None else normalize_url(pu)
+            out.append(
+                [
+                    {
+                        "url": u,
+                        "urlhash": urlhash(u),
+                        "domain": domain_of(u),
+                        "valid": is_valid_url(u, wl),
+                        "ddelta": -1
+                        if pn is None
+                        else rel_dirdepth(normalize_url(u), pn),
+                    }
+                    for u in (() if ls is None else ls)
+                ]
+            )
+        return pd.Series(out)
 
-    return link_meta_udf
+    return links_meta_udf
 
 
 def _build_parser(status, body):

@@ -90,8 +90,8 @@ class BloomBlob:
         shift = (idx & np.int64(63)).astype(np.uint64)
         out &= (word >> shift) & np.uint64(1) != 0
 
-    def might_contain(self, values: np.ndarray) -> np.ndarray:
-        """Vectorized mightContainLong for both sketch versions.
+    def _bit_indices(self, values: np.ndarray):
+        """The sketch's bit index arrays for ``values``, one per hash.
 
         V1 (BloomFilterImpl): h1=murmur(v,0), h2=murmur(v,h1);
             bit_i = (int)(h1 + i*h2) sign-folded, mod bitSize, i=1..k.
@@ -99,9 +99,6 @@ class BloomBlob:
             combined = hi*2147483647L (+ lo per probe, LONG arithmetic),
             sign-folded, mod bitSize.
         """
-        if self.bit_size == 0:
-            return np.zeros(len(values), dtype=bool)
-        out = np.ones(len(values), dtype=bool)
         bit_size = np.int64(self.bit_size)
         h1 = murmur3_hash_long(values, np.uint32(self.seed)).astype(np.int32)
         h2 = murmur3_hash_long(values, h1.view(np.uint32)).astype(np.int32)
@@ -111,7 +108,7 @@ class BloomBlob:
                     h1.astype(np.int64) + np.int64(i) * h2.astype(np.int64)
                 ).astype(np.int32)
                 idx = np.where(combined < 0, ~combined, combined).astype(np.int64)
-                self._test_bits(idx % bit_size, out)
+                yield idx % bit_size
         else:
             with np.errstate(over="ignore"):
                 combined = h1.astype(np.int64) * np.int64(2147483647)
@@ -119,8 +116,26 @@ class BloomBlob:
                 for _ in range(self.num_hashes):
                     combined = combined + lo  # wrapping int64, like Java
                     idx = np.where(combined < 0, ~combined, combined)
-                    self._test_bits(idx % bit_size, out)
+                    yield idx % bit_size
+
+    def might_contain(self, values: np.ndarray) -> np.ndarray:
+        """Vectorized mightContainLong for both sketch versions."""
+        if self.bit_size == 0:
+            return np.zeros(len(values), dtype=bool)
+        out = np.ones(len(values), dtype=bool)
+        for idx in self._bit_indices(values):
+            self._test_bits(idx, out)
         return out
+
+    def with_keys(self, values: np.ndarray) -> "BloomBlob":
+        """A copy with ``values`` put in: the bits the sketch's putLong
+        sets, so the result equals the JVM filter over both key sets."""
+        bits = self.bits.copy()
+        for idx in self._bit_indices(np.asarray(values, dtype=np.int64)):
+            np.bitwise_or.at(
+                bits, idx >> 6, np.uint64(1) << (idx & np.int64(63)).astype(np.uint64)
+            )
+        return BloomBlob(self.version, self.num_hashes, self.seed, bits, self.bit_size)
 
 
 def deserialize_bloom(blob: bytes) -> BloomBlob:
@@ -159,31 +174,6 @@ def build_bloom(df: DataFrame, col: str, expected: int, fpp: float = 0.03) -> Bl
     return deserialize_bloom(bytes(bos.toByteArray()))
 
 
-def merge_blooms(a: BloomBlob, b: BloomBlob) -> BloomBlob:
-    """OR-merge two blooms built with IDENTICAL parameters (version,
-    num_hashes, seed, bit_size) — the incremental seen-set path: the
-    engine builds a delta bloom over only last wave's inserts (the JVM
-    sizes the sketch deterministically from (expected, fpp), so deltas
-    built at the same capacity share the parameter tuple) and ORs it
-    into the running filter instead of re-scanning the whole frontier.
-    Membership is preserved exactly: a key inserted into either operand
-    sets the same bit positions it would set in the union."""
-    if (a.version, a.num_hashes, a.seed, a.bit_size) != (
-        b.version,
-        b.num_hashes,
-        b.seed,
-        b.bit_size,
-    ):
-        raise ValueError("incompatible bloom parameters")
-    return BloomBlob(
-        version=a.version,
-        num_hashes=a.num_hashes,
-        seed=a.seed,
-        bits=a.bits | b.bits,
-        bit_size=a.bit_size,
-    )
-
-
 def might_contain_udf(blob: BloomBlob):
     """Arrow-batched probe over a LongType column."""
 
@@ -200,9 +190,9 @@ def url_key64(url_col: Column) -> Column:
 
     NOTE: the crawl engine's seen-set bloom does NOT use this — its exact
     anti-join key is the scheme-less ``urlhash``, so the bloom is keyed on
-    ``xxhash64(urlhash)`` directly (engine._seen_anti_join); keying on the
-    url would miss http/https twins of seen pages. This helper remains for
-    URL-keyed sketches where the url itself IS the identity."""
+    ``xxhash64(urlhash)`` directly (engine._new_urls / _seen_probe); keying
+    on the url would miss http/https twins of seen pages. This helper
+    remains for URL-keyed sketches where the url itself IS the identity."""
     from spacetime_crawler4_spark.functions.urls import normalize_url_col
 
     return F.xxhash64(normalize_url_col(url_col))

@@ -338,7 +338,7 @@ def hll_registers_by(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     per ingest batch and a later batch's registers fold in with
     ``hll_merge_registers`` without ever re-reading history. The exact
     pattern of the crawl store's incremental seen-sketch
-    (functions/bloom.merge_blooms), applied to cardinality state."""
+    (functions/bloom.BloomBlob.with_keys), applied to cardinality state."""
     bucket, rho = hll_register_expr(F.col(key_col))
     return (
         df.select(group_col, bucket.alias("bucket"), rho.alias("rho"))

@@ -54,33 +54,14 @@ def test_might_contain_udf_filters(spark):
     assert len(ids) < 2300                  # fpp keeps false positives low
 
 
-def test_merge_blooms_preserves_membership(spark):
-    """OR-merged delta blooms (engine's incremental seen-set path): every
-    key inserted into either operand is contained in the merge, and the
-    fp rate on absent keys stays near the sized fpp."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from spacetime_crawler4_spark.functions.bloom import build_bloom, merge_blooms
-
-    base = spark.range(0, 2000).select(F.col("id").alias("k"))
-    delta = spark.range(100_000, 102_000).select(F.col("id").alias("k"))
-    a = build_bloom(base, "k", expected=20_000, fpp=0.01)
-    b = build_bloom(delta, "k", expected=20_000, fpp=0.01)
-    m = merge_blooms(a, b)
-    assert m.might_contain(np.arange(0, 2000)).all()
-    assert m.might_contain(np.arange(100_000, 102_000)).all()
-    assert m.might_contain(np.arange(500_000, 510_000)).mean() < 0.02
-
-
-def test_merge_blooms_rejects_incompatible_params(spark):
-    import pytest
-    from pyspark.sql import functions as F
-
-    from spacetime_crawler4_spark.functions.bloom import build_bloom, merge_blooms
-
-    base = spark.range(0, 100).select(F.col("id").alias("k"))
-    a = build_bloom(base, "k", expected=1_000, fpp=0.01)
-    b = build_bloom(base, "k", expected=50_000, fpp=0.01)  # different sizing
-    with pytest.raises(ValueError, match="incompatible"):
-        merge_blooms(a, b)
+def test_with_keys_matches_jvm_build(spark):
+    """Driver-side puts (the engine's per-wave seen-set delta) set exactly
+    the bits the JVM sketch sets: base + put keys == one JVM build over
+    both key sets, bit for bit."""
+    base = spark.range(0, 2000).select(F.xxhash64("id").alias("k"))
+    delta = spark.range(100_000, 101_500).select(F.xxhash64("id").alias("k"))
+    whole = build_bloom(base.unionByName(delta), "k", expected=20_000, fpp=0.01)
+    keys = delta.toPandas()["k"].to_numpy(dtype=np.int64)
+    grown = build_bloom(base, "k", expected=20_000, fpp=0.01).with_keys(keys)
+    assert np.array_equal(grown.bits, whole.bits)
+    assert grown.might_contain(keys).all()

@@ -78,3 +78,39 @@ def test_compaction_expires_older_snapshots(spark, tmp_path):
         store.load_at(spark, 1)  # expired by compaction
     w, t, _ = store.load_at(spark, 2)
     assert w == 2 and _frontier_state(t) == {("a", 2)}
+
+
+def test_commit_syncs_data_before_manifest_swap(spark, tmp_path, monkeypatch):
+    """Every data file of a commit, its folder and the store root are
+    fsynced before the manifest is replaced (crash durability)."""
+    import os
+
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.path.basename(dst)))
+        return real_replace(src, dst)
+
+    root = tmp_path / "st"
+    store = SnapshotStore(str(root))
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    store.commit(0, _tables(spark, [("a", 0)], "w0"), [{"w": 0}])
+    store.commit_delta(1, _tables(spark, [("b", 0)], "w1"), [{"w": 1}])
+    swaps = [i for i, e in enumerate(events) if e == ("replace", "manifest.json")]
+    assert len(swaps) == 2
+    for commit_dir, swap in zip(("snap-00000", "delta-00001"), swaps):
+        synced = {e[1] for e in events[:swap] if e[0] == "fsync"}
+        data = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(root / commit_dir)
+            for f in fs
+        ]
+        assert any(p.endswith(".parquet") for p in data)
+        for p in data + [str(root / commit_dir), str(root)]:
+            assert os.stat(p).st_ino in synced, p
