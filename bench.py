@@ -61,7 +61,7 @@ HEADLINE = [
     # dedup_simhash_pairs (32-bit) is intentionally NOT benched: it is the
     # reference-parity plane, saturated by design (9.3% of all pairs are
     # hamming-close at 32 bits on sf0.1 — see BASELINE.md), and the engine
-    # refuses it above simhash32_banded_max. The production representative
+    # refuses it above SIMHASH32_BANDED_MAX. The production representative
     # is the 64-bit twin below, which ships the identical plan shape.
     "dedup_simhash64_pairs",
     "text_quality",

@@ -11,12 +11,20 @@ Each wave is ONE classification pipeline over the selected rows
 
 One class column is carried from sift to the features UDF and each row's
 new frontier columns are projected once (run_wave); the classified rows
-land in one eager checkpoint without html. Near-dup, the state-table
-appends, link expansion and the wave delta (new row states + inserts, a
-second eager checkpoint) read it; the frontier swap and the store commit
-read the delta. Every Spark job of wave n is tagged ``crawl-wave-<n>`` and
-described ``wave <n>: <phase>`` (select, domains, classify, neardup,
-materialize, post, commit).
+land in one eager checkpoint without html. Near-dup, link expansion and
+the wave delta (new row states + inserts, a second eager checkpoint) read
+it; the frontier swap and the store commit read the delta. Every Spark job
+of wave n is tagged ``crawl-wave-<n>`` and described ``wave <n>: <phase>``
+(select, domains, classify, neardup, materialize, post, commit).
+
+Engine state is two tables, both eager checkpoints and both committed:
+- ``frontier`` — one row per urlhash ever discovered; every row carries
+  its ``finish``, ``exhash`` and ``smhash``;
+- ``domains`` — robots rules per first-seen host, one row per host.
+The dedup master indexes are read-only views over the frontier, never
+stored: ``exact_buckets`` (J4: the rows with an exhash that are not exact
+copies) and ``sim_index`` (J5: the rows with a simhash that are not near
+copies).
 
 Scale design decisions (SURVEY.md §4):
 - fetch is an equi-join of the wave against the pages table (the corpus IS
@@ -37,11 +45,12 @@ Scale design decisions (SURVEY.md §4):
   saturates banded LSH buckets — _simhash_stage_vectorized), else the
   banded join with the distributed election (distributed_election);
   everything else stays distributed
-- frontier and state-table updates are copy-on-write unions per wave with
+- frontier and domains updates are copy-on-write unions per wave with
   eager localCheckpoint lineage truncation; every wave frame and every
   superseded checkpoint is released at one point, the end of the wave
-  (_hold / _release_frames), or by close(); store commits are O(touched-rows) DELTAS, one per wave, with periodic
-  compaction and merge-on-read load (Iceberg MOR, store.py)
+  (_hold / _release_frames), or by close(); store commits are
+  O(touched-rows) DELTAS, one per wave, with periodic compaction and
+  merge-on-read load (Iceberg MOR, store.py)
 """
 
 from __future__ import annotations
@@ -63,7 +72,7 @@ from spacetime_crawler4_spark.crawl.schema import (
     STATUS,
     CrawlConfig,
 )
-from spacetime_crawler4_spark.crawl.store import APPEND_TABLES, SnapshotStore
+from spacetime_crawler4_spark.crawl.store import TABLES, SnapshotStore
 from spacetime_crawler4_spark.crawl.udfs import (
     make_can_fetch_udf,
     make_links_meta_udf,
@@ -106,6 +115,15 @@ SEEN_BLOOM_CAPACITY_FACTOR = 4
 # only — 12 B/row) instead of the banded join, which saturates
 # combinatorially on 32-bit fingerprints. Read at call time.
 SIMHASH_NUMPY_CAP = 200_000
+# quadratic-cliff guard: a 32-bit fingerprint's band buckets saturate on
+# large corpora (measured: 9.3% of ALL pairs collide at just 5k docs —
+# dedup_simhash_bitwidth_density), so above this many rows (wave + master
+# index) the banded self-join would materialize a near-quadratic candidate
+# set. The engine REFUSES to run that plan and points at simhash_bits=64
+# (same plan shape, 3 orders of magnitude fewer candidates). Waves and
+# indexes under SIMHASH_NUMPY_CAP never reach it; the guard never fires at
+# bits=64. 0 disables it. Read at call time.
+SIMHASH32_BANDED_MAX = 100_000
 
 
 def _seq_child(seq_col, tag: str, ord_col):
@@ -392,8 +410,8 @@ class CrawlEngine:
         self.can_fetch_udf = make_can_fetch_udf(self.cfg.user_agent)
         self.metrics: list[dict] = []
         self.wave_no = 0
-        # this wave's append-table rows (domains / exact_buckets /
-        # sim_index), the O(delta) payload of the wave's store commit
+        # this wave's rows per state table (frontier upserts, new domains):
+        # the O(delta) payload of the wave's store commit
         self._delta: dict[str, DataFrame] = {}
         # cross-wave state keeps a bounded, stable partitioning: unioning
         # per-wave deltas would otherwise grow the partition count (and the
@@ -403,8 +421,6 @@ class CrawlEngine:
         self.last_wave: DataFrame | None = None
         self.frontier: DataFrame | None = None
         self.domains: DataFrame | None = None
-        self.exact_buckets: DataFrame | None = None
-        self.sim_index: DataFrame | None = None
         # driver-side master-hash mirror for the vectorized simhash fast
         # path: row count (None = unknown -> distributed plan) + the
         # hashes themselves (lazy; bounded by SIMHASH_NUMPY_CAP)
@@ -442,8 +458,6 @@ class CrawlEngine:
                     ),
                 )
                 self.domains = tables["domains"]
-                self.exact_buckets = tables["exact_buckets"]
-                self.sim_index = tables["sim_index"]
                 # size the vectorized-simhash gate; hashes collect lazily
                 self._sim_index_rows = self.sim_index.count()
                 self._sim_hashes = None
@@ -479,11 +493,34 @@ class CrawlEngine:
             self.frontier = _local_frame(spark, rows, FRONTIER_SCHEMA)
             self._frontier_rows = len(rows)
         self.domains = _local_frame(spark, [], DOMAINS_SCHEMA)
-        self.exact_buckets = _local_frame(spark, [], "exhash string, master string")
-        self.sim_index = _local_frame(
-            spark, [], "smhash long, master string, mgen int, mseq string"
-        )
         self.wave_no = 0
+
+    @property
+    def exact_buckets(self) -> DataFrame | None:
+        """J4 master index, a view over the frontier: ``(exhash, master)``
+        of every fetched content page that is not itself an exact copy
+        (one master per exhash)."""
+        if self.frontier is None:
+            return None
+        return self.frontier.filter(
+            F.col("exhash").isNotNull() & (F.col("finish") != FINISH.TOO_EXACT)
+        ).select("exhash", F.col("urlhash").alias("master"))
+
+    @property
+    def sim_index(self) -> DataFrame | None:
+        """J5 master index, a view over the frontier: ``(smhash, master,
+        mgen, mseq)`` of every fingerprinted page that is not itself a
+        near copy."""
+        if self.frontier is None:
+            return None
+        return self.frontier.filter(
+            F.col("smhash").isNotNull() & (F.col("finish") != FINISH.TOO_SIMILAR)
+        ).select(
+            "smhash",
+            F.col("urlhash").alias("master"),
+            F.col("gen").alias("mgen"),
+            F.col("seq").alias("mseq"),
+        )
 
     def seeds_frontier_df(
         self, seeds_df: DataFrame, seq_prefix: str = ""
@@ -614,20 +651,22 @@ class CrawlEngine:
         through sift → robots gate → fetch join → retry/pre-filters →
         exact dedup → features UDF, and its new frontier columns in the
         same projection; the rows land in ONE eager checkpoint (``cls``,
-        no ``html``). The near-dup pass, the state-table appends, link
-        expansion and the wave delta all read that checkpoint, so no
-        later step re-runs the wave's joins or UDFs. Each Python UDF
-        appears once in the plan: a UDF under a CASE runs on every row
-        anyway, so the features UDF gets ``html`` only on content-master
-        rows (null elsewhere, which it parses as an empty page). Filtering
-        the masters and joining their features back would put the whole
-        classification subtree in the plan twice, with differently pruned
-        columns, so AQE could not reuse its exchanges.
+        no ``html``). The near-dup pass, link expansion and the wave delta
+        all read that checkpoint, so no later step re-runs the wave's joins
+        or UDFs. Prior masters come from the ``exact_buckets`` /
+        ``sim_index`` views over the frontier as it stood before the wave;
+        this wave's masters enter them when its delta lands in the
+        frontier. Each Python UDF appears once in the plan: a UDF under a
+        CASE runs on every row anyway, so the features UDF gets ``html``
+        only on content-master rows (null elsewhere, which it parses as an
+        empty page). Filtering the masters and joining their features back
+        would put the whole classification subtree in the plan twice, with
+        differently pruned columns, so AQE could not reuse its exchanges.
 
         Returns (delta, counters): ``delta`` is the eager checkpoint of
         the wave's rows in their new state plus the wave's inserts
-        (FRONTIER_SCHEMA + ``_ins``), the frontier swap's and the store
-        commit's one input.
+        (FRONTIER_SCHEMA + ``_ins``), the frontier swap's input and the
+        frontier part of the store commit.
         """
         cfg = self.cfg
         sifted = (
@@ -660,7 +699,16 @@ class CrawlEngine:
                 .localCheckpoint(eager=True)
             )
             self._hold(parsed)
-            self._append("domains", parsed.select(*DOMAINS_SCHEMA.fieldNames()))
+            # an EAGER checkpoint never reads a released frame (a lazy one
+            # saves nothing: under AQE, localCheckpoint(eager=False) runs
+            # the plan's shuffle stages at call time and again when read)
+            self._delta["domains"] = parsed.select(*DOMAINS_SCHEMA.fieldNames())
+            self._hold(self.domains)  # superseded; freed with the wave's frames
+            self.domains = (
+                self.domains.unionByName(self._delta["domains"])
+                .coalesce(self._nparts)
+                .localCheckpoint(eager=True)
+            )
 
         # ---- classify: F7 sift, F8 robots gate, S2/J2 fetch, retry
         # loopback, F9/F10/F11 pre-filters, J4/W2 exact dedup, T1-T5/F12/C4
@@ -668,11 +716,6 @@ class CrawlEngine:
         with self._phase("classify"):
             cls = self._classify(wave, sifted)
             self._hold(cls)
-            master = F.col("_k").isin("good", "lowpost", "sitemap")
-            self._append(
-                "exact_buckets",
-                cls.filter(master).select("exhash", F.col("urlhash").alias("master")),
-            )
 
         # ---- J5 near-dup: vectorized FIFO scan or banded join + election
         with self._phase("neardup"):
@@ -1080,7 +1123,8 @@ class CrawlEngine:
     # ------------------------------------------------- simhash wave stage
     def _simhash_stage(self, good: DataFrame) -> DataFrame:
         """Returns a one-column DF (urlhash) of TOO_SIMILAR rows this wave;
-        appends new masters to the sim_index.
+        the wave's other ``good`` rows become masters (they enter the
+        ``sim_index`` view when the wave's delta lands in the frontier).
 
         Reference semantics (workerpipe.py:257-277): a page is a near-dup
         iff its simhash is within hamming<=5 of an EXISTING MASTER bucket
@@ -1102,27 +1146,27 @@ class CrawlEngine:
         if done is not None:
             return done
         bits = self.cfg.simhash_bits
-        if bits <= 32 and self.cfg.simhash32_banded_max > 0:
-            # quadratic-cliff guard (schema.CrawlConfig.simhash32_banded_max):
-            # saturated 32-bit band buckets make the self-join candidate
-            # set near-quadratic; refuse rather than silently running it
+        if bits <= 32 and SIMHASH32_BANDED_MAX > 0:
+            # quadratic-cliff guard (SIMHASH32_BANDED_MAX): saturated
+            # 32-bit band buckets make the self-join candidate set
+            # near-quadratic; refuse rather than silently running it
             idx_n = (
                 self._sim_index_rows
                 if self._sim_index_rows is not None
                 else self.sim_index.count()
             )
             total = (self._wave_n or 0) + idx_n
-            if total > self.cfg.simhash32_banded_max:
+            if total > SIMHASH32_BANDED_MAX:
                 raise RuntimeError(
                     f"simhash_bits=32 banded near-dup refused at wave "
                     f"{self.wave_no}: wave+index = {total} rows > "
-                    f"simhash32_banded_max={self.cfg.simhash32_banded_max}. "
+                    f"engine.SIMHASH32_BANDED_MAX={SIMHASH32_BANDED_MAX}. "
                     f"A saturated 32-bit fingerprint makes this self-join "
                     f"near-quadratic (BASELINE.md). Use simhash_bits=64 "
                     f"(production plane, same LSH shape), keep waves and "
                     f"index under SIMHASH_NUMPY_CAP for the linear "
-                    f"vectorized scan, or set simhash32_banded_max=0 to "
-                    f"override."
+                    f"vectorized scan, or set engine.SIMHASH32_BANDED_MAX=0 "
+                    f"to override."
                 )
         cband = cand.select(
             "urlhash", "gen", "seq", "smhash",
@@ -1183,35 +1227,7 @@ class CrawlEngine:
         within_dups, frames, self.election_stats = distributed_election(spark, pairs)
         for df in frames:
             self._hold(df)
-        self._append_masters(fresh.join(within_dups, "urlhash", "left_anti"))
         return vs_masters.unionByName(within_dups)
-
-    def _append_masters(self, new_masters: DataFrame) -> None:
-        """Append this wave's new near-dup masters to the sim_index."""
-        self._append(
-            "sim_index",
-            new_masters.select(
-                "smhash",
-                F.col("urlhash").alias("master"),
-                F.col("gen").alias("mgen"),
-                F.col("seq").alias("mseq"),
-            ),
-        )
-
-    def _append(self, table: str, rows: DataFrame) -> None:
-        """Append a wave's rows to a state table: they are the table's
-        store delta, and the grown table is an EAGER checkpoint of the
-        wave's checkpointed rows, so it never reads a released frame. (A
-        lazy one saves nothing: under AQE, localCheckpoint(eager=False)
-        runs the plan's shuffle stages at call time, its reader again.)"""
-        self._delta[table] = rows
-        old = getattr(self, table)
-        self._hold(old)  # superseded; freed with the wave's frames
-        setattr(
-            self,
-            table,
-            old.unionByName(rows).coalesce(self._nparts).localCheckpoint(eager=True),
-        )
 
     # -------------------------------------- vectorized simhash fast path
     def _simhash_stage_vectorized(self, cand: DataFrame):
@@ -1248,7 +1264,6 @@ class CrawlEngine:
         # partitions incrementally; the wave bound above already caps
         # driver memory
         rows = cand.collect()
-        spark = self.spark
         if self._sim_hashes is None and self._sim_index_rows == 0:
             self._sim_hashes = np.empty(0, dtype=np.uint64)
         elif self._sim_hashes is None:
@@ -1297,15 +1312,7 @@ class CrawlEngine:
                 m += 1
         self._sim_hashes = masters[:m]
         self._sim_index_rows = m
-        dup_set = set(dups)
-        # the new masters are on the driver already: a local frame, so
-        # landing the sim_index re-runs nothing upstream
-        self._append_masters(
-            _local_frame(
-                spark, [r for r in rows if r["urlhash"] not in dup_set], cand.schema
-            )
-        )
-        return _local_frame(spark, [(u,) for u in sorted(dups)], "urlhash string")
+        return _local_frame(self.spark, [(u,) for u in sorted(dups)], "urlhash string")
 
     # ----------------------------------------------------------- the loop
     def run(self, resume: bool = False) -> DataFrame:
@@ -1365,17 +1372,19 @@ class CrawlEngine:
                         # the rows this wave touched: updated wave rows +
                         # inserts (disjoint urlhash sets within one wave)
                         # upsert the frontier
-                        self._commit_state({"frontier": delta.drop("_ins"), **self._delta})
+                        self._delta["frontier"] = delta.drop("_ins")
+                        self._commit_state()
                 self._release_frames()
                 self.wave_no += 1
         return self.frontier
 
     def close(self) -> None:
         """Release everything the engine holds in the block manager: the
-        frame ledger, the last wave, the frontier and the state tables.
-        The engine is unusable afterwards."""
+        frame ledger, the last wave and the two state tables (the master
+        indexes are views over the frontier and hold nothing). The engine
+        is unusable afterwards."""
         self._release_frames()
-        for name in ("last_wave", "frontier", *APPEND_TABLES):
+        for name in ("last_wave", *TABLES):
             df = getattr(self, name)
             if df is not None:
                 _release(df)
@@ -1424,18 +1433,18 @@ class CrawlEngine:
             _release(df)
         self._frames = []
 
-    def _commit_state(self, delta: dict[str, DataFrame]) -> None:
-        """Commit this wave: a delta commit (O(touched rows)) normally; a
-        full base snapshot for the first commit and every
-        ``store.compact_every`` deltas (compaction — Iceberg MOR rewrite)."""
+    def _commit_state(self) -> None:
+        """Commit this wave: a delta commit of the wave's rows per state
+        table (O(touched rows)) normally; a full base snapshot of every
+        state table for the first commit and every ``store.compact_every``
+        deltas (compaction — Iceberg MOR rewrite)."""
         store = self.store
         if (
             store.latest_wave() is None
             or store.delta_count() + 1 > store.compact_every
         ):
-            tables = {name: getattr(self, name) for name in APPEND_TABLES}
-            store.commit(
-                self.wave_no, {"frontier": self.frontier, **tables}, self.metrics
-            )
+            tables = {name: getattr(self, name) for name in TABLES}
+            store.commit(self.wave_no, tables, self.metrics)
         else:
-            store.commit_delta(self.wave_no, delta, self.metrics)
+            deltas = {name: self._delta[name] for name in TABLES}
+            store.commit_delta(self.wave_no, deltas, self.metrics)

@@ -45,8 +45,6 @@ from spacetime_crawler4_spark.crawl.store import APPEND_TABLES, TABLES
 PARTITION_SPECS: dict[str, str] = {
     "frontier": "bucket(512, urlhash)",
     "domains": "",
-    "exact_buckets": "bucket(64, exhash)",
-    "sim_index": "",
 }
 
 def _sql_type(dt: DataType) -> str:
@@ -72,8 +70,6 @@ def schema_ddl(schema: StructType) -> str:
 TABLE_SCHEMAS: dict[str, str] = {
     "frontier": schema_ddl(FRONTIER_SCHEMA),
     "domains": schema_ddl(DOMAINS_SCHEMA),
-    "exact_buckets": "exhash string, master string",
-    "sim_index": "smhash bigint, master string, mgen int, mseq string",
 }
 
 
@@ -152,10 +148,11 @@ def render_commit_chain(
 
     ``commits`` — (wave, kind) with kind 'full' | 'delta', in commit
     order, mirroring store.py's snap-NNNNN / delta-NNNNN directories.
-    The first statement block creates the four tables; each full commit
-    overwrites + compacts + expires; each delta MERGEs the frontier and
-    INSERTs the append tables; every commit ends with its wave tag on the
-    frontier (the manifest pointer swap)."""
+    The first statement block creates the two state tables (frontier,
+    domains); each full commit overwrites + compacts + expires; each delta
+    MERGEs the frontier and INSERTs the append table (domains); every
+    commit ends with its wave tag on the frontier (the manifest pointer
+    swap)."""
     catalog_name = catalog.split(".", 1)[0]
     stmts = [create_table_sql(catalog, t) for t in TABLES]
     for wave, kind in commits:

@@ -171,19 +171,9 @@ class CrawlConfig:
     seen_bloom_fpp: float | None = 0.01
     # near-dup fingerprint width: 32 = reference parity (helpers/simhash.py
     # mod-2^32 crc64 lanes; saturates beyond ~10^5 docs — BASELINE.md); 64
-    # = production plane (full crc64 lanes, same vote rule, same LSH plan)
+    # = production plane (full crc64 lanes, same vote rule, same LSH plan;
+    # a 32-bit banded pass is refused above engine.SIMHASH32_BANDED_MAX)
     simhash_bits: int = 32
-    # quadratic-cliff guard (VERDICT r3 #5): a 32-bit fingerprint's band
-    # buckets saturate on large corpora (measured: 9.3% of ALL pairs
-    # collide at just 5k docs — dedup_simhash_bitwidth_density), so the
-    # banded self-join above this many rows (wave + master index) would
-    # materialize a near-quadratic candidate set. The engine REFUSES to
-    # run that plan and points at simhash_bits=64 (same plan shape, 3
-    # orders of magnitude fewer candidates). Waves and indexes under
-    # engine.SIMHASH_NUMPY_CAP never reach it (the vectorized scan is
-    # linear in wave x masters hashes). 0 disables the guard. Irrelevant
-    # at bits=64 — the guard never fires there.
-    simhash32_banded_max: int = 100_000
     # anchor-text link sink: when set, every wave appends the admitted
     # pages' anchor edges (src_url, src_domain, pos, dst_url, dst_domain,
     # anchor_text, wave) as parquet under this path — the crawl-time

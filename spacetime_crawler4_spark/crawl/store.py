@@ -15,8 +15,13 @@ rewrite the world):
                      commit and for periodic compaction.
 - ``commit_delta`` — a DELTA (``delta-NNNNN``) holding only the rows the
                      waves since the last commit touched: frontier rows
-                     are upserts keyed on urlhash; domains / exact_buckets
-                     / sim_index rows are pure appends. O(delta) write.
+                     are upserts keyed on urlhash; domains rows are pure
+                     appends. O(delta) write.
+
+The engine's state is two tables, ``frontier`` and ``domains`` (TABLES);
+every commit writes both and every load reads both. The exact- and
+near-dup master indexes are views over the frontier (each row carries its
+``finish``, ``exhash`` and ``smhash``), so they are never stored.
 
 Read path (``load_latest``) is merge-on-read, exactly Iceberg's MOR
 equality-delete semantics: frontier = base ∪ deltas with the LATEST
@@ -43,9 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-TABLES = ("frontier", "domains", "exact_buckets", "sim_index")
+TABLES = ("frontier", "domains")
 # append-only tables: deltas are unions, no upsert key needed
-APPEND_TABLES = ("domains", "exact_buckets", "sim_index")
+APPEND_TABLES = ("domains",)
 
 
 def _fsync(path: str) -> None:

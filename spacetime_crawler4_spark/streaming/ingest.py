@@ -143,6 +143,7 @@ def incremental_crawl_query(
     store. ``seeds_stream`` needs a single ``url: string`` column.
     """
     from spacetime_crawler4_spark.crawl.engine import CrawlEngine
+    from spacetime_crawler4_spark.crawl.store import TABLES
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         # NO driver round-trip for the seed list (VERDICT r3 #8): the
@@ -169,14 +170,7 @@ def incremental_crawl_query(
         eng.run(resume=False)
         if eng.store is not None:
             eng.store.commit(
-                eng.wave_no,
-                {
-                    "frontier": eng.frontier,
-                    "domains": eng.domains,
-                    "exact_buckets": eng.exact_buckets,
-                    "sim_index": eng.sim_index,
-                },
-                eng.metrics,
+                eng.wave_no, {t: getattr(eng, t) for t in TABLES}, eng.metrics
             )
 
     writer = seeds_stream.writeStream.foreachBatch(handle_batch).outputMode("update")

@@ -152,9 +152,9 @@ def test_seed_dedup_by_urlhash(spark, tmp_path):
 
 @pytest.mark.slow
 def test_simhash32_quadratic_guard_fires(spark, corpus_dir, monkeypatch):
-    """bits=32 + banded fallback above simhash32_banded_max must refuse
-    with a message pointing at simhash_bits=64 (VERDICT r3 #5), and the
-    same corpus at bits=64 (or guard disabled) must run."""
+    """bits=32 + banded fallback above engine.SIMHASH32_BANDED_MAX must
+    refuse with a message pointing at simhash_bits=64, and the same corpus
+    at bits=64 (or guard disabled) must run."""
     import pyarrow.parquet as pq
     import pytest
 
@@ -182,11 +182,13 @@ def test_simhash32_quadratic_guard_fires(spark, corpus_dir, monkeypatch):
 
     # numpy path off + a threshold the fixture certainly exceeds -> refuse
     monkeypatch.setattr(E, "SIMHASH_NUMPY_CAP", 0)
+    monkeypatch.setattr(E, "SIMHASH32_BANDED_MAX", 1)
     with pytest.raises(RuntimeError, match="simhash_bits=64"):
-        eng(simhash32_banded_max=1).run()
+        eng().run()
+    # and the production 64-bit plane is untouched by the guard
+    f_64 = eng(simhash_bits=64).run()
 
     # identical corpus: guard disabled runs the banded 32-bit plan fine
-    f_off = eng(simhash32_banded_max=0).run()
-    # and the production 64-bit plane is untouched by the guard
-    f_64 = eng(simhash_bits=64, simhash32_banded_max=1).run()
+    monkeypatch.setattr(E, "SIMHASH32_BANDED_MAX", 0)
+    f_off = eng().run()
     assert f_off.count() > 0 and f_64.count() > 0

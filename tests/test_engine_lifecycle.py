@@ -14,8 +14,9 @@ from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URL
 
 WAVES = 4
 # Spark jobs one fixture wave may run (AQE stage and broadcast jobs
-# included); the earlier branch-union wave plan ran 53
-WAVE_JOB_BUDGET = 25
+# included), without a store and with its first (full) commit; the
+# earlier branch-union wave plan ran 53 without a store
+WAVE_JOB_BUDGET = {"no_store": 18, "store": 20}
 PHASES = {"select", "domains", "classify", "neardup", "materialize", "post", "commit"}
 
 
@@ -78,12 +79,17 @@ def _jobs(spark) -> dict[int, tuple[str | None, set[str]]]:
     return out
 
 
-def test_wave_job_budget_and_phase_attribution(spark, corpus_dir):
-    """One fixture wave runs at most WAVE_JOB_BUDGET jobs under its tag,
-    each described by the engine phase that ran it; the caller's job
-    description and tags are restored afterwards."""
+@pytest.mark.parametrize("with_store", [False, True], ids=["no_store", "store"])
+def test_wave_job_budget_and_phase_attribution(
+    spark, corpus_dir, tmp_path, with_store
+):
+    """One fixture wave runs at most WAVE_JOB_BUDGET jobs under its tag
+    (the store commit's jobs included), each described by the engine
+    phase that ran it; the caller's job description and tags are restored
+    afterwards."""
     sc = spark.sparkContext
-    eng = _engine(spark, corpus_dir, max_waves=1)
+    state_dir = str(tmp_path / "state") if with_store else None
+    eng = _engine(spark, corpus_dir, state_dir, max_waves=1)
     eng.init_state()
     seen = set(_jobs(spark))
     sc.setJobDescription("caller")
@@ -98,7 +104,9 @@ def test_wave_job_budget_and_phase_attribution(spark, corpus_dir):
         for i, (desc, tags) in _jobs(spark).items()
         if i not in seen and "crawl-wave-0" in tags
     }
-    assert 0 < len(wave) <= WAVE_JOB_BUDGET, sorted(wave.values())
+    budget = WAVE_JOB_BUDGET["store" if with_store else "no_store"]
+    assert 0 < len(wave) <= budget, sorted(wave.values())
+    assert any(d == "wave 0: commit" for d in wave.values()) == with_store
     for desc in wave.values():
         assert desc is not None and desc.startswith("wave 0: "), desc
         assert desc.removeprefix("wave 0: ") in PHASES, desc
@@ -106,9 +114,10 @@ def test_wave_job_budget_and_phase_attribution(spark, corpus_dir):
 
 
 def test_close_releases_every_frame(spark, corpus_dir, tmp_path):
-    """close() frees the ledger, the last wave, the frontier and the state
-    tables: no persistent RDD the engine made is left (compared by id, so
-    other tests' frames freed meanwhile cannot mask a leak)."""
+    """close() frees the ledger, the last wave and the two state tables
+    (frontier, domains): no persistent RDD the engine made is left
+    (compared by id, so other tests' frames freed meanwhile cannot mask a
+    leak)."""
     jsc = spark.sparkContext._jsc
 
     def persistent() -> set[int]:

@@ -153,9 +153,11 @@ def test_append_tables_insert(iceberg_spark):
 
     spark = iceberg_spark
     cat = "warehouse.crawl"
-    spark.sql(create_table_sql(cat, "exact_buckets"))
+    spark.sql(create_table_sql(cat, "domains"))
     spark.sql(
-        "SELECT 'aa' AS exhash, 'h1' AS master"
-    ).createOrReplaceTempView("staged_eb")
-    spark.sql(append_sql(cat, "exact_buckets", "staged_eb"))
-    assert spark.sql(f"SELECT count(*) c FROM {cat}.exact_buckets").first()["c"] == 1
+        "SELECT 'http://a.test' AS domain, 0 AS disallow_all, 1 AS allow_all, "
+        "CAST(NULL AS double) AS crawl_delay, CAST(NULL AS string) AS rules_body, "
+        "array('http://a.test/s') AS sitemap_urls"
+    ).createOrReplaceTempView("staged_domains")
+    spark.sql(append_sql(cat, "domains", "staged_domains"))
+    assert spark.sql(f"SELECT count(*) c FROM {cat}.domains").first()["c"] == 1

@@ -31,9 +31,10 @@ def test_create_table_covers_every_store_table():
         assert "USING iceberg" in ddl
         assert "merge-on-read" in ddl
         assert ddl.count("(") == ddl.count(")")
-    # the big tables get bucketed partition specs on their join keys
+    # the big table gets a bucketed partition spec on its join key; the
+    # append table (one row per host) is unpartitioned
     assert "PARTITIONED BY (bucket(512, urlhash))" in create_table_sql(CAT, "frontier")
-    assert "PARTITIONED BY (bucket(64, exhash))" in create_table_sql(CAT, "exact_buckets")
+    assert "PARTITIONED BY" not in create_table_sql(CAT, "domains")
 
 
 def test_frontier_ddl_mirrors_spark_schema():
@@ -70,7 +71,7 @@ def test_commit_chain_renders_store_lifecycle():
         CAT, [(0, "full"), (1, "delta"), (2, "delta"), (3, "delta"), (4, "full")]
     )
     text = "\n---\n".join(chain)
-    # 4 creates, then per-commit blocks ending in wave tags
+    # one create per state table, then per-commit blocks ending in wave tags
     assert sum(s.startswith("CREATE TABLE") for s in chain) == len(TABLES)
     assert sum("MERGE INTO" in s for s in chain) == 3
     assert sum(s.startswith("INSERT OVERWRITE") for s in chain) == 2 * len(TABLES)

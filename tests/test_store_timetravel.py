@@ -18,8 +18,6 @@ def _tables(spark, fr_rows, tag):
     return {
         "frontier": _fr(spark, fr_rows),
         "domains": _aux(spark, tag),
-        "exact_buckets": _aux(spark, tag),
-        "sim_index": _aux(spark, tag),
     }
 
 

@@ -120,7 +120,7 @@ def main() -> None:
         try:
             # production dedup plane: the reference-parity 32-bit simhash is
             # refused by the engine's quadratic guard at mega waves (927k
-            # rows >> simhash32_banded_max — exactly the cliff the guard
+            # rows >> SIMHASH32_BANDED_MAX — exactly the cliff the guard
             # exists for), and a 10^6-URL deployment runs the 64-bit
             # fingerprint (same LSH plan shape, linear candidate volume).
             # The wave here also exceeds engine.SIMHASH_NUMPY_CAP, so this
