@@ -102,6 +102,13 @@ _FINISH_OF = {
     "exact": FINISH.TOO_EXACT,
     "lowpost": FINISH.LOWINFO_POST,
 }
+# false-positive rate of the broadcast-bloom prefilter of the URL-seen
+# anti-join (SURVEY §2.3 J1 / north rule), keyed on xxhash64(urlhash).
+# None runs the exact anti-join alone — the reference tests compare
+# against; results are identical either way, the bloom only prunes probe
+# rows (measured on the bench corpus: anti_join 51 s vs bloom 35 s). Read
+# at call time.
+SEEN_BLOOM_FPP = 0.01
 # incremental seen-bloom headroom: the filter is sized for this factor x
 # the frontier at build time, then each wave puts in only its inserts on
 # the driver (O(inserts), not O(frontier)); a full rebuild happens only
@@ -179,6 +186,11 @@ def _local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
     # object dtype: no float detour for nullable 64-bit hashes
     pdf = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
     return spark.createDataFrame(pdf, schema)
+
+
+def _sim_master():
+    """A frontier row that is in the J5 master index (``sim_index``)."""
+    return F.col("smhash").isNotNull() & (F.col("finish") != FINISH.TOO_SIMILAR)
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -450,25 +462,21 @@ class CrawlEngine:
             if loaded is not None:
                 wave, tables, metrics = loaded
                 self.wave_no = wave + 1
-                # demote any IN_USE rows (frontier.py:212-242 semantics)
-                self.frontier = tables["frontier"].withColumn(
-                    "status",
-                    F.when(F.col("status") == STATUS.IN_USE, STATUS.NO_DOWN).otherwise(
-                        F.col("status")
-                    ),
+                # demote any IN_USE rows (frontier.py:212-242 semantics);
+                # the merge-on-read plan runs once, into the checkpoint
+                self._set_frontier(
+                    tables["frontier"].withColumn(
+                        "status",
+                        F.when(
+                            F.col("status") == STATUS.IN_USE, STATUS.NO_DOWN
+                        ).otherwise(F.col("status")),
+                    )
                 )
                 self.domains = tables["domains"]
-                # size the vectorized-simhash gate; hashes collect lazily
-                self._sim_index_rows = self.sim_index.count()
-                self._sim_hashes = None
                 self.metrics = metrics
-                self._frontier_rows = self.frontier.count()
                 return
         if isinstance(self.seeds, DataFrame):
-            self.frontier = self.seeds_frontier_df(self.seeds).localCheckpoint(
-                eager=True
-            )
-            self._frontier_rows = self.frontier.count()
+            self._set_frontier(self.seeds_frontier_df(self.seeds))
         else:
             seed = {
                 **dict.fromkeys(("parent", "exhash", "smhash")),
@@ -495,6 +503,32 @@ class CrawlEngine:
         self.domains = _local_frame(spark, [], DOMAINS_SCHEMA)
         self.wave_no = 0
 
+    def _set_frontier(self, frontier: DataFrame) -> None:
+        """Make ``frontier`` the engine's frontier as ONE eager checkpoint
+        (the superseded one is freed with the next wave's frames). Its row
+        count and the size of the ``sim_index`` view ride the same job as
+        an Observation; the vectorized simhash pass re-collects its master
+        hashes from the view when it next runs."""
+        obs = Observation()
+        if self.frontier is not None:
+            self._hold(self.frontier)
+        self.frontier = frontier.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count(F.when(_sim_master(), 1)).alias("sim"),
+        ).localCheckpoint(eager=True)
+        self._frontier_rows, self._sim_index_rows = obs.get["rows"], obs.get["sim"]
+        self._sim_hashes = None
+
+    def add_seeds(self, seeds_df: DataFrame, seq_prefix: str) -> None:
+        """Append the seeds of a ``url: string`` DataFrame whose urlhash the
+        frontier does not hold yet, numbered under ``seq_prefix``
+        (seeds_frontier_df) — the path a stream of seed batches takes."""
+        new = self.seeds_frontier_df(seeds_df, seq_prefix).join(
+            self.frontier.select("urlhash"), "urlhash", "left_anti"
+        )
+        self._set_frontier(self.frontier.unionByName(new))
+
     @property
     def exact_buckets(self) -> DataFrame | None:
         """J4 master index, a view over the frontier: ``(exhash, master)``
@@ -513,9 +547,7 @@ class CrawlEngine:
         near copy."""
         if self.frontier is None:
             return None
-        return self.frontier.filter(
-            F.col("smhash").isNotNull() & (F.col("finish") != FINISH.TOO_SIMILAR)
-        ).select(
+        return self.frontier.filter(_sim_master()).select(
             "smhash",
             F.col("urlhash").alias("master"),
             F.col("gen").alias("mgen"),
@@ -761,7 +793,7 @@ class CrawlEngine:
             # on the driver only while a sketch is live to put them into
             keys = (
                 [F.collect_list(F.when(ins, F.xxhash64("urlhash"))).alias("_keys")]
-                if self._seen_sketch is not None and cfg.seen_bloom_fpp is not None
+                if self._seen_sketch is not None and SEEN_BLOOM_FPP is not None
                 else []
             )
             delta = (
@@ -1052,7 +1084,7 @@ class CrawlEngine:
         """J1: the FIFO-first candidate row per urlhash, for the urlhashes
         not yet in the frontier.
 
-        With ``seen_bloom_fpp`` set, a broadcast bloom over the frontier's
+        With ``SEEN_BLOOM_FPP`` set, a broadcast bloom over the frontier's
         64-bit URL keys (built distributed, JVM tree-aggregated; probed in
         a vectorized Arrow UDF — functions/bloom.py) splits candidates
         into definitely-new (skip the join entirely; blooms have no false
@@ -1069,7 +1101,7 @@ class CrawlEngine:
         """
         maybe_seen = (
             F.lit(True)
-            if self.cfg.seen_bloom_fpp is None
+            if SEEN_BLOOM_FPP is None
             else self._seen_probe()(F.xxhash64(F.col("urlhash")))
         )
         cand = reduce(DataFrame.unionByName, candidates).withColumn("_maybe", maybe_seen)
@@ -1110,7 +1142,7 @@ class CrawlEngine:
                 self.frontier.select(F.xxhash64(F.col("urlhash")).alias("k")),
                 "k",
                 expected=capacity,
-                fpp=self.cfg.seen_bloom_fpp,
+                fpp=SEEN_BLOOM_FPP,
             )
             self._seen_sketch = st = {
                 "blob": blob,

@@ -161,14 +161,6 @@ class CrawlConfig:
     priority_table: str | None = None
     max_retries: int = MAX_RETRIES
     max_waves: int = 64
-    # broadcast-bloom prefilter for the URL-seen anti-join (SURVEY §2.3
-    # J1 / north rule), keyed on xxhash64(urlhash) and kept incrementally
-    # (engine.SEEN_BLOOM_CAPACITY_FACTOR). None disables (exact anti-join
-    # only — results are identical either way; the bloom only prunes
-    # probe rows). Default ON since round 4: the measured bench-corpus
-    # crawl is ~1.4x faster with the prefilter (anti_join 51 s vs bloom
-    # 35 s), and the north rule names the broadcast bloom seen-set.
-    seen_bloom_fpp: float | None = 0.01
     # near-dup fingerprint width: 32 = reference parity (helpers/simhash.py
     # mod-2^32 crc64 lanes; saturates beyond ~10^5 docs — BASELINE.md); 64
     # = production plane (full crc64 lanes, same vote rule, same LSH plan;

@@ -137,12 +137,13 @@ def incremental_crawl_query(
     """Drive the batch crawl engine from a stream of seed-URL batches.
 
     Each micro-batch resumes the engine from the snapshot store, appends
-    the new seeds to the frontier, and runs waves to quiescence — state
+    the new seeds to the frontier, runs waves to quiescence and frees the
+    engine's frames (``CrawlEngine.close``) and its seed checkpoint — state
     durability and exactly-once-ness come from the store's atomic commits
     (Iceberg snapshot transactions in production), not from Spark's state
     store. ``seeds_stream`` needs a single ``url: string`` column.
     """
-    from spacetime_crawler4_spark.crawl.engine import CrawlEngine
+    from spacetime_crawler4_spark.crawl.engine import CrawlEngine, _release
     from spacetime_crawler4_spark.crawl.store import TABLES
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -153,25 +154,24 @@ def incremental_crawl_query(
         # frontier append is a left_anti join + union. A 10^7-seed batch
         # costs one executor-side sort, zero driver memory.
         seeds_df = batch_df.select("url").localCheckpoint(eager=True)
-        if seeds_df.isEmpty():
-            return
-        eng = CrawlEngine(
-            spark, pages_path, robots_path, seeds_df, config, state_dir=state_dir
-        )
-        eng.init_state(resume=True)
-        if eng.store.latest_wave() is not None:
-            new_seeds = eng.seeds_frontier_df(
-                seeds_df, seq_prefix=f"b{batch_id:07d}."
-            ).join(eng.frontier.select("urlhash"), "urlhash", "left_anti")
-            eng.frontier = eng.frontier.unionByName(new_seeds).localCheckpoint(
-                eager=True
+        eng = None
+        try:
+            if seeds_df.isEmpty():
+                return
+            eng = CrawlEngine(
+                spark, pages_path, robots_path, seeds_df, config, state_dir=state_dir
             )
-            eng._frontier_rows = eng.frontier.count()
-        eng.run(resume=False)
-        if eng.store is not None:
+            eng.init_state(resume=True)
+            if eng.store.latest_wave() is not None:
+                eng.add_seeds(seeds_df, seq_prefix=f"b{batch_id:07d}.")
+            eng.run()
             eng.store.commit(
                 eng.wave_no, {t: getattr(eng, t) for t in TABLES}, eng.metrics
             )
+        finally:
+            if eng is not None:
+                eng.close()
+            _release(seeds_df)
 
     writer = seeds_stream.writeStream.foreachBatch(handle_batch).outputMode("update")
     if checkpoint_dir:

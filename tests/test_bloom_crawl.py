@@ -1,23 +1,27 @@
 """The broadcast-bloom seen-set prefilter must not change crawl results:
-engine with seen_bloom_fpp on == the plain-anti-join engine, row for row."""
+engine with a SEEN_BLOOM_FPP == the plain-anti-join engine, row for row."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from spacetime_crawler4_spark.crawl import engine as E
 from spacetime_crawler4_spark.crawl.engine import CrawlEngine
 from spacetime_crawler4_spark.crawl.schema import CrawlConfig
 from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
 
 
 @pytest.mark.slow
-def test_bloom_prefilter_is_transparent(spark, corpus_dir, engine_frontier):
+def test_bloom_prefilter_is_transparent(
+    spark, corpus_dir, engine_frontier, monkeypatch
+):
+    monkeypatch.setattr(E, "SEEN_BLOOM_FPP", 0.03)
     eng = CrawlEngine(
         spark,
         f"{corpus_dir}/pages.parquet",
         f"{corpus_dir}/robots.parquet",
         SEED_URLS,
-        CrawlConfig(whitelist=FIXTURE_WHITELIST, seen_bloom_fpp=0.03),
+        CrawlConfig(whitelist=FIXTURE_WHITELIST),
     )
     bloom_state = {r["urlhash"]: r.asDict() for r in eng.run().collect()}
     _e, frontier = engine_frontier
@@ -96,17 +100,18 @@ def _write_twin_corpus(out_dir: str) -> None:
     pq.write_table(robots, f"{out_dir}/robots.parquet")
 
 
-def test_bloom_scheme_twin_later_wave(spark, tmp_path):
+def test_bloom_scheme_twin_later_wave(spark, tmp_path, monkeypatch):
     out = str(tmp_path)
     _write_twin_corpus(out)
 
     def run(fpp):
+        monkeypatch.setattr(E, "SEEN_BLOOM_FPP", fpp)
         eng = CrawlEngine(
             spark,
             f"{out}/pages.parquet",
             f"{out}/robots.parquet",
             [f"http://{_TWIN_HOST}/"],
-            CrawlConfig(whitelist=(".t.test",), seen_bloom_fpp=fpp),
+            CrawlConfig(whitelist=(".t.test",)),
         )
         return eng.run().collect()
 

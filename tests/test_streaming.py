@@ -73,7 +73,9 @@ def test_windowed_event_counts(spark, drops_dir, tmp_path):
 @pytest.mark.slow
 def test_incremental_crawl_foreachbatch(spark, corpus_dir, tmp_path, engine_frontier):
     """Seeds arriving as a stream reproduce the batch crawl's final
-    frontier (same corpus, same seeds, state in the snapshot store)."""
+    frontier (same corpus, same seeds, state in the snapshot store), and
+    every micro-batch frees the frames it made: no persistent RDD made
+    during the query survives it (compared by id)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -82,9 +84,12 @@ def test_incremental_crawl_foreachbatch(spark, corpus_dir, tmp_path, engine_fron
 
     seeds_dir = tmp_path / "seeds"
     seeds_dir.mkdir()
-    pq.write_table(
-        pa.table({"url": list(SEED_URLS)}), str(seeds_dir / "batch0.parquet")
-    )
+    # the second batch re-sends the seeds: the resumed engine appends
+    # none of them and the frontier stays the batch crawl's
+    for b in range(2):
+        pq.write_table(
+            pa.table({"url": list(SEED_URLS)}), str(seeds_dir / f"batch{b}.parquet")
+        )
     seeds_stream = (
         spark.readStream.schema("url string").option("maxFilesPerTrigger", 1).parquet(str(seeds_dir))
     )
@@ -97,11 +102,18 @@ def test_incremental_crawl_foreachbatch(spark, corpus_dir, tmp_path, engine_fron
         config=CrawlConfig(whitelist=FIXTURE_WHITELIST),
         checkpoint_dir=str(tmp_path / "ck3"),
     )
+    jsc = spark.sparkContext._jsc
+
+    def persistent() -> set[int]:
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
     q = writer.trigger(availableNow=True).start()
     # returns False on timeout — fail HERE with a clear message instead of
     # comparing a half-written frontier below (seen once when a co-tenant
     # bench starved the JVM: TaskMemoryManager page-allocation stalls)
     assert q.awaitTermination(1800), "streaming crawl did not finish in 30min"
+    assert not persistent() - before
 
     from spacetime_crawler4_spark.crawl.store import SnapshotStore
 

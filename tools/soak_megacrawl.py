@@ -2,18 +2,16 @@
 """Mega-crawl scaling soak: the FULL crawl engine at a ~10^6-URL frontier,
 measured at two parallelism levels (N and 4N cores).
 
-Why this exists (BASELINE.md "Full-crawl scaling decomposition"): the
-bench's always-on scaling gate measures the wave KERNEL (the parallel
-per-page work), because at the standard 24k/96k corpora the full crawl is
-dominated by a constant ~15-20 s/wave serial floor (sketch build, robots
-gate, election rounds, frontier checkpoint) and two-level efficiency reads
-0.29-0.34 — an Amdahl artifact of tiny waves, argued (not measured) to
-vanish at north-rule wave sizes. This tool measures it: at ~10^6 URLs the
-waves are 10x-40x bigger while the per-wave floor stays constant, so the
-full-engine efficiency should converge toward the kernel bound (>=0.8).
-One run is ~25-40 min of machine time — a recorded one-off soak
-(BASELINE.md), deliberately NOT part of the driver's per-round bench
-budget (SPARK_GRAFT_BENCH_BUDGET_S=450).
+Why this exists (BASELINE.md "Full-crawl scaling decomposition"): at the
+standard 24k/96k corpora the full crawl is dominated by a constant
+~15-20 s/wave serial floor (sketch build, robots gate, election rounds,
+frontier checkpoint) and two-level efficiency reads 0.29-0.34 — an Amdahl
+artifact of tiny waves, argued (not measured) to vanish at north-rule wave
+sizes. This tool measures it: at ~10^6 URLs the waves are 10x-40x bigger
+while the per-wave floor stays constant, so the full-engine efficiency
+should converge toward the wave-kernel bound (>=0.8). One run is ~25-40
+min of machine time — a recorded one-off soak (BASELINE.md), not part of
+the perfbench gate.
 
 Usage:
     python tools/soak_megacrawl.py [--pages 1000000] [--lo 4] [--hi 16]
@@ -32,19 +30,17 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import bench  # noqa: E402  (repo-root bench helpers: _crawl_once, _stop)
-
 MEGA_CORPUS = os.environ.get("SPARK_GRAFT_MEGA_CORPUS", "/tmp/stc4_mega_corpus_v1")
 
 
 def _mk_spark(cores: int):
-    """Like bench._mk_spark but sized for 10^6-row waves: a bigger JVM heap
-    (the per-wave localCheckpoint materializes the frontier; the 8g default
+    """A local session sized for 10^6-row waves: a bigger JVM heap (the
+    per-wave localCheckpoint materializes the frontier; the 8g default
     OOMed at wave 2), and a FIXED shuffle-partition count at both levels —
-    shuffle_partitions=cores (the kernel bench's choice) puts ~250k rows in
-    every shuffle/window task at local[4], and on a real two-size cluster
-    the partitioning would not change with executor count either. Same
-    plan, same splits, different cores: the clean scaling comparison."""
+    shuffle_partitions=cores puts ~250k rows in every shuffle/window task
+    at local[4], and on a real two-size cluster the partitioning would not
+    change with executor count either. Same plan, same splits, different
+    cores: the clean scaling comparison."""
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
     from spacetime_crawler4_spark.session import get_spark
 
@@ -61,6 +57,48 @@ def _mk_spark(cores: int):
     )
     spark.sparkContext.setLogLevel("FATAL")
     return spark
+
+
+def _stop(spark) -> None:
+    """Stop a session without polluting stderr: the Python accumulator
+    server can lose a race with late task-completion events during
+    shutdown, and the DAGScheduler logs the harmless stack trace at
+    ERROR — mute the JVM logger first."""
+    spark.sparkContext.setLogLevel("OFF")
+    spark.stop()
+
+
+def _crawl_once(spark, corpus: str, cfg_kwargs: dict) -> tuple[dict, object]:
+    """One default crawl of a bench corpus from its seeds in seq order:
+    (frontier size, wall, URLs/s) and the finished engine."""
+    import pyarrow.parquet as pq
+
+    from spacetime_crawler4_spark.crawl.engine import CrawlEngine
+    from spacetime_crawler4_spark.crawl.schema import CrawlConfig
+    from spacetime_crawler4_spark.sources.benchgen import BENCH_WHITELIST
+
+    seeds = [
+        r["url"]
+        for r in sorted(
+            pq.read_table(f"{corpus}/seeds.parquet").to_pylist(),
+            key=lambda r: r["seq"],
+        )
+    ]
+    eng = CrawlEngine(
+        spark,
+        f"{corpus}/pages.parquet",
+        f"{corpus}/robots.parquet",
+        seeds,
+        CrawlConfig(whitelist=BENCH_WHITELIST, **cfg_kwargs),
+    )
+    t0 = time.time()
+    n = eng.run().count()
+    wall = time.time() - t0
+    return {
+        "frontier_urls": n,
+        "wall_s": round(wall, 2),
+        "urls_per_sec": round(n / wall, 1),
+    }, eng
 
 
 def _shape_for(target_pages: int) -> dict:
@@ -96,10 +134,13 @@ def _loadavg() -> float:
 
 
 def main() -> None:
+    # the scaling pair is N and 4N cores, 4N capped at the machine's cores
+    lo = 4
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=1_000_000)
-    ap.add_argument("--lo", type=int, default=bench.LO)
-    ap.add_argument("--hi", type=int, default=bench.HI)
+    ap.add_argument("--lo", type=int, default=lo)
+    ap.add_argument("--hi", type=int, default=min(4 * lo, cpus))
     ap.add_argument(
         "--hi-only",
         action="store_true",
@@ -125,9 +166,9 @@ def main() -> None:
             # fingerprint (same LSH plan shape, linear candidate volume).
             # The wave here also exceeds engine.SIMHASH_NUMPY_CAP, so this
             # exercises the banded self-join + distributed election.
-            stats, eng = bench._crawl_once(spark, MEGA_CORPUS, {"simhash_bits": 64})
+            stats, eng = _crawl_once(spark, MEGA_CORPUS, {"simhash_bits": 64})
         finally:
-            bench._stop(spark)
+            _stop(spark)
         stats["waves"] = eng.wave_no
         stats["seen_sketch"] = dict(eng.sketch_stats)
         stats["wave_walls"] = [
