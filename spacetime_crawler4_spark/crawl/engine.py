@@ -45,6 +45,10 @@ Scale design decisions (SURVEY.md §4):
   saturates banded LSH buckets — _simhash_stage_vectorized), else the
   banded join with the distributed election (distributed_election);
   everything else stays distributed
+- every frontier swap goes through ONE point (_set_frontier), whose
+  checkpoint job observes the row count and the ``sim_index`` size; the
+  driver mirrors (seen bloom, near-dup master hashes) are valid while
+  they hold exactly that many keys, and are rebuilt once when stale
 - frontier and domains updates are copy-on-write unions per wave with
   eager localCheckpoint lineage truncation; every wave frame and every
   superseded checkpoint is released at one point, the end of the wave
@@ -57,7 +61,7 @@ from __future__ import annotations
 
 import time
 from contextlib import contextmanager
-from functools import reduce
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -417,14 +421,10 @@ class CrawlEngine:
         self.features_udf = make_crawl_features_udf(
             self.cfg.simhash_bits, with_anchors=self.cfg.links_out is not None
         )
-        self._wave_links: DataFrame | None = None
         self.robots_parse_udf = make_robots_parse_udf(self.cfg.user_agent)
         self.can_fetch_udf = make_can_fetch_udf(self.cfg.user_agent)
         self.metrics: list[dict] = []
         self.wave_no = 0
-        # this wave's rows per state table (frontier upserts, new domains):
-        # the O(delta) payload of the wave's store commit
-        self._delta: dict[str, DataFrame] = {}
         # cross-wave state keeps a bounded, stable partitioning: unioning
         # per-wave deltas would otherwise grow the partition count (and the
         # task count of every downstream join) without bound
@@ -433,10 +433,12 @@ class CrawlEngine:
         self.last_wave: DataFrame | None = None
         self.frontier: DataFrame | None = None
         self.domains: DataFrame | None = None
-        # driver-side master-hash mirror for the vectorized simhash fast
-        # path: row count (None = unknown -> distributed plan) + the
-        # hashes themselves (lazy; bounded by SIMHASH_NUMPY_CAP)
-        self._sim_index_rows: int | None = 0
+        # the frontier's row count and sim_index size, observed when it
+        # was set (_set_frontier, or init_state for a list of seeds)
+        self._frontier_rows: int
+        self._sim_index_rows: int
+        # the sim_index hashes on the driver for the vectorized simhash
+        # pass (lazy; valid only while it holds _sim_index_rows hashes)
         self._sim_hashes = None
         self._wave_n: int | None = None
         # round/doubling counters of the last distributed_election run
@@ -444,8 +446,8 @@ class CrawlEngine:
         self.election_stats: dict[str, int] = {"outer_rounds": 0, "doubling_steps": 0}
         # incremental seen-set bloom: {"blob", "capacity", "covered"} —
         # valid only while covered == _frontier_rows (any path that grows
-        # the frontier without putting its keys in, e.g. streaming seed
-        # appends, fails that check and forces a full rebuild)
+        # the frontier without putting its keys in, e.g. add_seeds, fails
+        # that check and forces a full rebuild)
         self._seen_sketch: dict | None = None
         # build/merge counters (tests + bench introspection)
         self.sketch_stats: dict[str, int] = {"full_builds": 0, "delta_merges": 0}
@@ -456,7 +458,8 @@ class CrawlEngine:
     # ------------------------------------------------------------- state
     def init_state(self, resume: bool = False) -> None:
         spark = self.spark
-        self._seen_sketch = None  # (re)built lazily against the new frontier
+        # both driver mirrors are (re)built lazily against the new frontier
+        self._seen_sketch = self._sim_hashes = None
         if resume and self.store is not None:
             loaded = self.store.load_latest(spark)
             if loaded is not None:
@@ -498,17 +501,19 @@ class CrawlEngine:
                     {**seed, "urlhash": h, "url": url, "seq": S.seed_seq(i),
                      "domain": S.domain_of(url)}
                 )  # fmt: skip
+            # a LocalRelation runs no job to observe; seeds have no simhash
             self.frontier = _local_frame(spark, rows, FRONTIER_SCHEMA)
-            self._frontier_rows = len(rows)
+            self._frontier_rows, self._sim_index_rows = len(rows), 0
         self.domains = _local_frame(spark, [], DOMAINS_SCHEMA)
         self.wave_no = 0
 
     def _set_frontier(self, frontier: DataFrame) -> None:
-        """Make ``frontier`` the engine's frontier as ONE eager checkpoint
-        (the superseded one is freed with the next wave's frames). Its row
-        count and the size of the ``sim_index`` view ride the same job as
-        an Observation; the vectorized simhash pass re-collects its master
-        hashes from the view when it next runs."""
+        """The one frontier transition: ``frontier`` becomes ONE eager
+        checkpoint (the superseded one is freed with the wave's frames)
+        whose job observes its row count and ``sim_index`` size. The
+        near-dup master hashes stay only if they are as many as the view's
+        rows: the view only grows (rows are never re-processed, a master
+        never becomes a near copy), so an equal count is an equal set."""
         obs = Observation()
         if self.frontier is not None:
             self._hold(self.frontier)
@@ -518,16 +523,20 @@ class CrawlEngine:
             F.count(F.when(_sim_master(), 1)).alias("sim"),
         ).localCheckpoint(eager=True)
         self._frontier_rows, self._sim_index_rows = obs.get["rows"], obs.get["sim"]
-        self._sim_hashes = None
+        if self._sim_hashes is not None and len(self._sim_hashes) != self._sim_index_rows:
+            self._sim_hashes = None  # stale: re-collected by the next vectorized pass
 
-    def add_seeds(self, seeds_df: DataFrame, seq_prefix: str) -> None:
+    def add_seeds(self, seeds_df: DataFrame, seq_prefix: str) -> int:
         """Append the seeds of a ``url: string`` DataFrame whose urlhash the
         frontier does not hold yet, numbered under ``seq_prefix``
-        (seeds_frontier_df) — the path a stream of seed batches takes."""
+        (seeds_frontier_df) — the path a stream of seed batches takes.
+        Returns how many rows were added."""
         new = self.seeds_frontier_df(seeds_df, seq_prefix).join(
             self.frontier.select("urlhash"), "urlhash", "left_anti"
         )
+        before = self._frontier_rows
         self._set_frontier(self.frontier.unionByName(new))
+        return self._frontier_rows - before
 
     @property
     def exact_buckets(self) -> DataFrame | None:
@@ -593,6 +602,18 @@ class CrawlEngine:
         )
 
     # ----------------------------------------------------- wave selection
+    @cached_property
+    def _ranks(self) -> DataFrame:
+        """``(domain, _rank)``: priority_table, read (a schema job) once."""
+        if self.cfg.priority_table is None:
+            raise ValueError(
+                "frontier_policy='domain_rank' needs priority_table "
+                "(parquet of domain:string, rank:double)"
+            )
+        return self.spark.read.parquet(self.cfg.priority_table).select(
+            "domain", F.col("rank").cast("double").alias("_rank")
+        )
+
     def _priority_keys(self, p: DataFrame) -> tuple[DataFrame, list]:
         """Frontier priority-queue ordering (CrawlConfig.frontier_policy):
         returns ``p`` (with the rank join applied for domain_rank) and the
@@ -607,15 +628,7 @@ class CrawlEngine:
         elif pol == "deep":
             keys = [F.col("absdepth").desc()]
         elif pol == "domain_rank":
-            if self.cfg.priority_table is None:
-                raise ValueError(
-                    "frontier_policy='domain_rank' needs priority_table "
-                    "(parquet of domain:string, rank:double)"
-                )
-            ranks = self.spark.read.parquet(self.cfg.priority_table).select(
-                "domain", F.col("rank").cast("double").alias("_rank")
-            )
-            p = p.join(F.broadcast(ranks), "domain", "left").withColumn(
+            p = p.join(F.broadcast(self._ranks), "domain", "left").withColumn(
                 "_rank", F.coalesce(F.col("_rank"), F.lit(0.0))
             )
             keys = [F.col("_rank").desc()]
@@ -676,7 +689,7 @@ class CrawlEngine:
         return p
 
     # --------------------------------------------------------- wave body
-    def run_wave(self, wave: DataFrame) -> tuple[DataFrame, dict]:
+    def run_wave(self, wave: DataFrame) -> tuple[dict, DataFrame | None, dict]:
         """Process one wave as ONE classification pipeline.
 
         Every wave row gets a class ``_k`` from one CASE chain carried
@@ -695,10 +708,11 @@ class CrawlEngine:
         would put the whole classification subtree in the plan twice, with
         differently pruned columns, so AQE could not reuse its exchanges.
 
-        Returns (delta, counters): ``delta`` is the eager checkpoint of
-        the wave's rows in their new state plus the wave's inserts
-        (FRONTIER_SCHEMA + ``_ins``), the frontier swap's input and the
-        frontier part of the store commit.
+        Returns (deltas, links, counters): per state table the wave's rows
+        (``frontier``: its rows in their new state plus its inserts, from
+        one eager checkpoint; ``domains``: the new hosts), the input of the
+        frontier swap and the store commit; and the wave's anchor edges
+        (None without CrawlConfig.links_out).
         """
         cfg = self.cfg
         sifted = (
@@ -734,10 +748,10 @@ class CrawlEngine:
             # an EAGER checkpoint never reads a released frame (a lazy one
             # saves nothing: under AQE, localCheckpoint(eager=False) runs
             # the plan's shuffle stages at call time and again when read)
-            self._delta["domains"] = parsed.select(*DOMAINS_SCHEMA.fieldNames())
+            new_domains = parsed.select(*DOMAINS_SCHEMA.fieldNames())
             self._hold(self.domains)  # superseded; freed with the wave's frames
             self.domains = (
-                self.domains.unionByName(self._delta["domains"])
+                self.domains.unionByName(new_domains)
                 .coalesce(self._nparts)
                 .localCheckpoint(eager=True)
             )
@@ -776,10 +790,9 @@ class CrawlEngine:
                 .otherwise(F.col("links")),
             }
             updates = rows.select(*[over.get(c, F.col(c)).alias(c) for c in _FCOLS])
+            links = None
             if cfg.links_out is not None:
-                self._wave_links = self._anchor_edges(
-                    rows.filter((F.col("_k") == "good") & ~dup)
-                )
+                links = self._anchor_edges(rows.filter((F.col("_k") == "good") & ~dup))
             inserts = self._new_urls(
                 self._sitemap_inserts(parsed),
                 self._redirect_children(cls),
@@ -819,9 +832,9 @@ class CrawlEngine:
         counters = {"wave": self.wave_no, "n_wave": self._wave_n}
         counters.update({k: v for k, v in observed.items() if v})
         counters["n_inserts"] = n_inserts
-        self._frontier_rows += n_inserts
         self._advance_seen_sketch(keys)
-        return delta, counters
+        deltas = {"frontier": delta.drop("_ins"), "domains": new_domains}
+        return deltas, links, counters
 
     def _classify(self, wave: DataFrame, sifted) -> DataFrame:
         """The wave's rows with class ``_k`` and their new frontier columns
@@ -856,7 +869,7 @@ class CrawlEngine:
         # retry loopback (workerpipe.py:110-127 as next-wave deferral; the
         # (gen, seq) key keeps FIFO parity — schema.py)
         retry = F.coalesce(
-            has_page & eff.between(500, 511) & (F.col("retries") < cfg.max_retries),
+            has_page & eff.between(500, 511) & (F.col("retries") < S.MAX_RETRIES),
             F.lit(False),
         )
         body_len = F.length(F.col("html"))
@@ -1063,12 +1076,9 @@ class CrawlEngine:
         and no Spark job; the bits set are exactly the sketch's putLong
         bits. When the frontier outgrows the sized capacity the sketch is
         dropped instead — the next wave does one full rebuild at factor x
-        the new size."""
+        the new size. _seen_probe checks coverage against the swap's count."""
         st = self._seen_sketch
-        if st is None or keys is None:
-            return
-        if not keys:
-            st["covered"] = self._frontier_rows  # nothing new; still valid
+        if st is None or not keys:
             return
         if st["covered"] + len(keys) > st["capacity"]:
             self._seen_sketch = None  # outgrew the sizing -> rebuild next wave
@@ -1182,12 +1192,7 @@ class CrawlEngine:
             # quadratic-cliff guard (SIMHASH32_BANDED_MAX): saturated
             # 32-bit band buckets make the self-join candidate set
             # near-quadratic; refuse rather than silently running it
-            idx_n = (
-                self._sim_index_rows
-                if self._sim_index_rows is not None
-                else self.sim_index.count()
-            )
-            total = (self._wave_n or 0) + idx_n
+            total = (self._wave_n or 0) + self._sim_index_rows
             if total > SIMHASH32_BANDED_MAX:
                 raise RuntimeError(
                     f"simhash_bits=32 banded near-dup refused at wave "
@@ -1275,22 +1280,17 @@ class CrawlEngine:
         masters so far, hamming<=5 => dup, else it becomes a master) with
         blocked numpy XOR+popcount — identical output to the banded plan,
         measured ~10x on saturated waves. The master-hash array is carried
-        across waves on the driver (O(masters) — bounded by the cap).
+        across waves on the driver (O(masters) — bounded by the cap); the
+        swap keeps it only if its length equals the new ``sim_index`` size.
 
         Returns the TOO_SIMILAR urlhash DF, or None to fall back to the
-        fully distributed banded plan (mega waves / huge index); the
-        fallback permanently disables this path for the run (the index
-        can then contain masters the driver copy never saw).
+        fully distributed banded plan (mega waves / huge index), which
+        leaves the array short: the next vectorized wave re-collects it.
         """
         import numpy as np
 
         cap = SIMHASH_NUMPY_CAP
-        if self._sim_index_rows is None or self._sim_index_rows > cap:
-            return None
-        if self._wave_n is None or self._wave_n > cap:
-            # mega wave: banded plan will add masters the driver copy
-            # never sees — disable the fast path for the rest of the run
-            self._sim_index_rows = None
+        if self._sim_index_rows > cap or self._wave_n is None or self._wave_n > cap:
             return None
         # plain collect, NOT limit().collect(): CollectLimit schedules scan
         # partitions incrementally; the wave bound above already caps
@@ -1299,7 +1299,8 @@ class CrawlEngine:
         if self._sim_hashes is None and self._sim_index_rows == 0:
             self._sim_hashes = np.empty(0, dtype=np.uint64)
         elif self._sim_hashes is None:
-            # first vectorized wave after a resume: one bounded collect
+            # first vectorized wave after a resume or a banded wave: one
+            # bounded collect
             self._sim_hashes = np.array(
                 [r["smhash"] for r in self.sim_index.select("smhash").collect()],
                 dtype=np.int64,
@@ -1343,7 +1344,6 @@ class CrawlEngine:
                 masters[m] = h
                 m += 1
         self._sim_hashes = masters[:m]
-        self._sim_index_rows = m
         return _local_frame(self.spark, [(u,) for u in sorted(dups)], "urlhash string")
 
     # ----------------------------------------------------------- the loop
@@ -1378,34 +1378,30 @@ class CrawlEngine:
                 self.last_wave = wave
                 self._wave_n = n
                 _t1 = time.time()
-                delta, counters = self.run_wave(wave)
+                deltas, links, counters = self.run_wave(wave)
                 with self._phase("materialize"):
+                    # the wave's rows and inserts (disjoint urlhashes)
+                    # replace their old versions
                     untouched = self.frontier.join(
                         wave.select("urlhash"), "urlhash", "left_anti"
                     )
-                    self._hold(self.frontier)  # superseded by the checkpoint below
-                    self.frontier = (
-                        untouched.unionByName(delta.drop("_ins"))
-                        .repartition(self._nparts, "urlhash")
-                        .localCheckpoint(eager=True)
+                    self._set_frontier(
+                        untouched.unionByName(deltas["frontier"]).repartition(
+                            self._nparts, "urlhash"
+                        )
                     )
                 _t2 = time.time()
                 with self._phase("post"):
                     # per-wave parquet appends: the staging-table shape
-                    if cfg.links_out is not None and self._wave_links is not None:
-                        self._wave_links.write.mode("append").parquet(cfg.links_out)
-                        self._wave_links = None
+                    if links is not None:
+                        links.write.mode("append").parquet(cfg.links_out)
                 counters["wall_select_s"] = round(_t1 - _t0, 2)
                 counters["wall_run_s"] = round(_t2 - _t1, 2)
                 counters["wall_post_s"] = round(time.time() - _t2, 2)
                 self.metrics.append(counters)
                 if self.store is not None:
                     with self._phase("commit"):
-                        # the rows this wave touched: updated wave rows +
-                        # inserts (disjoint urlhash sets within one wave)
-                        # upsert the frontier
-                        self._delta["frontier"] = delta.drop("_ins")
-                        self._commit_state()
+                        self._commit_state(deltas)
                 self._release_frames()
                 self.wave_no += 1
         return self.frontier
@@ -1465,11 +1461,11 @@ class CrawlEngine:
             _release(df)
         self._frames = []
 
-    def _commit_state(self) -> None:
-        """Commit this wave: a delta commit of the wave's rows per state
-        table (O(touched rows)) normally; a full base snapshot of every
-        state table for the first commit and every ``store.compact_every``
-        deltas (compaction — Iceberg MOR rewrite)."""
+    def _commit_state(self, deltas: dict[str, DataFrame]) -> None:
+        """Commit this wave: a delta commit of its rows per state table
+        (``deltas``, O(touched rows)) normally; a full base snapshot of
+        every state table for the first commit and every
+        ``store.compact_every`` deltas (compaction — Iceberg MOR rewrite)."""
         store = self.store
         if (
             store.latest_wave() is None
@@ -1478,5 +1474,4 @@ class CrawlEngine:
             tables = {name: getattr(self, name) for name in TABLES}
             store.commit(self.wave_no, tables, self.metrics)
         else:
-            deltas = {name: self._delta[name] for name in TABLES}
             store.commit_delta(self.wave_no, deltas, self.metrics)

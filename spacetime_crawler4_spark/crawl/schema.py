@@ -159,7 +159,6 @@ class CrawlConfig:
     # "domain_rank"; unranked domains default to rank 0.0. Broadcast into
     # the selection join — host counts are bounded (~10^7 at 10^10 URLs).
     priority_table: str | None = None
-    max_retries: int = MAX_RETRIES
     max_waves: int = 64
     # near-dup fingerprint width: 32 = reference parity (helpers/simhash.py
     # mod-2^32 crc64 lanes; saturates beyond ~10^5 docs — BASELINE.md); 64

@@ -191,7 +191,7 @@ class SeqCrawler:
             if not in_slot_retry:
                 nurl.retries = attempts
                 return row, eff
-            if attempts >= self.cfg.max_retries or eff not in range(500, 512):
+            if attempts >= S.MAX_RETRIES or eff not in range(500, 512):
                 return row, eff
             attempts += 1
 
@@ -223,7 +223,7 @@ class SeqCrawler:
             not in_slot_retry
             and row is not None
             and eff in range(500, 512)
-            and nurl.retries < self.cfg.max_retries
+            and nurl.retries < S.MAX_RETRIES
         ):
             nurl.retries += 1
             return False  # defer to next wave

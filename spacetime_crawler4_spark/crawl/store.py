@@ -25,8 +25,9 @@ near-dup master indexes are views over the frontier (each row carries its
 
 Read path (``load_latest``) is merge-on-read, exactly Iceberg's MOR
 equality-delete semantics: frontier = base ∪ deltas with the LATEST
-version of each urlhash winning (window over the commit sequence);
-append-only tables are plain unions. On a real cluster every commit maps
+version of each urlhash winning (window over the commit wave in each
+file's path); append-only tables are plain unions. Each table is one
+typed scan over the whole chain (no schema-inference job per folder). On a real cluster every commit maps
 1:1 to ``MERGE INTO frontier`` (delta) / table rewrite (compaction) on
 Iceberg tables.
 
@@ -47,6 +48,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from spacetime_crawler4_spark.crawl.schema import DOMAINS_SCHEMA, FRONTIER_SCHEMA
 
 TABLES = ("frontier", "domains")
 # append-only tables: deltas are unions, no upsert key needed
@@ -236,30 +239,29 @@ class SnapshotStore:
     def _load_chain(
         self, spark: SparkSession, chain: list[str], wave: int
     ) -> tuple[int, dict[str, DataFrame], list[dict]]:
-        def _read(name: str) -> DataFrame:
-            parts = []
-            for seq, d in enumerate(chain):
-                parts.append(
-                    spark.read.parquet(os.path.join(self.root, d, name)).withColumn(
-                        "_cseq", F.lit(seq)
-                    )
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+        def _read(name: str, schema) -> DataFrame:
+            """One typed scan of the table's files along the whole chain:
+            no schema-inference job per commit folder."""
+            return spark.read.schema(schema).parquet(
+                *[os.path.join(self.root, d, name) for d in chain]
+            )
 
         tables: dict[str, DataFrame] = {}
-        # frontier: merge-on-read — latest commit's version of each urlhash
-        fr = _read("frontier")
-        w = Window.partitionBy("urlhash").orderBy(F.desc("_cseq"))
+        # frontier: merge-on-read — latest commit's version of each urlhash;
+        # a file's commit wave is in its path, <dir>-NNNNN/<table>/<part>,
+        # and the chain's waves increase from its base on
+        cwave = F.regexp_extract(
+            F.col("_metadata.file_path"), r"(?:snap|delta)-(\d+)/[^/]+/[^/]+$", 1
+        ).cast("int")
+        w = Window.partitionBy("urlhash").orderBy(F.desc("_cwave"))
         tables["frontier"] = (
-            fr.withColumn("_rn", F.row_number().over(w))
+            _read("frontier", FRONTIER_SCHEMA)
+            .withColumn("_cwave", cwave)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn", "_cseq")
+            .drop("_rn", "_cwave")
         )
-        for name in APPEND_TABLES:
-            tables[name] = _read(name).drop("_cseq")
+        tables["domains"] = _read("domains", DOMAINS_SCHEMA)  # append-only
         with open(os.path.join(self.root, chain[-1], "metrics.json")) as f:
             metrics = json.load(f)
         return wave, tables, metrics

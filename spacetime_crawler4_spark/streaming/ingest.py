@@ -162,12 +162,17 @@ def incremental_crawl_query(
                 spark, pages_path, robots_path, seeds_df, config, state_dir=state_dir
             )
             eng.init_state(resume=True)
+            added = None  # a fresh store's frontier is this batch's seeds
             if eng.store.latest_wave() is not None:
-                eng.add_seeds(seeds_df, seq_prefix=f"b{batch_id:07d}.")
+                added = eng.add_seeds(seeds_df, seq_prefix=f"b{batch_id:07d}.")
             eng.run()
-            eng.store.commit(
-                eng.wave_no, {t: getattr(eng, t) for t in TABLES}, eng.metrics
-            )
+            # a batch that added no seed leaves the store as its waves (if
+            # any) committed it; else one snapshot makes every added seed
+            # durable, pending or not
+            if added != 0:
+                eng.store.commit(
+                    eng.wave_no, {t: getattr(eng, t) for t in TABLES}, eng.metrics
+                )
         finally:
             if eng is not None:
                 eng.close()

@@ -1,22 +1,26 @@
 """Engine state lifetimes and job attribution: per-wave frames are
 released at the end of their wave, so block-manager retention stays flat
 across waves, and close() frees everything; every job of a wave carries
-the wave's tag and its phase, within a fixed job budget; a damaged
-snapshot store fails loudly instead of restarting."""
+the wave's tag and its phase, within a fixed job budget; the driver's
+near-dup mirror follows the frontier's observed counts, so a banded wave
+does not turn the vectorized pass off; a damaged snapshot store fails
+loudly instead of restarting."""
 
 import json
 
 import pytest
 
+from spacetime_crawler4_spark.crawl import engine as E
 from spacetime_crawler4_spark.crawl.engine import CrawlEngine
 from spacetime_crawler4_spark.crawl.schema import CrawlConfig
 from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
 
 WAVES = 4
-# Spark jobs one fixture wave may run (AQE stage and broadcast jobs
-# included), without a store and with its first (full) commit; the
-# earlier branch-union wave plan ran 53 without a store
-WAVE_JOB_BUDGET = {"no_store": 18, "store": 20}
+# Spark jobs fixture waves 0, 1 and 2 may run (AQE stage and broadcast
+# jobs included), without a store and with their commits (wave 0's is the
+# full base, the later ones deltas); the earlier branch-union wave plan
+# ran 53 in wave 0 without a store
+WAVE_JOB_BUDGET = {"no_store": (18, 25, 26), "store": (20, 27, 28)}
 PHASES = {"select", "domains", "classify", "neardup", "materialize", "post", "commit"}
 
 
@@ -83,33 +87,77 @@ def _jobs(spark) -> dict[int, tuple[str | None, set[str]]]:
 def test_wave_job_budget_and_phase_attribution(
     spark, corpus_dir, tmp_path, with_store
 ):
-    """One fixture wave runs at most WAVE_JOB_BUDGET jobs under its tag
-    (the store commit's jobs included), each described by the engine
-    phase that ran it; the caller's job description and tags are restored
-    afterwards."""
+    """Each of the first three fixture waves (one per run()) runs at most
+    its WAVE_JOB_BUDGET jobs under its tag (the store commit's jobs
+    included), each described by the engine phase that ran it; the
+    caller's job description and tags are restored afterwards."""
     sc = spark.sparkContext
     state_dir = str(tmp_path / "state") if with_store else None
     eng = _engine(spark, corpus_dir, state_dir, max_waves=1)
     eng.init_state()
-    seen = set(_jobs(spark))
-    sc.setJobDescription("caller")
-    try:
+    for n, budget in enumerate(WAVE_JOB_BUDGET["store" if with_store else "no_store"]):
+        tag, prefix = f"crawl-wave-{n}", f"wave {n}: "
+        seen = set(_jobs(spark))
+        sc.setJobDescription("caller")
+        try:
+            eng.run()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            assert tag not in sc.getJobTags()
+        finally:
+            sc.setJobDescription(None)
+        wave = {
+            i: desc
+            for i, (desc, tags) in _jobs(spark).items()
+            if i not in seen and tag in tags
+        }
+        assert 0 < len(wave) <= budget, (n, sorted(wave.values()))
+        assert any(d == prefix + "commit" for d in wave.values()) == with_store
+        for desc in wave.values():
+            assert desc is not None and desc.startswith(prefix), desc
+            assert desc.removeprefix(prefix) in PHASES, desc
+    eng.close()
+
+
+def test_banded_wave_keeps_vectorized_pass(spark, corpus_dir, engine_frontier):
+    """The near-dup mirror follows the frontier's observed sim_index size:
+    a banded wave (SIMHASH_NUMPY_CAP=0) adds masters the mirror lacks, so
+    the swap drops it; the next wave, back under the cap, still takes the
+    vectorized scan and re-collects the mirror (two collect jobs in its
+    neardup phase), the wave after keeps it (one), and the crawl ends in
+    the all-vectorized crawl's frontier."""
+    eng = _engine(spark, corpus_dir, max_waves=1)
+    vectorized, took = eng._simhash_stage_vectorized, []
+
+    def spy(cand):
+        dups = vectorized(cand)
+        took.append(dups is not None)
+        return dups
+
+    eng._simhash_stage_vectorized = spy
+
+    def wave() -> tuple[bool, int]:
+        """Run one wave: (it took the vectorized scan, its neardup jobs)."""
+        seen, n = set(_jobs(spark)), eng.wave_no
         eng.run()
-        assert sc.getLocalProperty("spark.job.description") == "caller"
-        assert "crawl-wave-0" not in sc.getJobTags()
-    finally:
-        sc.setJobDescription(None)
-    wave = {
-        i: desc
-        for i, (desc, tags) in _jobs(spark).items()
-        if i not in seen and "crawl-wave-0" in tags
-    }
-    budget = WAVE_JOB_BUDGET["store" if with_store else "no_store"]
-    assert 0 < len(wave) <= budget, sorted(wave.values())
-    assert any(d == "wave 0: commit" for d in wave.values()) == with_store
-    for desc in wave.values():
-        assert desc is not None and desc.startswith("wave 0: "), desc
-        assert desc.removeprefix("wave 0: ") in PHASES, desc
+        neardup = [
+            i
+            for i, (desc, _tags) in _jobs(spark).items()
+            if i not in seen and desc == f"wave {n}: neardup"
+        ]
+        return took[-1], len(neardup)
+
+    assert wave() == (True, 1)  # wave 0: an empty mirror, the scan's collect
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(E, "SIMHASH_NUMPY_CAP", 0)
+        assert not wave()[0]
+    assert eng._sim_hashes is None and eng._sim_index_rows > 0
+    assert wave() == (True, 2)
+    assert len(eng._sim_hashes) == eng._sim_index_rows
+    assert wave() == (True, 1)
+    eng.cfg.max_waves = CrawlConfig().max_waves
+    got = {r["urlhash"]: r.asDict() for r in eng.run().collect()}
+    _e, frontier = engine_frontier
+    assert got == {r["urlhash"]: r.asDict() for r in frontier.collect()}
     eng.close()
 
 

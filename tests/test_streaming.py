@@ -73,9 +73,10 @@ def test_windowed_event_counts(spark, drops_dir, tmp_path):
 @pytest.mark.slow
 def test_incremental_crawl_foreachbatch(spark, corpus_dir, tmp_path, engine_frontier):
     """Seeds arriving as a stream reproduce the batch crawl's final
-    frontier (same corpus, same seeds, state in the snapshot store), and
-    every micro-batch frees the frames it made: no persistent RDD made
-    during the query survives it (compared by id)."""
+    frontier (same corpus, same seeds, state in the snapshot store); a
+    batch that adds no seed leaves the store as it was; and every
+    micro-batch frees the frames it made: no persistent RDD made during
+    the query survives it (compared by id)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -84,35 +85,43 @@ def test_incremental_crawl_foreachbatch(spark, corpus_dir, tmp_path, engine_fron
 
     seeds_dir = tmp_path / "seeds"
     seeds_dir.mkdir()
-    # the second batch re-sends the seeds: the resumed engine appends
-    # none of them and the frontier stays the batch crawl's
-    for b in range(2):
-        pq.write_table(
-            pa.table({"url": list(SEED_URLS)}), str(seeds_dir / f"batch{b}.parquet")
-        )
-    seeds_stream = (
-        spark.readStream.schema("url string").option("maxFilesPerTrigger", 1).parquet(str(seeds_dir))
-    )
-    writer = incremental_crawl_query(
-        spark,
-        seeds_stream,
-        f"{corpus_dir}/pages.parquet",
-        f"{corpus_dir}/robots.parquet",
-        state_dir=str(tmp_path / "state"),
-        config=CrawlConfig(whitelist=FIXTURE_WHITELIST),
-        checkpoint_dir=str(tmp_path / "ck3"),
-    )
+    manifest = tmp_path / "state" / "manifest.json"
     jsc = spark.sparkContext._jsc
 
     def persistent() -> set[int]:
         return set(jsc.getPersistentRDDs().keySet())
 
     before = persistent()
-    q = writer.trigger(availableNow=True).start()
-    # returns False on timeout — fail HERE with a clear message instead of
-    # comparing a half-written frontier below (seen once when a co-tenant
-    # bench starved the JVM: TaskMemoryManager page-allocation stalls)
-    assert q.awaitTermination(1800), "streaming crawl did not finish in 30min"
+    committed = []
+    # the second batch re-sends the seeds: the resumed engine appends
+    # none of them, runs no wave and commits nothing, and the frontier
+    # stays the batch crawl's
+    for b in range(2):
+        pq.write_table(
+            pa.table({"url": list(SEED_URLS)}), str(seeds_dir / f"batch{b}.parquet")
+        )
+        seeds_stream = (
+            spark.readStream.schema("url string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(seeds_dir))
+        )
+        writer = incremental_crawl_query(
+            spark,
+            seeds_stream,
+            f"{corpus_dir}/pages.parquet",
+            f"{corpus_dir}/robots.parquet",
+            state_dir=str(tmp_path / "state"),
+            config=CrawlConfig(whitelist=FIXTURE_WHITELIST),
+            checkpoint_dir=str(tmp_path / "ck3"),
+        )
+        q = writer.trigger(availableNow=True).start()
+        # returns False on timeout — fail HERE with a clear message instead
+        # of comparing a half-written frontier below (seen once when a
+        # co-tenant bench starved the JVM: TaskMemoryManager page-allocation
+        # stalls)
+        assert q.awaitTermination(1800), "streaming crawl did not finish in 30min"
+        committed.append(manifest.read_text())
+    assert committed[1] == committed[0], committed
     assert not persistent() - before
 
     from spacetime_crawler4_spark.crawl.store import SnapshotStore
