@@ -110,8 +110,9 @@ _FINISH_OF = {
 # anti-join (SURVEY §2.3 J1 / north rule), keyed on xxhash64(urlhash).
 # None runs the exact anti-join alone — the reference tests compare
 # against; results are identical either way, the bloom only prunes probe
-# rows (measured on the bench corpus: anti_join 51 s vs bloom 35 s). Read
-# at call time.
+# rows. At perfbench sizes it costs: one wave on 4 vCPUs, materialize 9 vs
+# 7 jobs and 0.9 vs 0.4 s of job time (polite), 8 vs 6 and 0.8 vs 0.5 s
+# (wide), and the anti-join still shuffles the frontier. Read at call time.
 SEEN_BLOOM_FPP = 0.01
 # incremental seen-bloom headroom: the filter is sized for this factor x
 # the frontier at build time, then each wave puts in only its inserts on
@@ -175,7 +176,7 @@ def _popcount16_lut():
 
 
 def _local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """Driver-side rows (tuples or dicts) as a JVM-resident frame: Arrow
+    """Driver-side row tuples as a JVM-resident frame: Arrow
     makes them a LocalRelation, so reading it starts no Python worker —
     a frame made from a Python list does, on every scan. An empty one is
     a zero-row range."""
@@ -387,7 +388,7 @@ class CrawlEngine:
         spark: SparkSession,
         pages_path: str,
         robots_path: str,
-        seeds: list[str] | DataFrame,
+        seeds: list[str],
         config: CrawlConfig | None = None,
         state_dir: str | None = None,
         fetcher=None,
@@ -409,11 +410,11 @@ class CrawlEngine:
         self.robots_src = spark.read.parquet(robots_path).select(
             "domain", F.col("status").alias("rstatus"), "body"
         )
-        # seeds: a python list preserves the reference's input-order seq
-        # numbering (parity path); a DataFrame[url] stays distributed end
-        # to end with sorted-url ordering — the path a 10^4+-seed stream
-        # batch takes so no seed list ever materializes on the driver
-        self.seeds = seeds if isinstance(seeds, DataFrame) else list(seeds)
+        # seeds: a list, numbered by input position (the reference's seq
+        # order); a DataFrame of seeds enters through add_seeds instead
+        if isinstance(seeds, DataFrame):
+            raise TypeError("seeds is a list of urls; add a DataFrame with add_seeds")
+        self.seeds = list(seeds)
         self.store = SnapshotStore(state_dir) if state_dir else None
         self.links_meta_udf = make_links_meta_udf(self.cfg.whitelist)
         # fused text-plane UDF at the configured fingerprint width (32 =
@@ -478,32 +479,25 @@ class CrawlEngine:
                 self.domains = tables["domains"]
                 self.metrics = metrics
                 return
-        if isinstance(self.seeds, DataFrame):
-            self._set_frontier(self.seeds_frontier_df(self.seeds))
-        else:
-            seed = {
-                **dict.fromkeys(("parent", "exhash", "smhash")),
-                **dict.fromkeys(("absdepth", "reldepth", "monodepth", "dupdepth"), 0),
-                "status": STATUS.NO_DOWN, "finish": FINISH.OK, "words": {},
-                "links": [], "gen": 0, "retries": 0,
-            }  # fmt: skip
-            rows = []
-            seen_hashes: set[str] = set()
-            for i, url in enumerate(self.seeds):
-                # dedup seeds by urlhash, first wins (the reference nap
-                # dedups on urlhash at add time, so trailing-slash /
-                # http-https twin seeds collapse to one frontier row)
-                h = S.urlhash(url)
-                if h in seen_hashes:
-                    continue
-                seen_hashes.add(h)
-                rows.append(
-                    {**seed, "urlhash": h, "url": url, "seq": S.seed_seq(i),
-                     "domain": S.domain_of(url)}
-                )  # fmt: skip
-            # a LocalRelation runs no job to observe; seeds have no simhash
-            self.frontier = _local_frame(spark, rows, FRONTIER_SCHEMA)
-            self._frontier_rows, self._sim_index_rows = len(rows), 0
+        rows, seen = [], set()
+        for i, url in enumerate(self.seeds):
+            # dedup seeds by urlhash, first wins (the reference nap dedups
+            # on urlhash at add time, so trailing-slash / http-https twin
+            # seeds collapse to one frontier row); seq keeps the input index
+            h = S.urlhash(url)
+            if h not in seen:
+                seen.add(h)
+                rows.append((h, url, S.seed_seq(i), S.domain_of(url)))
+        # an Arrow LocalRelation under a foldable projection runs no job to
+        # observe; seeds have no simhash
+        cols = ("urlhash", "url", "seq", "domain")
+        seeds = _local_frame(
+            spark, rows, StructType([FRONTIER_SCHEMA[c] for c in cols])
+        )
+        self.frontier = seeds.select(
+            *_new_row(**{c: F.col(c) for c in cols}, gen=F.lit(0))
+        )
+        self._frontier_rows, self._sim_index_rows = len(rows), 0
         self.domains = _local_frame(spark, [], DOMAINS_SCHEMA)
         self.wave_no = 0
 
@@ -526,11 +520,14 @@ class CrawlEngine:
         if self._sim_hashes is not None and len(self._sim_hashes) != self._sim_index_rows:
             self._sim_hashes = None  # stale: re-collected by the next vectorized pass
 
-    def add_seeds(self, seeds_df: DataFrame, seq_prefix: str) -> int:
+    def add_seeds(self, seeds_df: DataFrame, seq_prefix: str = "") -> int:
         """Append the seeds of a ``url: string`` DataFrame whose urlhash the
         frontier does not hold yet, numbered under ``seq_prefix``
-        (seeds_frontier_df) — the path a stream of seed batches takes.
-        Returns how many rows were added."""
+        (seeds_frontier_df): the one way a DataFrame of seeds enters, on a
+        fresh engine (``CrawlEngine(..., [])``) or on a resumed one, as each
+        batch of a seed stream does. Returns how many rows were added."""
+        if self.frontier is None:
+            self.init_state()
         new = self.seeds_frontier_df(seeds_df, seq_prefix).join(
             self.frontier.select("urlhash"), "urlhash", "left_anti"
         )
@@ -566,17 +563,18 @@ class CrawlEngine:
     def seeds_frontier_df(
         self, seeds_df: DataFrame, seq_prefix: str = ""
     ) -> DataFrame:
-        """FRONTIER_SCHEMA seed rows from a ``url: string`` DataFrame with
-        NO driver round-trip: Arrow-batched urlhash/domain, urlhash dedup
-        keeping the lexicographically-first spelling (the deterministic
-        stand-in for the reference nap's first-add-wins over a set with no
-        defined order), and seq numbering by sorted-url rank. The global
-        rank is ONE executor-side sort task sized by the seed batch (a
-        global contiguous sequence is inherently a serialization point);
-        nothing ever lands on the driver — the bound VERDICT r3 #8 asked
-        for. A fatter-than-one-executor drop would swap the row_number for
-        a range-partitioned two-pass offset sum; at frontier scale seeds
-        are the small table."""
+        """FRONTIER_SCHEMA seed rows (``_new_row``) from a ``url: string``
+        DataFrame with NO driver round-trip, for add_seeds: Arrow-batched
+        urlhash/domain, urlhash dedup keeping the lexicographically-first
+        spelling (the deterministic stand-in for the reference nap's
+        first-add-wins over a set with no defined order), and seq numbering
+        by sorted-url rank under ``seq_prefix``. The global rank is ONE
+        executor-side sort task sized by the seed batch (a global
+        contiguous sequence is inherently a serialization point); nothing
+        ever lands on the driver — the bound VERDICT r3 #8 asked for. A
+        fatter-than-one-executor drop would swap the row_number for a
+        range-partitioned two-pass offset sum; at frontier scale seeds are
+        the small table."""
         from spacetime_crawler4_spark.crawl.udfs import seed_meta_udf
 
         meta = seeds_df.select("url").distinct().select(

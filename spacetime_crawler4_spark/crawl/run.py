@@ -129,18 +129,7 @@ def main(argv: list[str] | None = None) -> dict:
             return {"error": str(e)}
         frontier = tables["frontier"]
         out = {"wave": wave, "frontier_urls": frontier.count()}
-        if args.report:
-            from spacetime_crawler4_spark.crawl import report as R
-
-            out["totals"] = R.totals(frontier).collect()[0].asDict()
-            out["top_words"] = [
-                (r["word"], r["total"])
-                for r in R.top_words(frontier, 10).collect()
-            ]
-        if args.dump:
-            frontier.orderBy("gen", "seq").drop("words").show(
-                args.dump, truncate=60
-            )
+        _report(args, frontier, out)
         print(json.dumps(out))
         return out
 
@@ -175,15 +164,7 @@ def main(argv: list[str] | None = None) -> dict:
         "wall_s": round(wall, 2),
         "urls_per_sec": round(n / wall, 2) if wall > 0 else None,
     }
-    if args.report:
-        from spacetime_crawler4_spark.crawl import report as R
-
-        out["totals"] = R.totals(frontier).collect()[0].asDict()
-        out["top_words"] = [
-            (r["word"], r["total"]) for r in R.top_words(frontier, 10).collect()
-        ]
-    if args.dump:
-        frontier.orderBy("gen", "seq").drop("words").show(args.dump, truncate=60)
+    _report(args, frontier, out)
     if args.wet_out:
         out["wet"] = export_wet(
             spark,
@@ -195,6 +176,20 @@ def main(argv: list[str] | None = None) -> dict:
         )
     print(json.dumps(out))
     return out
+
+
+def _report(args, frontier, out: dict) -> None:
+    """``--report``: the frontier's totals and top 10 words into ``out``;
+    ``--dump N``: show its first N rows in (gen, seq) order."""
+    if args.report:
+        from spacetime_crawler4_spark.crawl import report as R
+
+        out["totals"] = R.totals(frontier).collect()[0].asDict()
+        out["top_words"] = [
+            (r["word"], r["total"]) for r in R.top_words(frontier, 10).collect()
+        ]
+    if args.dump:
+        frontier.orderBy("gen", "seq").drop("words").show(args.dump, truncate=60)
 
 
 def export_wet(

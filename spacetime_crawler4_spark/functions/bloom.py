@@ -12,8 +12,9 @@ org.apache.spark.util.sketch.BloomFilterImpl.mightContainLong semantics).
 No false negatives by construction, so the downstream exact anti-join
 only has to look at survivors; false positives are killed there.
 
-The 64-bit key is ``xxhash64(canonical url)`` computed JVM-side
-(the "canonicalized + 64-bit-hashed URLs" of BASELINE.json north_star).
+The engine's 64-bit key is ``xxhash64(urlhash)`` computed JVM-side: the
+anti-join key itself (the scheme-less hash of the canonical url), so an
+http/https twin of a seen page probes as seen.
 This is the engine's one seen-set prefilter: a sharded cuckoo filter was
 measured against it and removed (same probe contract, no faster).
 """
@@ -25,8 +26,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType
 
@@ -184,15 +184,3 @@ def might_contain_udf(blob: BloomBlob):
 
     return probe
 
-
-def url_key64(url_col: Column) -> Column:
-    """xxhash64 of the canonicalized URL (JVM built-in).
-
-    NOTE: the crawl engine's seen-set bloom does NOT use this — its exact
-    anti-join key is the scheme-less ``urlhash``, so the bloom is keyed on
-    ``xxhash64(urlhash)`` directly (engine._new_urls / _seen_probe); keying
-    on the url would miss http/https twins of seen pages. This helper
-    remains for URL-keyed sketches where the url itself IS the identity."""
-    from spacetime_crawler4_spark.functions.urls import normalize_url_col
-
-    return F.xxhash64(normalize_url_col(url_col))

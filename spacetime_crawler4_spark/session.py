@@ -35,8 +35,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # runtime bloom filters prune the big side of shuffle joins — the
-        # seen-set anti-join's bloom prefilter (SURVEY.md §2.3 J1)
+        # runtime bloom filters prune the big side of shuffle joins. Not
+        # the seen-set probe: a left_anti join never gets one, and the
+        # engine's candidate side (an aggregate over a union of generators)
+        # gets none even as a left-outer/isNull rewrite; its prefilter is
+        # the engine's own broadcast bloom (engine.SEEN_BLOOM_FPP)
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

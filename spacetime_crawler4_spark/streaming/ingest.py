@@ -136,9 +136,13 @@ def incremental_crawl_query(
 ):
     """Drive the batch crawl engine from a stream of seed-URL batches.
 
-    Each micro-batch resumes the engine from the snapshot store, appends
-    the new seeds to the frontier, runs waves to quiescence and frees the
-    engine's frames (``CrawlEngine.close``) and its seed checkpoint — state
+    Each micro-batch resumes the engine from the snapshot store (an empty
+    store starts an empty frontier), appends the new seeds through
+    ``CrawlEngine.add_seeds`` numbered under ``b<batch_id>.``, runs waves
+    and frees the engine's frames (``CrawlEngine.close``) and its seed
+    checkpoint. Each wave commits the rows it processed; the sink commits
+    only when the run stopped at ``max_waves`` after the batch added seeds,
+    so that no added seed is left pending outside the store. State
     durability and exactly-once-ness come from the store's atomic commits
     (Iceberg snapshot transactions in production), not from Spark's state
     store. ``seeds_stream`` needs a single ``url: string`` column.
@@ -159,17 +163,16 @@ def incremental_crawl_query(
             if seeds_df.isEmpty():
                 return
             eng = CrawlEngine(
-                spark, pages_path, robots_path, seeds_df, config, state_dir=state_dir
+                spark, pages_path, robots_path, [], config, state_dir=state_dir
             )
             eng.init_state(resume=True)
-            added = None  # a fresh store's frontier is this batch's seeds
-            if eng.store.latest_wave() is not None:
-                added = eng.add_seeds(seeds_df, seq_prefix=f"b{batch_id:07d}.")
+            added = eng.add_seeds(seeds_df, f"b{batch_id:07d}.")
+            first = eng.wave_no
             eng.run()
-            # a batch that added no seed leaves the store as its waves (if
-            # any) committed it; else one snapshot makes every added seed
-            # durable, pending or not
-            if added != 0:
+            # a run that stopped because nothing was pending processed every
+            # added seed, and each wave committed its rows; one that hit
+            # max_waves may have left some pending: one snapshot keeps them
+            if added and eng.wave_no - first == eng.cfg.max_waves:
                 eng.store.commit(
                     eng.wave_no, {t: getattr(eng, t) for t in TABLES}, eng.metrics
                 )

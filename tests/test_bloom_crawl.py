@@ -155,6 +155,27 @@ def test_seed_dedup_by_urlhash(spark, tmp_path):
     assert rows[0]["seq"] == "0000000"
 
 
+def test_seed_seq_keeps_input_index(spark, tmp_path):
+    """A collapsed twin leaves a gap in the seed numbering: seq is the
+    seed's input position, as in the sequential oracle, so [a, twin of a,
+    b] numbers b 0000002."""
+    out = str(tmp_path)
+    _write_twin_corpus(out)
+    eng = CrawlEngine(
+        spark,
+        f"{out}/pages.parquet",
+        f"{out}/robots.parquet",
+        [f"http://{_TWIN_HOST}/", f"https://{_TWIN_HOST}/", f"http://{_TWIN_HOST}/p"],
+        CrawlConfig(whitelist=(".t.test",)),
+    )
+    eng.init_state()
+    got = {r["url"]: r["seq"] for r in eng.frontier.collect()}
+    assert got == {
+        f"http://{_TWIN_HOST}/": "0000000",
+        f"http://{_TWIN_HOST}/p": "0000002",
+    }
+
+
 @pytest.mark.slow
 def test_simhash32_quadratic_guard_fires(spark, corpus_dir, monkeypatch):
     """bits=32 + banded fallback above engine.SIMHASH32_BANDED_MAX must

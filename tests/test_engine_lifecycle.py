@@ -12,7 +12,7 @@ import pytest
 
 from spacetime_crawler4_spark.crawl import engine as E
 from spacetime_crawler4_spark.crawl.engine import CrawlEngine
-from spacetime_crawler4_spark.crawl.schema import CrawlConfig
+from spacetime_crawler4_spark.crawl.schema import FRONTIER_SCHEMA, CrawlConfig
 from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
 
 WAVES = 4
@@ -81,6 +81,19 @@ def _jobs(spark) -> dict[int, tuple[str | None, set[str]]]:
             tags.add(t.next())
         out[j.jobId()] = (desc.get() if desc.isDefined() else None, tags)
     return out
+
+
+def test_list_seed_init_state_runs_no_job(spark, corpus_dir):
+    """A list of seeds becomes the frontier as an Arrow LocalRelation under
+    _new_row's foldable projection: init_state runs no Spark job, and the
+    frontier has FRONTIER_SCHEMA's columns and types."""
+    eng = _engine(spark, corpus_dir)
+    seen = set(_jobs(spark))
+    eng.init_state()
+    assert set(_jobs(spark)) == seen
+    assert [(f.name, f.dataType) for f in eng.frontier.schema] == [
+        (f.name, f.dataType) for f in FRONTIER_SCHEMA
+    ]
 
 
 @pytest.mark.parametrize("with_store", [False, True], ids=["no_store", "store"])
