@@ -15,7 +15,7 @@ land in one eager checkpoint without html. Near-dup, link expansion and
 the wave delta (new row states + inserts, a second eager checkpoint) read
 it; the frontier swap and the store commit read the delta. Every Spark job
 of wave n is tagged ``crawl-wave-<n>`` and described ``wave <n>: <phase>``
-(select, domains, classify, neardup, materialize, post, commit).
+(select, domains, classify, neardup, materialize, commit).
 
 Engine state is two tables, both eager checkpoints and both committed:
 - ``frontier`` — one row per urlhash ever discovered; every row carries
@@ -76,14 +76,18 @@ from spacetime_crawler4_spark.crawl.schema import (
     STATUS,
     CrawlConfig,
 )
-from spacetime_crawler4_spark.crawl.store import TABLES, SnapshotStore
+from spacetime_crawler4_spark.crawl.store import COMPACT_EVERY, TABLES, SnapshotStore
 from spacetime_crawler4_spark.crawl.udfs import (
     make_can_fetch_udf,
     make_links_meta_udf,
     make_robots_parse_udf,
 )
 from spacetime_crawler4_spark.functions.exhash import exhash_col
-from spacetime_crawler4_spark.functions.simhash import SIMHASH_BITS, SIMHASH_THRESHOLD
+from spacetime_crawler4_spark.functions.simhash import (
+    POPCOUNT16,
+    SIMHASH_BITS,
+    SIMHASH_THRESHOLD,
+)
 from spacetime_crawler4_spark.operators.textplane import (
     crawl_words_col,
     make_crawl_features_udf,
@@ -158,21 +162,6 @@ def _new_row(**cols) -> list:
         **cols,
     }
     return [row[c].alias(c) for c in _FCOLS]
-
-
-_POPCOUNT16 = None
-
-
-def _popcount16_lut():
-    """65536-entry popcount table for 16-bit halves (vectorized hamming)."""
-    global _POPCOUNT16
-    if _POPCOUNT16 is None:
-        import numpy as np
-
-        _POPCOUNT16 = np.array(
-            [bin(i).count("1") for i in range(1 << 16)], dtype=np.uint8
-        )
-    return _POPCOUNT16
 
 
 def _local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
@@ -419,9 +408,7 @@ class CrawlEngine:
         self.links_meta_udf = make_links_meta_udf(self.cfg.whitelist)
         # fused text-plane UDF at the configured fingerprint width (32 =
         # reference parity; 64 = production plane, BASELINE.md scale notes)
-        self.features_udf = make_crawl_features_udf(
-            self.cfg.simhash_bits, with_anchors=self.cfg.links_out is not None
-        )
+        self.features_udf = make_crawl_features_udf(self.cfg.simhash_bits)
         self.robots_parse_udf = make_robots_parse_udf(self.cfg.user_agent)
         self.can_fetch_udf = make_can_fetch_udf(self.cfg.user_agent)
         self.metrics: list[dict] = []
@@ -687,7 +674,7 @@ class CrawlEngine:
         return p
 
     # --------------------------------------------------------- wave body
-    def run_wave(self, wave: DataFrame) -> tuple[dict, DataFrame | None, dict]:
+    def run_wave(self, wave: DataFrame) -> tuple[dict, dict]:
         """Process one wave as ONE classification pipeline.
 
         Every wave row gets a class ``_k`` from one CASE chain carried
@@ -706,13 +693,11 @@ class CrawlEngine:
         would put the whole classification subtree in the plan twice, with
         differently pruned columns, so AQE could not reuse its exchanges.
 
-        Returns (deltas, links, counters): per state table the wave's rows
+        Returns (deltas, counters): per state table the wave's rows
         (``frontier``: its rows in their new state plus its inserts, from
         one eager checkpoint; ``domains``: the new hosts), the input of the
-        frontier swap and the store commit; and the wave's anchor edges
-        (None without CrawlConfig.links_out).
+        frontier swap and the store commit; and the wave's counters.
         """
-        cfg = self.cfg
         sifted = (
             (F.col("absdepth") > S.MAX_ABSDEPTH)
             | (F.col("reldepth") > S.MAX_RELDEPTH)
@@ -788,9 +773,6 @@ class CrawlEngine:
                 .otherwise(F.col("links")),
             }
             updates = rows.select(*[over.get(c, F.col(c)).alias(c) for c in _FCOLS])
-            links = None
-            if cfg.links_out is not None:
-                links = self._anchor_edges(rows.filter((F.col("_k") == "good") & ~dup))
             inserts = self._new_urls(
                 self._sitemap_inserts(parsed),
                 self._redirect_children(cls),
@@ -801,10 +783,11 @@ class CrawlEngine:
             obs = Observation(f"wave-{self.wave_no}")
             ins = F.col("_ins")
             # the seen sketch's delta keys (_advance_seen_sketch), gathered
-            # on the driver only while a sketch is live to put them into
+            # on the driver whenever the bloom is on (_new_urls above built
+            # or kept the sketch they go into)
             keys = (
                 [F.collect_list(F.when(ins, F.xxhash64("urlhash"))).alias("_keys")]
-                if self._seen_sketch is not None and SEEN_BLOOM_FPP is not None
+                if SEEN_BLOOM_FPP is not None
                 else []
             )
             delta = (
@@ -832,16 +815,14 @@ class CrawlEngine:
         counters["n_inserts"] = n_inserts
         self._advance_seen_sketch(keys)
         deltas = {"frontier": delta.drop("_ins"), "domains": new_domains}
-        return deltas, links, counters
+        return deltas, counters
 
     def _classify(self, wave: DataFrame, sifted) -> DataFrame:
         """The wave's rows with class ``_k`` and their new frontier columns
         (near-dup aside: a ``good`` row is finished OK here and flipped to
         TOO_SIMILAR by the caller), plus the link metadata of pages that
         expand (``_ch``: valid links in order), the redirect target
-        (``_rd``) and, with a links sink, the anchors; eagerly
-        checkpointed, without ``html``."""
-        cfg = self.cfg
+        (``_rd``); eagerly checkpointed, without ``html``."""
         gate = self.domains.select("domain", "rules_body", "disallow_all", "allow_all")
         g = wave.join(gate, "domain", "left").withColumn(
             "_allowed",
@@ -973,17 +954,6 @@ class CrawlEngine:
             ).alias("_ch"),
             F.when(redirects, F.col("_lk")[0]).alias("_rd"),
         ]
-        if cfg.links_out is not None:
-            extra.append(
-                F.when(
-                    k == "good",
-                    F.arrays_zip(
-                        F.col("feat.anchor_dst"),
-                        F.col("feat.anchor_txt"),
-                        F.col("feat.anchor_dom"),
-                    ),
-                ).alias("_anchors")
-            )
         return c.select(
             *[new.get(n, F.col(n)).alias(n) for n in _FCOLS], *extra
         ).localCheckpoint(eager=True)
@@ -1048,24 +1018,6 @@ class CrawlEngine:
             )
         )
 
-    def _anchor_edges(self, ok_rows: DataFrame) -> DataFrame:
-        """Anchor-text link sink (CrawlConfig.links_out): admitted pages'
-        anchor arrays (from the same parse) as one edge row per <a href>;
-        schema == operators/linkgraph.EDGE_SCHEMA + wave."""
-        return ok_rows.select(
-            F.col("url").alias("src_url"),
-            F.col("domain").alias("src_domain"),
-            F.posexplode("_anchors").alias("pos", "z"),
-        ).select(
-            "src_url",
-            "src_domain",
-            "pos",
-            F.col("z.anchor_dst").alias("dst_url"),
-            F.col("z.anchor_dom").alias("dst_domain"),
-            F.col("z.anchor_txt").alias("anchor_text"),
-            F.lit(self.wave_no).alias("wave"),
-        )
-
     # --------------------------------------------- seen-sketch maintenance
     def _advance_seen_sketch(self, keys: list[int] | None) -> None:
         """Keep the incremental seen-bloom valid after a wave lands: put
@@ -1075,9 +1027,9 @@ class CrawlEngine:
         bits. When the frontier outgrows the sized capacity the sketch is
         dropped instead — the next wave does one full rebuild at factor x
         the new size. _seen_probe checks coverage against the swap's count."""
-        st = self._seen_sketch
-        if st is None or not keys:
+        if not keys:
             return
+        st = self._seen_sketch
         if st["covered"] + len(keys) > st["capacity"]:
             self._seen_sketch = None  # outgrew the sizing -> rebuild next wave
             return
@@ -1303,7 +1255,7 @@ class CrawlEngine:
                 [r["smhash"] for r in self.sim_index.select("smhash").collect()],
                 dtype=np.int64,
             ).astype(np.uint64)
-        lut = _popcount16_lut()
+        lut = POPCOUNT16
         thr = SIMHASH_THRESHOLD
         order = sorted(range(len(rows)), key=lambda i: (rows[i]["gen"], rows[i]["seq"]))
         m0 = len(self._sim_hashes)
@@ -1358,7 +1310,7 @@ class CrawlEngine:
                 )
                 # per-wave phase walls (driver-side; ride the metrics JSON):
                 # select = budget windows + cut, run = run_wave + frontier
-                # swap, post = links append (BASELINE.md's Amdahl split)
+                # swap (BASELINE.md's Amdahl split)
                 _t0 = time.time()
                 with self._phase("select"):
                     picked = Observation(f"select-{self.wave_no}")
@@ -1376,7 +1328,7 @@ class CrawlEngine:
                 self.last_wave = wave
                 self._wave_n = n
                 _t1 = time.time()
-                deltas, links, counters = self.run_wave(wave)
+                deltas, counters = self.run_wave(wave)
                 with self._phase("materialize"):
                     # the wave's rows and inserts (disjoint urlhashes)
                     # replace their old versions
@@ -1388,14 +1340,8 @@ class CrawlEngine:
                             self._nparts, "urlhash"
                         )
                     )
-                _t2 = time.time()
-                with self._phase("post"):
-                    # per-wave parquet appends: the staging-table shape
-                    if links is not None:
-                        links.write.mode("append").parquet(cfg.links_out)
                 counters["wall_select_s"] = round(_t1 - _t0, 2)
-                counters["wall_run_s"] = round(_t2 - _t1, 2)
-                counters["wall_post_s"] = round(time.time() - _t2, 2)
+                counters["wall_run_s"] = round(time.time() - _t1, 2)
                 self.metrics.append(counters)
                 if self.store is not None:
                     with self._phase("commit"):
@@ -1434,8 +1380,8 @@ class CrawlEngine:
     @contextmanager
     def _phase(self, name: str):
         """Describe the jobs of one wave phase as ``wave <n>: <name>``
-        (select | domains | classify | neardup | materialize | post |
-        commit); the caller's description is restored afterwards."""
+        (select | domains | classify | neardup | materialize | commit);
+        the caller's description is restored afterwards."""
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
         sc.setJobDescription(f"wave {self.wave_no}: {name}")
@@ -1462,13 +1408,10 @@ class CrawlEngine:
     def _commit_state(self, deltas: dict[str, DataFrame]) -> None:
         """Commit this wave: a delta commit of its rows per state table
         (``deltas``, O(touched rows)) normally; a full base snapshot of
-        every state table for the first commit and every
-        ``store.compact_every`` deltas (compaction — Iceberg MOR rewrite)."""
+        every state table for the first commit and every ``COMPACT_EVERY``
+        deltas (compaction — Iceberg MOR rewrite)."""
         store = self.store
-        if (
-            store.latest_wave() is None
-            or store.delta_count() + 1 > store.compact_every
-        ):
+        if store.latest_wave() is None or store.delta_count() + 1 > COMPACT_EVERY:
             tables = {name: getattr(self, name) for name in TABLES}
             store.commit(self.wave_no, tables, self.metrics)
         else:

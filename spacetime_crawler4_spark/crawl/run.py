@@ -53,12 +53,13 @@ def main(argv: list[str] | None = None) -> dict:
     )
     ap.add_argument(
         "--links-out",
+        dest="links_dir",
         default=None,
         metavar="DIR",
-        help="append the admitted pages' anchor-text edges (src_url, "
-        "src_domain, pos, dst_url, dst_domain, anchor_text, wave) as "
-        "parquet under DIR — the crawl-time anchor index "
-        "(operators/linkgraph consumes this shape)",
+        help="after the crawl, write the admitted pages' anchor-text edges "
+        "(operators/linkgraph.anchor_edges: src_url, src_domain, pos, "
+        "dst_url, dst_domain, anchor_text) as parquet to DIR, replacing "
+        "what is there",
     )
     ap.add_argument(
         "--wet-out",
@@ -138,7 +139,6 @@ def main(argv: list[str] | None = None) -> dict:
         wave_seconds=args.wave_seconds,
         global_budget=args.global_budget,
         max_waves=1 if args.step else args.max_waves,
-        links_out=args.links_out,
         frontier_policy=args.policy,
         priority_table=args.priority_table,
     )
@@ -165,6 +165,8 @@ def main(argv: list[str] | None = None) -> dict:
         "urls_per_sec": round(n / wall, 2) if wall > 0 else None,
     }
     _report(args, frontier, out)
+    if args.links_dir:
+        out["links"] = export_links(spark, frontier, args.pages, args.links_dir)
     if args.wet_out:
         out["wet"] = export_wet(
             spark,
@@ -192,6 +194,36 @@ def _report(args, frontier, out: dict) -> None:
         frontier.orderBy("gen", "seq").drop("words").show(args.dump, truncate=60)
 
 
+def _admitted_pages(spark, frontier, pages_path: str):
+    """The corpus rows of the crawl's admitted pages (status=DOWNLOADED,
+    finish=OK): a semi join of the pages table against the frontier."""
+    from pyspark.sql import functions as F
+
+    from spacetime_crawler4_spark.crawl.schema import FINISH, STATUS
+
+    admitted = frontier.filter(
+        (F.col("status") == STATUS.IS_DOWN) & (F.col("finish") == FINISH.OK)
+    ).select("url")
+    return spark.read.parquet(pages_path).join(admitted, "url", "left_semi")
+
+
+def export_links(spark, frontier, pages_path: str, out_dir: str) -> dict:
+    """Export the anchor-text edges of the crawl's admitted pages
+    (operators/linkgraph.anchor_edges, EDGE_SCHEMA: one row per <a href>)
+    as parquet to ``out_dir``, overwriting it, so a re-run over the same
+    frontier leaves the same rows. The edge count rides the write job."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from spacetime_crawler4_spark.operators.linkgraph import anchor_edges
+
+    obs = Observation("links")
+    anchor_edges(_admitted_pages(spark, frontier, pages_path)).observe(
+        obs, F.count(F.lit(1)).alias("edges")
+    ).write.mode("overwrite").parquet(out_dir)
+    return {"edges": obs.get["edges"]}
+
+
 def export_wet(
     spark,
     frontier,
@@ -212,16 +244,11 @@ def export_wet(
 
     from pyspark.sql import functions as F
 
-    from spacetime_crawler4_spark.crawl.schema import FINISH, STATUS
     from spacetime_crawler4_spark.operators.textplane import parse_page_udf
     from spacetime_crawler4_spark.sources.warc import write_wet_archive
 
-    admitted = frontier.filter(
-        (F.col("status") == STATUS.IS_DOWN) & (F.col("finish") == FINISH.OK)
-    ).select("url")
     pages = (
-        spark.read.parquet(pages_path)
-        .join(admitted, "url", "left_semi")
+        _admitted_pages(spark, frontier, pages_path)
         .select(
             "url",
             parse_page_udf(

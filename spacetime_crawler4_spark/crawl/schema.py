@@ -21,7 +21,7 @@ Status / finish codes mirror the reference exactly
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql.types import (
     ArrayType,
@@ -165,19 +165,3 @@ class CrawlConfig:
     # = production plane (full crc64 lanes, same vote rule, same LSH plan;
     # a 32-bit banded pass is refused above engine.SIMHASH32_BANDED_MAX)
     simhash_bits: int = 32
-    # anchor-text link sink: when set, every wave appends the admitted
-    # pages' anchor edges (src_url, src_domain, pos, dst_url, dst_domain,
-    # anchor_text, wave) as parquet under this path — the crawl-time
-    # anchor index. The anchors ride the SAME fused parse UDF (zero extra
-    # extraction; operators/textplane.ANCHOR_FIELDS); None (default)
-    # keeps the feature struct and the wave plan byte-identical to the
-    # parity configuration.
-    links_out: str | None = None
-
-    def domain_budget(self, crawl_delay: float | None) -> int | None:
-        if self.wave_seconds is None:
-            return None
-        delay = crawl_delay if crawl_delay is not None else self.default_delay
-        if delay <= 0:
-            delay = self.default_delay
-        return max(1, int(self.wave_seconds / delay))

@@ -35,17 +35,17 @@ import pyarrow.parquet as pq
 from spacetime_crawler4_spark.crawl import schema as S
 from spacetime_crawler4_spark.crawl.schema import FINISH, STATUS, CrawlConfig
 from spacetime_crawler4_spark.functions.htmltext import extract_page
-from spacetime_crawler4_spark.functions.simhash import SIMHASH_THRESHOLD, simhash32
+from spacetime_crawler4_spark.functions.simhash import (
+    POPCOUNT16,
+    SIMHASH_THRESHOLD,
+    simhash32,
+)
 from spacetime_crawler4_spark.functions.tokenizer import tokenize, word_count
 from spacetime_crawler4_spark.functions.urls import (
     is_valid_url,
     normalize_url,
     rel_dirdepth,
 )
-
-# 16-bit popcount table for the vectorized simhash master scan (numpy 1.x
-# has no bitwise_count); popcount(x32) = _POP16[lo16] + _POP16[hi16]
-_POP16 = _np.array([bin(i).count("1") for i in range(1 << 16)], dtype=_np.uint8)
 
 
 @dataclass
@@ -290,7 +290,7 @@ class SeqCrawler:
             hit = -1
             if self._sm_n:
                 x = self._smbuf[: self._sm_n] ^ _np.uint32(nurl.smhash)
-                d = _POP16[x & 0xFFFF] + _POP16[x >> _np.uint32(16)]
+                d = POPCOUNT16[x & 0xFFFF] + POPCOUNT16[x >> _np.uint32(16)]
                 hits = _np.flatnonzero(d <= SIMHASH_THRESHOLD)
                 if hits.size:
                     hit = int(hits[0])
@@ -345,6 +345,17 @@ class SeqCrawler:
             nurl.status = STATUS.IN_USE
             self._process(nurl, in_slot_retry=True)
 
+    def _domain_budget(self, crawl_delay: float | None) -> int | None:
+        """Per-wave per-domain budget max(1, wave_seconds / delay): the
+        rule the engine computes as Spark columns in ``_select_wave``."""
+        cfg = self.cfg
+        if cfg.wave_seconds is None:
+            return None
+        delay = crawl_delay if crawl_delay is not None else cfg.default_delay
+        if delay <= 0:
+            delay = cfg.default_delay
+        return max(1, int(cfg.wave_seconds / delay))
+
     def _run_waves(self) -> None:
         processed: set[str] = set()
         for _wave in range(self.cfg.max_waves):
@@ -373,7 +384,7 @@ class SeqCrawler:
             for n in pending:
                 info = self.domains.get(n.domain)
                 delay = info["crawl_delay"] if info else None
-                budget = self.cfg.domain_budget(delay)
+                budget = self._domain_budget(delay)
                 if budget is not None and dom_taken.get(n.domain, 0) >= budget:
                     continue
                 if self.cfg.global_budget is not None and len(taken) >= self.cfg.global_budget:

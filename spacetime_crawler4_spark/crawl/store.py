@@ -52,6 +52,8 @@ from pyspark.sql.window import Window
 from spacetime_crawler4_spark.crawl.schema import DOMAINS_SCHEMA, FRONTIER_SCHEMA
 
 TABLES = ("frontier", "domains")
+# after this many deltas the next commit compacts to a full base
+COMPACT_EVERY = 8
 # append-only tables: deltas are unions, no upsert key needed
 APPEND_TABLES = ("domains",)
 
@@ -66,10 +68,8 @@ def _fsync(path: str) -> None:
 
 
 class SnapshotStore:
-    def __init__(self, root: str, compact_every: int = 8):
+    def __init__(self, root: str):
         self.root = root
-        # after this many deltas the next commit compacts to a full base
-        self.compact_every = compact_every
         os.makedirs(root, exist_ok=True)
 
     # ------------------------------------------------------------ manifest

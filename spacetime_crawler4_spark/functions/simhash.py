@@ -23,6 +23,14 @@ from spacetime_crawler4_spark.functions.crc import crc64, crc64_batch
 
 SIMHASH_BITS = 32
 SIMHASH_THRESHOLD = 5  # reference helpers/simhash.py:3
+# 16-bit popcount table for vectorized hamming distances (numpy 1.x has no
+# bitwise_count): popcount(x32) = POPCOUNT16[lo16] + POPCOUNT16[hi16].
+# Built in numpy: every Python worker that imports functions/ builds it.
+POPCOUNT16 = (
+    np.unpackbits(np.arange(1 << 16, dtype=np.uint16).view(np.uint8))
+    .reshape(-1, 16)
+    .sum(axis=1, dtype=np.uint8)
+)
 
 _BIT_POS = np.arange(SIMHASH_BITS - 1, -1, -1, dtype=np.uint64)  # MSB first
 _POW2 = (np.uint64(1) << _BIT_POS).astype(np.int64)

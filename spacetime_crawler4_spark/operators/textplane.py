@@ -139,19 +139,7 @@ CRAWL_FEATURES_SCHEMA = StructType(
 )
 
 
-# appended to CRAWL_FEATURES_SCHEMA when the anchor-text link sink is on
-# (CrawlConfig.links_out): three PARALLEL arrays per page — normalized
-# target, visible anchor text, target domain — zipped back JVM-side by
-# the engine's edge projection. Arrow list columns, same rationale as
-# word_keys/word_cnts.
-ANCHOR_FIELDS = [
-    StructField("anchor_dst", ArrayType(StringType())),
-    StructField("anchor_txt", ArrayType(StringType())),
-    StructField("anchor_dom", ArrayType(StringType())),
-]
-
-
-def make_crawl_features_udf(simhash_bits: int = 32, with_anchors: bool = False):
+def make_crawl_features_udf(simhash_bits: int = 32):
     """Fused crawl-path UDF factory: parse + tokenize + word-count +
     simhash in ONE Arrow round trip (the split UDFs would ship the words
     map JVM→Python→JVM again just to hash it). Sitemap rows skip
@@ -161,10 +149,6 @@ def make_crawl_features_udf(simhash_bits: int = 32, with_anchors: bool = False):
     ``simhash_bits``: 32 is the reference-parity fingerprint; 64 is the
     production dedup plane (full crc64 lanes — the 32-bit fingerprint
     saturates beyond ~10^5 docs, BASELINE.md scale notes).
-
-    ``with_anchors``: also emit the per-page anchor arrays (ANCHOR_FIELDS)
-    from the SAME parse — the crawl-time anchor index costs no second
-    extraction (operators/linkgraph.anchor_edges is the post-hoc twin).
 
     The word map leaves Python as two parallel arrays (keys, counts) —
     Arrow list columns convert far cheaper than map columns — and is
@@ -178,34 +162,16 @@ def make_crawl_features_udf(simhash_bits: int = 32, with_anchors: bool = False):
     else:
         raise ValueError(f"simhash_bits must be 32 or 64, got {simhash_bits}")
 
-    schema = (
-        StructType(CRAWL_FEATURES_SCHEMA.fields + ANCHOR_FIELDS)
-        if with_anchors
-        else CRAWL_FEATURES_SCHEMA
-    )
-
-    @pandas_udf(schema)
+    @pandas_udf(CRAWL_FEATURES_SCHEMA)
     def features_udf(
         url: pd.Series, html: pd.Series, content_type: pd.Series
     ) -> pd.DataFrame:
-        from spacetime_crawler4_spark.crawl.schema import domain_of
-
-        cols = (
-            "links", "text", "sitemap", "word_keys", "word_cnts",
-            "n_unique", "n_total", "max_count", "smhash",
-        )
-        if with_anchors:
-            cols = cols + ("anchor_dst", "anchor_txt", "anchor_dom")
-        out = {k: [] for k in cols}
+        out = {k: [] for k in CRAWL_FEATURES_SCHEMA.fieldNames()}
         for u, h, ct in zip(url, html, content_type):
             ex = extract_page(u, h or b"", ct or "text/html")
             out["links"].append(ex.links)
             out["text"].append(ex.text)
             out["sitemap"].append(ex.sitemap)
-            if with_anchors:
-                out["anchor_dst"].append([a for a, _ in ex.anchors])
-                out["anchor_txt"].append([t for _, t in ex.anchors])
-                out["anchor_dom"].append([domain_of(a) for a, _ in ex.anchors])
             if ex.sitemap:
                 out["word_keys"].append([])
                 out["word_cnts"].append([])

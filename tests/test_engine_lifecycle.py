@@ -21,7 +21,7 @@ WAVES = 4
 # full base, the later ones deltas); the earlier branch-union wave plan
 # ran 53 in wave 0 without a store
 WAVE_JOB_BUDGET = {"no_store": (18, 25, 26), "store": (20, 27, 28)}
-PHASES = {"select", "domains", "classify", "neardup", "materialize", "post", "commit"}
+PHASES = {"select", "domains", "classify", "neardup", "materialize", "commit"}
 
 
 def _engine(spark, corpus_dir, state_dir=None, **cfg):

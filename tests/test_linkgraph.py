@@ -141,48 +141,31 @@ def test_committed_links_match_fresh_extraction(spark, corpus_dir):
         assert committed[c].to_pylist() == fresh[c].to_pylist(), f"column {c} drifted"
 
 
-@pytest.mark.slow
-def test_engine_links_sink_equals_posthoc_extraction(
-    spark, corpus_dir, tmp_path_factory
+def test_links_export_equals_committed_links(
+    spark, corpus_dir, engine_frontier, tmp_path
 ):
-    """CrawlConfig.links_out: the edges the ENGINE emits from its fused
-    parse (zero extra extraction) must equal operators/linkgraph.anchor_edges
-    run post-hoc over the same admitted pages — row for row, position for
-    position. Also pins the edge contract: admitted pages only (status=2,
-    finish=0), one row per <a href>, dst normalized like frontier links."""
-    from pyspark.sql import functions as F
+    """``--links-out``: the post-crawl export of the fixture crawl's
+    admitted pages (status=2, finish=0) writes exactly the committed
+    links.parquet rows, the same crawl's anchor_edges output, in
+    EDGE_SCHEMA; a second export into the same directory overwrites, so
+    the rows stay the same."""
+    from spacetime_crawler4_spark.crawl.run import export_links
+    from spacetime_crawler4_spark.operators.linkgraph import EDGE_SCHEMA
 
-    from spacetime_crawler4_spark.crawl.engine import CrawlEngine
-    from spacetime_crawler4_spark.crawl.schema import CrawlConfig
-    from spacetime_crawler4_spark.operators.linkgraph import anchor_edges
-    from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
-
-    links_dir = str(tmp_path_factory.mktemp("links") / "edges")
-    eng = CrawlEngine(
-        spark,
-        f"{corpus_dir}/pages.parquet",
-        f"{corpus_dir}/robots.parquet",
-        SEED_URLS,
-        CrawlConfig(whitelist=FIXTURE_WHITELIST, links_out=links_dir),
+    _eng, frontier = engine_frontier
+    out_dir = str(tmp_path / "edges")
+    pages = f"{corpus_dir}/pages.parquet"
+    committed = pq.read_table(_CRAWL_LINKS_PARQUET).sort_by(
+        [("src_url", "ascending"), ("pos", "ascending")]
     )
-    frontier = eng.run()
-
-    got = spark.read.parquet(links_dir)
-    key = ["src_url", "pos", "dst_url", "dst_domain", "src_domain", "anchor_text"]
-    got_rows = [tuple(r) for r in got.select(*key).orderBy(*key).collect()]
-
-    admitted = frontier.filter((F.col("status") == 2) & (F.col("finish") == 0))
-    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet").join(
-        admitted.select("url"), "url", "left_semi"
-    )
-    want = anchor_edges(pages)
-    want_rows = [tuple(r) for r in want.select(*key).orderBy(*key).collect()]
-
-    assert len(got_rows) > 0
-    assert got_rows == want_rows
-    # the per-wave append carried the wave column and >1 wave contributed
-    waves = {r.wave for r in got.select("wave").distinct().collect()}
-    assert len(waves) > 1
+    for _ in range(2):
+        out = export_links(spark, frontier, pages, out_dir)
+        got = spark.read.parquet(out_dir)
+        assert got.schema == EDGE_SCHEMA
+        rows = [tuple(r) for r in got.orderBy("src_url", "pos").collect()]
+        assert out["edges"] == len(rows) == committed.num_rows > 0
+        want = list(zip(*[committed[f.name].to_pylist() for f in EDGE_SCHEMA]))
+        assert rows == want
 
 
 class TestNavLineShare:

@@ -174,7 +174,7 @@ def main() -> None:
         stats["wave_walls"] = [
             {
                 k: m[k]
-                for k in ("n_wave", "wall_select_s", "wall_run_s", "wall_post_s")
+                for k in ("n_wave", "wall_select_s", "wall_run_s")
                 if k in m
             }
             for m in eng.metrics
