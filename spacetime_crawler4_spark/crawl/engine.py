@@ -551,22 +551,19 @@ class CrawlEngine:
         self, seeds_df: DataFrame, seq_prefix: str = ""
     ) -> DataFrame:
         """FRONTIER_SCHEMA seed rows (``_new_row``) from a ``url: string``
-        DataFrame with NO driver round-trip, for add_seeds: Arrow-batched
-        urlhash/domain, urlhash dedup keeping the lexicographically-first
-        spelling (the deterministic stand-in for the reference nap's
-        first-add-wins over a set with no defined order), and seq numbering
-        by sorted-url rank under ``seq_prefix``. The global rank is ONE
-        executor-side sort task sized by the seed batch (a global
-        contiguous sequence is inherently a serialization point); nothing
-        ever lands on the driver — the bound VERDICT r3 #8 asked for. A
-        fatter-than-one-executor drop would swap the row_number for a
-        range-partitioned two-pass offset sum; at frontier scale seeds are
-        the small table."""
-        from spacetime_crawler4_spark.crawl.udfs import seed_meta_udf
-
-        meta = seeds_df.select("url").distinct().select(
-            "url", seed_meta_udf(F.col("url")).alias("m")
-        )
+        DataFrame with NO driver round-trip, for add_seeds: urlhash/domain
+        from the engine's Arrow-batched ``links_meta_udf``, urlhash dedup
+        keeping the lexicographically-first spelling (the deterministic
+        stand-in for the reference nap's first-add-wins over a set with no
+        defined order), and seq numbering by sorted-url rank under
+        ``seq_prefix``. The global rank is ONE executor-side sort task
+        sized by the seed batch (a global contiguous sequence is inherently
+        a serialization point); nothing ever lands on the driver — the
+        bound VERDICT r3 #8 asked for. A fatter-than-one-executor drop
+        would swap the row_number for a range-partitioned two-pass offset
+        sum; at frontier scale seeds are the small table."""
+        ident = self.links_meta_udf(F.array("url"), F.lit(None).cast("string"))[0]
+        meta = seeds_df.select("url").distinct().select("url", ident.alias("m"))
         first = Window.partitionBy("m.urlhash").orderBy("url")
         rank = Window.orderBy("url")
         return (

@@ -8,7 +8,7 @@ A3 longest page, A4 subdomain counts, A5 finish-code tallies, A6 totals.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spacetime_crawler4_spark.crawl.schema import FINISH, STATUS
@@ -22,13 +22,13 @@ DEFAULT_MANUAL_FILTER: tuple[str, ...] = ()
 REFERENCE_MANUAL_FILTER: tuple[str, ...] = ("markellekelly", "ramesh")
 
 
-def _valid_word(manual_filter=DEFAULT_MANUAL_FILTER):
+def _valid_word(word: Column, manual_filter) -> Column:
     """report.py:18-19 ``is_valid_word``: len>=3, has a letter, not in the
     manual noise list — shared by top_words AND longest_page (the reference
     applies it in both aggregates, report.py:50,57)."""
-    cond = (F.length("word") >= 3) & F.col("word").rlike(r"\p{L}")
+    cond = (F.length(word) >= 3) & word.rlike(r"\p{L}")
     if manual_filter:
-        cond = cond & ~F.col("word").isin(*manual_filter)
+        cond = cond & ~word.isin(*manual_filter)
     return cond
 
 
@@ -36,7 +36,7 @@ def top_words(frontier: DataFrame, k: int = 50, manual_filter=DEFAULT_MANUAL_FIL
     """A2+W1 (report.py:56-59,76-78; helpers/common_words.py:4-29)."""
     words = frontier.select(F.explode("words").alias("word", "cnt"))
     return (
-        words.filter(_valid_word(manual_filter))
+        words.filter(_valid_word(F.col("word"), manual_filter))
         .groupBy("word")
         .agg(F.sum("cnt").alias("total"))
         .orderBy(F.desc("total"), F.asc("word"))
@@ -48,17 +48,14 @@ def longest_page(frontier: DataFrame, manual_filter=DEFAULT_MANUAL_FILTER) -> Da
     """A3 (report.py:48-54): argmax page by VALID-word total — the reference
     sums only words passing ``is_valid_word`` (report.py:50), so pages heavy
     in short/numeric tokens must not win here."""
-    def _valid(word):
-        cond = (F.length(word) >= 3) & word.rlike(r"\p{L}")
-        if manual_filter:
-            cond = cond & ~word.isin(*manual_filter)
-        return cond
-
     # row-local (no shuffle): filter the map entries, then fold the counts
     totals = frontier.select(
         "url",
         F.aggregate(
-            F.filter(F.map_entries("words"), lambda e: _valid(e["key"])),
+            F.filter(
+                F.map_entries("words"),
+                lambda e: _valid_word(e["key"], manual_filter),
+            ),
             F.lit(0).cast("long"),
             lambda a, e: a + e["value"],
         ).alias("total_words"),

@@ -194,7 +194,7 @@ def _report(args, frontier, out: dict) -> None:
         frontier.orderBy("gen", "seq").drop("words").show(args.dump, truncate=60)
 
 
-def _admitted_pages(spark, frontier, pages_path: str):
+def admitted_pages(spark, frontier, pages_path: str):
     """The corpus rows of the crawl's admitted pages (status=DOWNLOADED,
     finish=OK): a semi join of the pages table against the frontier."""
     from pyspark.sql import functions as F
@@ -205,6 +205,28 @@ def _admitted_pages(spark, frontier, pages_path: str):
         (F.col("status") == STATUS.IS_DOWN) & (F.col("finish") == FINISH.OK)
     ).select("url")
     return spark.read.parquet(pages_path).join(admitted, "url", "left_semi")
+
+
+def admitted_text(spark, frontier, pages_path: str):
+    """``(url, text)`` of the crawl's admitted pages: the PRODUCTION parse
+    UDF over the corpus html, its canonical newline-joined fragment
+    serialization. Every page is parsed as ``text/html``, so an admitted
+    sitemap page gets its ``<loc>`` lines as text here, where the crawl,
+    which passes the page's ``content_type``, tokenizes none."""
+    from pyspark.sql import functions as F
+
+    from spacetime_crawler4_spark.operators.textplane import parse_page_udf
+
+    return (
+        admitted_pages(spark, frontier, pages_path)
+        .select(
+            "url",
+            parse_page_udf(
+                F.col("url"), F.col("html"), F.lit("text/html")
+            ).alias("p"),
+        )
+        .select("url", F.col("p.text").alias("text"))
+    )
 
 
 def export_links(spark, frontier, pages_path: str, out_dir: str) -> dict:
@@ -218,7 +240,7 @@ def export_links(spark, frontier, pages_path: str, out_dir: str) -> dict:
     from spacetime_crawler4_spark.operators.linkgraph import anchor_edges
 
     obs = Observation("links")
-    anchor_edges(_admitted_pages(spark, frontier, pages_path)).observe(
+    anchor_edges(admitted_pages(spark, frontier, pages_path)).observe(
         obs, F.count(F.lit(1)).alias("edges")
     ).write.mode("overwrite").parquet(out_dir)
     return {"edges": obs.get["edges"]}
@@ -235,28 +257,17 @@ def export_wet(
     """Export the crawl's admitted pages (status=DOWNLOADED, finish=OK)
     as a deterministic WET archive + CDX manifest parquet.
 
-    Text comes from the PRODUCTION parse UDF over the corpus html (the
-    same canonical newline-joined serialization the crawl itself
-    tokenized), so the archive is the crawl's text plane made portable.
+    Text is ``admitted_text``: the PRODUCTION parse UDF over the corpus
+    html, the canonical newline-joined serialization the crawl tokenizes
+    for every html page, so the archive is the crawl's text plane made
+    portable.
     One semi join against the corpus + the writer's own file_id shuffle;
     the manifest lands at ``out_dir/cdx.parquet``."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from spacetime_crawler4_spark.operators.textplane import parse_page_udf
     from spacetime_crawler4_spark.sources.warc import write_wet_archive
 
-    pages = (
-        _admitted_pages(spark, frontier, pages_path)
-        .select(
-            "url",
-            parse_page_udf(
-                F.col("url"), F.col("html"), F.lit("text/html")
-            ).alias("p"),
-        )
-        .select("url", F.col("p.text").alias("text"))
-    )
+    pages = admitted_text(spark, frontier, pages_path)
     manifest = write_wet_archive(pages, out_dir, n_files, compress=compress)
     manifest_path = os.path.join(out_dir, "cdx.parquet")
     # the measured manifest is the write's return frame — persist it once

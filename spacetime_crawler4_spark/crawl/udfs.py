@@ -160,24 +160,3 @@ def make_can_fetch_udf(user_agent: str):
         return pd.Series(out, dtype="bool")
 
     return can_fetch_udf
-
-
-SEED_META_SCHEMA = StructType(
-    [
-        StructField("urlhash", StringType()),
-        StructField("domain", StringType()),
-    ]
-)
-
-
-@pandas_udf(SEED_META_SCHEMA)
-def seed_meta_udf(url: pd.Series) -> pd.DataFrame:
-    """(urlhash, domain) per seed URL — the Arrow-batched identity pair a
-    seeds DataFrame needs to become frontier rows without any driver
-    round-trip (streaming/ingest.py seed batches can be arbitrarily fat)."""
-    return pd.DataFrame(
-        {
-            "urlhash": [urlhash(u) for u in url],
-            "domain": [domain_of(u) for u in url],
-        }
-    )

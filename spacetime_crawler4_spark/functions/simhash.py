@@ -110,10 +110,5 @@ def simhash64(word_counts: dict[str, int]) -> int:
     return packed - (1 << 64) if packed >= (1 << 63) else packed
 
 
-def simhash64_str(word_counts: dict[str, int]) -> str:
-    """64-char '0'/'1' display form, MSB first."""
-    return format(simhash64(word_counts) & 0xFFFFFFFFFFFFFFFF, "064b")
-
-
 def hamming32(h1: int, h2: int) -> int:
     return bin((h1 ^ h2) & 0xFFFFFFFF).count("1")

@@ -36,7 +36,6 @@ from spacetime_crawler4_spark.functions.textnorm import STOPWORDS_SET, is_contra
 _GROUP_CHARS = frozenset("-./_~")
 # two-or-more dots split the token and are discarded (tokenize.py:17-21)
 _MULTIDOT = re.compile(r"\.{2,}")
-_HAS_ALNUM = re.compile(r"\w", re.UNICODE)  # fast pre-check; exact check below
 
 
 def _kept(ch: str) -> bool:

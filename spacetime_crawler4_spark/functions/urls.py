@@ -10,8 +10,9 @@ Parity surfaces (reference file:line):
 - ``child_depths``    crawler2/nurl.py:180-230 — depth recurrences
 
 Python forms run inside pandas UDF batches (link expansion needs stdlib
-``urljoin``/``urlparse`` anyway); JVM column-expression forms are provided
-where the engine filters at scale (scheme/whitelist/extension predicates).
+``urljoin``/``urlparse`` anyway; the JVM ``parse_url`` splits path and
+params differently, see crawl/udfs.py). The JVM column forms are the
+trailing-slash strip and the SURT key.
 """
 
 from __future__ import annotations
@@ -111,31 +112,6 @@ def child_depths(
 
 def normalize_url_col(url: Column) -> Column:
     return F.regexp_replace(url, "/+$", "")
-
-
-def scheme_ok_col(url: Column) -> Column:
-    return F.parse_url(url, F.lit("PROTOCOL")).isin("http", "https")
-
-
-def host_whitelist_col(url: Column, whitelist: tuple[str, ...]) -> Column:
-    host = F.parse_url(url, F.lit("AUTHORITY"))
-    cond = F.lit(False)
-    for suffix in whitelist:
-        cond = cond | host.endswith(suffix)
-    return cond
-
-
-def ext_blacklist_col(url: Column) -> Column:
-    """True when the URL path hits the binary/media extension blacklist."""
-    path = F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit(""))
-    return F.lower(path).rlike(EXT_BLACKLIST_RE)
-
-
-def is_valid_url_col(url: Column, whitelist: tuple[str, ...] | None) -> Column:
-    cond = scheme_ok_col(url) & ~ext_blacklist_col(url)
-    if whitelist is not None:
-        cond = cond & host_whitelist_col(url, whitelist)
-    return cond
 
 
 def surt_col(url: Column) -> Column:

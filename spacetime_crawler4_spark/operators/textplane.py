@@ -203,11 +203,6 @@ def crawl_words_col(feat: Column) -> Column:
     return F.map_from_arrays(feat["word_keys"], feat["word_cnts"])
 
 
-def simhash_str_col(smhash: Column) -> Column:
-    """Reference display form: 32-char '0'/'1' string (simhash.py:26-28)."""
-    return F.lpad(F.bin(smhash), 32, "0")
-
-
 def with_text_plane(
     df: DataFrame,
     url: str = "url",

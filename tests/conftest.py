@@ -84,19 +84,12 @@ def corpus_dir(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def engine_frontier(spark, corpus_dir):
-    """One full engine crawl over the fixture corpus, shared by the parity
-    and report test modules (each engine run costs ~1.5 min)."""
-    from spacetime_crawler4_spark.crawl.engine import CrawlEngine
-    from spacetime_crawler4_spark.crawl.schema import CrawlConfig
-    from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
+    """The fixture crawl (``tools/gen_crawl_state.fixture_engine``) run to
+    quiescence once per session, shared by the parity, report and
+    committed-fixture drift tests."""
+    from tools.gen_crawl_state import fixture_engine
 
-    eng = CrawlEngine(
-        spark,
-        f"{corpus_dir}/pages.parquet",
-        f"{corpus_dir}/robots.parquet",
-        SEED_URLS,
-        CrawlConfig(whitelist=FIXTURE_WHITELIST),
-    )
+    eng = fixture_engine(spark, corpus_dir)
     frontier = eng.run()
     return eng, frontier
 

@@ -8,21 +8,15 @@ import pytest
 from spacetime_crawler4_spark.crawl import engine as E
 from spacetime_crawler4_spark.crawl.engine import CrawlEngine
 from spacetime_crawler4_spark.crawl.schema import CrawlConfig
-from spacetime_crawler4_spark.sources.fixture import FIXTURE_WHITELIST, SEED_URLS
 
 
-@pytest.mark.slow
 def test_bloom_prefilter_is_transparent(
     spark, corpus_dir, engine_frontier, monkeypatch
 ):
+    from tools.gen_crawl_state import fixture_engine
+
     monkeypatch.setattr(E, "SEEN_BLOOM_FPP", 0.03)
-    eng = CrawlEngine(
-        spark,
-        f"{corpus_dir}/pages.parquet",
-        f"{corpus_dir}/robots.parquet",
-        SEED_URLS,
-        CrawlConfig(whitelist=FIXTURE_WHITELIST),
-    )
+    eng = fixture_engine(spark, corpus_dir)
     bloom_state = {r["urlhash"]: r.asDict() for r in eng.run().collect()}
     _e, frontier = engine_frontier
     plain_state = {r["urlhash"]: r.asDict() for r in frontier.collect()}

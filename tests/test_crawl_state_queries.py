@@ -2,10 +2,13 @@
 
 tools/gen_crawl_state.py freezes the deterministic fixture crawl's final
 frontier into resources/crawl_state/frontier.parquet; the registry's
-crawl_state_* queries (driver-checked with DuckDB oracles) read it. This
-test re-runs the crawl and asserts the committed file still equals what
-the engine produces today — if an engine change legitimately moves the
-frontier, regenerate the fixture with the tool and commit both.
+crawl_state_* queries (driver-checked with DuckDB oracles) read it. The
+drift test runs the tool's table builders over the session's fixture
+crawl (the ``engine_frontier`` fixture, built by the tool's
+``fixture_engine``) plus a fresh one-wave crawl, and asserts each
+committed file still equals what the engine produces today — if an
+engine change legitimately moves the frontier, regenerate the fixture
+with the tool and commit both.
 """
 
 import pyarrow.parquet as pq
@@ -18,23 +21,21 @@ from spacetime_crawler4_spark.queries import (
 )
 
 
-def test_committed_state_matches_fresh_crawl(spark, corpus_dir):
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from gen_crawl_state import (
+def test_committed_state_matches_fresh_crawl(spark, corpus_dir, engine_frontier):
+    from tools.gen_crawl_state import (
         PAGETEXT_OUT,
         WAVE1_OUT,
         WORDSTATS_OUT,
         crawl_state_tables,
+        fixture_engine,
         pagetext_table,
         wave1_table,
     )
 
-    fresh, fresh_ws = crawl_state_tables(spark, corpus_dir)
-    fresh_pt = pagetext_table(spark, corpus_dir, fresh)
-    fresh_w1 = wave1_table(spark, corpus_dir)
+    _eng, frontier = engine_frontier
+    fresh, fresh_ws = crawl_state_tables(frontier)
+    fresh_pt = pagetext_table(spark, frontier, f"{corpus_dir}/pages.parquet")
+    fresh_w1 = wave1_table(fixture_engine(spark, corpus_dir, max_waves=1).run())
     for committed, fresh_tbl, label in [
         (pq.read_table(_CRAWL_STATE_PARQUET), fresh, "frontier"),
         (pq.read_table(WORDSTATS_OUT), fresh_ws, "wordstats"),

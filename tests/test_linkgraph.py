@@ -3,7 +3,8 @@
 The committed resources/crawl_state/links.parquet is the production
 ``anchor_edges`` operator's output over the fixture crawl's OK pages
 (tools/gen_crawl_state.py links_table). Like the frontier fixture, it must
-never drift from what the engine + extractor produce today.
+never drift from what the engine + extractor produce today: the drift test
+runs links_table over the session's fixture crawl (``engine_frontier``).
 """
 
 import pyarrow.parquet as pq
@@ -125,15 +126,11 @@ class TestOperators:
         assert "BatchEvalPython" not in plan
 
 
-def test_committed_links_match_fresh_extraction(spark, corpus_dir):
-    import sys
-    from pathlib import Path
+def test_committed_links_match_fresh_extraction(spark, corpus_dir, engine_frontier):
+    from tools.gen_crawl_state import links_table
 
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from gen_crawl_state import crawl_state_table, links_table
-
-    frontier = crawl_state_table(spark, corpus_dir)
-    fresh = links_table(spark, corpus_dir, frontier)
+    _eng, frontier = engine_frontier
+    fresh = links_table(spark, frontier, f"{corpus_dir}/pages.parquet")
     committed = pq.read_table(_CRAWL_LINKS_PARQUET)
     assert committed.column_names == fresh.column_names
     assert committed.num_rows == fresh.num_rows

@@ -85,7 +85,6 @@ def _oracle(corpus_dir, cfg) -> SeqCrawler:
     return c
 
 
-@pytest.mark.slow
 @pytest.mark.parametrize("policy", ["shallow", "deep", "domain_rank"])
 def test_engine_matches_wave_oracle_under_policy(
     spark, corpus_dir, tmp_path, policy

@@ -105,7 +105,6 @@ def test_wave_retry_loopback_elects_y(tmp_path):
     assert st[f"{DOM}/x.html"]["finish"] == FINISH.TOO_SIMILAR
 
 
-@pytest.mark.slow
 def test_engine_matches_wave_oracle_exactly(spark, tmp_path):
     tmp = str(tmp_path)
     seeds = _corpus(tmp)

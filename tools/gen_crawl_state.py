@@ -11,8 +11,13 @@ queries (and their DuckDB oracles) read it, giving the driver's
 correctness harness green rows over REAL crawl-engine output (robots
 gate, depth sift, status/redirect/length filters, dedup verdicts,
 politeness domains) instead of only the local test suite.
-tests/test_crawl_state_queries.py re-crawls and asserts the committed
-file still matches the engine, so the fixture cannot drift.
+Alongside it go the same crawl's wordstats, anchor-text links and page
+text, and the frontier after one wave: five tables from two crawls of
+one ``fixture_engine``. links and pagetext read the admitted pages
+through ``crawl/run.admitted_pages``, the path the CLI exports take.
+tests/test_crawl_state_queries.py and tests/test_linkgraph.py run these
+builders over the test session's fixture crawl and assert the committed
+files still match, so the fixtures cannot drift.
 
 Usage: python tools/gen_crawl_state.py  (rewrites the committed parquet)
 """
@@ -38,21 +43,11 @@ PAGETEXT_OUT = OUT.parent / "pagetext.parquet"
 WAVE1_OUT = OUT.parent / "frontier_wave1.parquet"
 
 
-def crawl_state_tables(spark, corpus_dir: str):
-    """One fixture crawl -> (frontier scalars, wordstats) pyarrow tables.
-
-    frontier: the final frontier's scalar columns (maps/arrays dropped;
-    words/links kept as counts), sorted by (gen, seq) for byte-stable output.
-    wordstats: the same frontier's word bags exploded to one (url, domain,
-    finish, word, cnt) row per distinct token — the committed signal table
-    for content-mining queries (soft-404 boilerplate share) whose DuckDB
-    oracles need word-level access the scalar table drops. Sorted
-    (url, word)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
-
+def fixture_engine(spark, corpus_dir: str, **config):
+    """The fixture crawl's ``CrawlEngine``: ``SEED_URLS`` over the corpus
+    written to ``corpus_dir`` under ``CrawlConfig(whitelist=
+    FIXTURE_WHITELIST, **config)``. The committed tables and the test
+    suite's session crawl both come from it."""
     from spacetime_crawler4_spark.crawl.engine import CrawlEngine
     from spacetime_crawler4_spark.crawl.schema import CrawlConfig
     from spacetime_crawler4_spark.sources.fixture import (
@@ -60,15 +55,33 @@ def crawl_state_tables(spark, corpus_dir: str):
         SEED_URLS,
     )
 
-    eng = CrawlEngine(
+    return CrawlEngine(
         spark,
         f"{corpus_dir}/pages.parquet",
         f"{corpus_dir}/robots.parquet",
         list(SEED_URLS),
-        CrawlConfig(whitelist=FIXTURE_WHITELIST),
+        CrawlConfig(whitelist=FIXTURE_WHITELIST, **config),
     )
-    frontier = eng.run()
-    scalars = _frontier_scalars(frontier)
+
+
+def _arrow(rows):
+    """Collected Rows as a pyarrow table, columns in row order."""
+    import pyarrow as pa
+
+    cols = rows[0].asDict().keys() if rows else []
+    return pa.table({c: [r[c] for r in rows] for c in cols})
+
+
+def crawl_state_tables(frontier):
+    """The final frontier -> (frontier scalars, wordstats) pyarrow tables.
+
+    frontier: the scalar columns (``_frontier_scalars``).
+    wordstats: the same frontier's word bags exploded to one (url, domain,
+    finish, word, cnt) row per distinct token — the committed signal table
+    for content-mining queries (soft-404 boilerplate share) whose DuckDB
+    oracles need word-level access the scalar table drops. Sorted
+    (url, word)."""
+    from pyspark.sql import functions as F
 
     ws_rows = (
         frontier.filter(
@@ -78,19 +91,15 @@ def crawl_state_tables(spark, corpus_dir: str):
         .orderBy("url", "word")
         .collect()
     )
-    ws_cols = ws_rows[0].asDict().keys() if ws_rows else []
-    wordstats = pa.table({c: [r[c] for r in ws_rows] for c in ws_cols})
-    return scalars, wordstats
+    return _frontier_scalars(frontier), _arrow(ws_rows)
 
 
 def _frontier_scalars(frontier):
     """Frontier scalar columns as a pyarrow table, (gen, seq)-sorted for
     byte-stable committed output (maps/arrays reduced to counts)."""
-    import pyarrow as pa
-
     from pyspark.sql import functions as F
 
-    rows = (
+    return _arrow(
         frontier.select(
             "urlhash",
             "url",
@@ -115,105 +124,46 @@ def _frontier_scalars(frontier):
         .orderBy("gen", "seq")
         .collect()
     )
-    cols = rows[0].asDict().keys() if rows else []
-    return pa.table({c: [r[c] for r in rows] for c in cols})
 
 
-def wave1_table(spark, corpus_dir: str):
-    """The frontier AFTER EXACTLY ONE WAVE (max_waves=1) — the committed
-    mid-crawl snapshot. Paired with the final frontier it makes the
-    store's time-travel surface driver-checkable: crawl_snapshot_delta
+def wave1_table(frontier):
+    """The frontier AFTER EXACTLY ONE WAVE (``max_waves=1``) — the
+    committed mid-crawl snapshot. Paired with the final frontier it makes
+    the store's time-travel surface driver-checkable: crawl_snapshot_delta
     diffs the two exactly like an Iceberg incremental read between
     snapshot commits (crawl/store.py commits once per wave)."""
-    from spacetime_crawler4_spark.crawl.engine import CrawlEngine
-    from spacetime_crawler4_spark.crawl.schema import CrawlConfig
-    from spacetime_crawler4_spark.sources.fixture import (
-        FIXTURE_WHITELIST,
-        SEED_URLS,
-    )
-
-    eng = CrawlEngine(
-        spark,
-        f"{corpus_dir}/pages.parquet",
-        f"{corpus_dir}/robots.parquet",
-        list(SEED_URLS),
-        CrawlConfig(whitelist=FIXTURE_WHITELIST, max_waves=1),
-    )
-    return _frontier_scalars(eng.run())
+    return _frontier_scalars(frontier)
 
 
-def crawl_state_table(spark, corpus_dir: str):
-    """Back-compat wrapper: the frontier scalar table only."""
-    return crawl_state_tables(spark, corpus_dir)[0]
-
-
-def links_table(spark, corpus_dir: str, frontier_tbl):
-    """Anchor-text edges of the fixture crawl's OK pages, via the production
-    ``anchor_edges`` operator (operators/linkgraph.py) — so the committed
-    fixture IS the operator's output, not a parallel reimplementation.
-    Sources = frontier rows with status=2 (downloaded) & finish=0 (admitted),
-    joined back to the corpus html. Sorted (src_url, pos) for byte-stable
-    output."""
-    import pyarrow as pa
-
-    from pyspark.sql import functions as F
-
+def links_table(spark, frontier, pages_path: str):
+    """Anchor-text edges of the crawl's admitted pages
+    (``crawl/run.admitted_pages``) via the production ``anchor_edges``
+    operator (operators/linkgraph.py), the rows ``--links-out`` exports —
+    so the committed fixture IS the operator's output, not a parallel
+    reimplementation. Sorted (src_url, pos) for byte-stable output."""
+    from spacetime_crawler4_spark.crawl.run import admitted_pages
     from spacetime_crawler4_spark.operators.linkgraph import anchor_edges
 
-    ok = {
-        u
-        for u, s, f in zip(
-            frontier_tbl["url"].to_pylist(),
-            frontier_tbl["status"].to_pylist(),
-            frontier_tbl["finish"].to_pylist(),
-        )
-        if s == 2 and f == 0
-    }
-    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet").filter(
-        F.col("url").isin(sorted(ok))
+    return _arrow(
+        anchor_edges(admitted_pages(spark, frontier, pages_path))
+        .orderBy("src_url", "pos")
+        .collect()
     )
-    rows = anchor_edges(pages).orderBy("src_url", "pos").collect()
-    cols = rows[0].asDict().keys() if rows else []
-    return pa.table({c: [r[c] for r in rows] for c in cols})
 
 
-def pagetext_table(spark, corpus_dir: str, frontier_tbl):
-    """(url, domain, text) for the fixture crawl's admitted pages via the
-    PRODUCTION parse UDF (operators/textplane.parse_page_udf) — text is
-    the canonical newline-joined fragment serialization, so the committed
+def pagetext_table(spark, frontier, pages_path: str):
+    """(url, domain, text) for the crawl's admitted pages: the
+    ``crawl/run.admitted_text`` projection ``--wet-out`` exports, the
+    canonical newline-joined fragment serialization, so the committed
     fixture carries the exact line granularity the line-dedup operators
     (operators/dedup.line_dedup) consume. Sorted by url for byte-stable
     output."""
     import pyarrow as pa
 
-    from pyspark.sql import functions as F
-
-    from spacetime_crawler4_spark.operators.textplane import parse_page_udf
-
-    ok = {
-        u
-        for u, s, f in zip(
-            frontier_tbl["url"].to_pylist(),
-            frontier_tbl["status"].to_pylist(),
-            frontier_tbl["finish"].to_pylist(),
-        )
-        if s == 2 and f == 0
-    }
-    rows = (
-        spark.read.parquet(f"{corpus_dir}/pages.parquet")
-        .filter(F.col("url").isin(sorted(ok)))
-        .select(
-            "url",
-            parse_page_udf(
-                F.col("url"), F.col("html"), F.lit("text/html")
-            ).alias("p"),
-        )
-        .select("url", F.col("p.text").alias("text"))
-        .orderBy("url")
-        .collect()
-    )
+    from spacetime_crawler4_spark.crawl.run import admitted_text
     from spacetime_crawler4_spark.crawl.schema import domain_of
 
+    rows = admitted_text(spark, frontier, pages_path).orderBy("url").collect()
     return pa.table(
         {
             "url": [r["url"] for r in rows],
@@ -238,10 +188,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory() as td:
         write_corpus(td)
-        tbl, wordstats = crawl_state_tables(spark, td)
-        links = links_table(spark, td, tbl)
-        pagetext = pagetext_table(spark, td, tbl)
-        wave1 = wave1_table(spark, td)
+        pages = f"{td}/pages.parquet"
+        frontier = fixture_engine(spark, td).run()
+        tbl, wordstats = crawl_state_tables(frontier)
+        links = links_table(spark, frontier, pages)
+        pagetext = pagetext_table(spark, frontier, pages)
+        wave1 = wave1_table(fixture_engine(spark, td, max_waves=1).run())
     OUT.parent.mkdir(parents=True, exist_ok=True)
     pq.write_table(tbl, OUT, compression="zstd")
     print(f"wrote {OUT} rows={tbl.num_rows}")
